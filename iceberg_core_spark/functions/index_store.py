@@ -58,14 +58,17 @@ from pyspark.sql import functions as F
 #: entries for an (app, root, kind) are dropped on refresh, and a
 #: key embeds the watermark/generation, so a write through ANY store
 #: object over the same root invalidates it (same single-maintainer
-#: argument as SnapshotSyncedStore._bytes_cache). Keyed on the
-#: SparkContext applicationId, NOT id(session): CPython reuses a
-#: GC'd session's address, which could resurrect a dead frame for an
-#: identical (root, kind, generation, watermark) in a NEW session
-#: (r15 ADVICE). applicationIds are unique per context and only one
-#: context is live per JVM, so entries under any OTHER app id are
-#: provably dead — _read sweeps them on insert, bounding growth
-#: across session restarts.
+#: argument as SnapshotSyncedStore._bytes_cache). Keyed on
+#: (SparkContext applicationId, id(session)). The app id stops a
+#: restarted context from resurrecting a dead frame (r15 ADVICE):
+#: applicationIds are unique per context and only one context is live
+#: per JVM, so entries under any OTHER app id are provably dead — _read
+#: sweeps them on insert, bounding growth across session restarts.
+#: id(session) keeps ``newSession()`` siblings apart: they share the
+#: context but not session-scoped SQL confs (timeZone, caseSensitive),
+#: and a frame is bound to the session that built it. The id cannot be
+#: recycled while its entry lives — the cached frame holds a reference
+#: to its session, so the session is never collected first.
 _READER_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -144,8 +147,9 @@ def _push_batch_keys_multi(
     ONE tagged-union count job and the N under-bound collects into ONE
     tagged-union collect job. Rows ride the shared union as
     ``to_json(struct(*))`` so frames of different schemas coexist;
-    call-site frames are integral/string-typed (asserted), which json
-    round-trips exactly.
+    call-site frames are integral/string-typed, which json round-trips
+    exactly. That is checked, not asserted: a frame with any other
+    column type sends the whole call down the per-frame path below.
 
     Fallback ladder (everything degrades to "no pushdown", never to a
     wrong filter): a non-json-exact column type falls the whole call
@@ -439,9 +443,9 @@ class SnapshotSyncedStore:
 
     def _read(self, kind: str, cols: list[str] | None = None) -> DataFrame:
         """Reader frame for a kind's current generation. The bare
-        ``spark.read.parquet`` is memoized per (kind, generation,
-        watermark) — every fresh call pays a driver file listing plus
-        a footer schema-inference job (~0.1-0.3 s each; a judge reads
+        ``spark.read.parquet`` is memoized per (session, kind,
+        generation, watermark) — every fresh call pays a driver file
+        listing plus a footer schema-inference job (~0.1-0.3 s each; a judge reads
         3-4 kinds, so un-memoized reads were most of a warm judge's
         job count at bench scale, and at production scale re-listing
         a many-snapshot store per micro-batch is driver time the
@@ -449,13 +453,14 @@ class SnapshotSyncedStore:
         ``_bytes_cache``: the store only changes when THIS process
         writes, and every write moves the watermark or generation."""
         meta = self._meta()
-        key = (self.spark.sparkContext.applicationId, self.root, kind,
-               meta.get("generation", 0), meta["synced_snapshot_id"])
+        key = (self.spark.sparkContext.applicationId, id(self.spark),
+               self.root, kind, meta.get("generation", 0),
+               meta["synced_snapshot_id"])
         df = _READER_CACHE.get(key)
         if df is None:
             df = self.spark.read.parquet(self._kind_dir(kind))
             for k in [k for k in _READER_CACHE
-                      if k[:3] == key[:3]  # the kind's stale entries
+                      if k[:4] == key[:4]  # the kind's stale entries
                       or k[0] != key[0]]:  # any dead app's entries
                 del _READER_CACHE[k]
             _READER_CACHE[key] = df

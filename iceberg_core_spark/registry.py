@@ -14,6 +14,13 @@ from pyspark.sql import DataFrame, SparkSession
 QueryFn = Callable[[SparkSession, str], DataFrame]
 Entry = tuple[QueryFn, str | None]
 
+#: The driver round the ``priority`` window in :func:`all_queries` was
+#: built for. Bump it in the same commit that rotates the window: the
+#: row-age audit (``scripts/verify_window.py``) checks the committed
+#: window as of THIS round, so landing the round's CORRECTNESS artifact
+#: before the next rotation cannot turn the audit red.
+WINDOW_ROUND = 16
+
 
 def all_queries() -> dict[str, Entry]:
     from iceberg_core_spark.operators.relational import QUERIES as REL
@@ -102,9 +109,9 @@ def all_queries() -> dict[str, Entry]:
     # forced sets below come from the live `--ages 14` run under that
     # stricter rule.
     priority = [
-        # ROUND-16 WINDOW (the r6-r15 window lists live in git
-        # history). The live `--ages 16 --assume-green-window` audit at
-        # r15 close forces 48 rows; the 2 remaining slots go to the
+        # ROUND-16 WINDOW (= WINDOW_ROUND; the r6-r15 window lists
+        # live in git history). The live `--ages 16
+        # --assume-green-window` audit at r15 close forces 48 rows; the 2 remaining slots go to the
         # r15-touched-but-driver-unverified paths the r15 VERDICT
         # (item 2) names: corpus_bm25 and sim_search_batch (the other
         # two named, admission_index and corpus_fuzzy_admission, are

@@ -39,7 +39,9 @@ Scale design:
 from __future__ import annotations
 
 import errno
+import functools
 import json
+import operator
 import os
 import re
 import shutil
@@ -1190,15 +1192,19 @@ class IceTable:
                       hi: Any = None,
                       ranges: dict[str, tuple[Any, Any]] | None = None,
                       ) -> list[ManifestFile]:
-        """Manifest file pruning. Inline-JSON snapshots prune with a
-        driver-side list pass (tiny, zero job latency). Sidecar-backed
-        snapshots (file count > Manifest.inline_max) prune with a
-        DataFrame PREDICATE over the files parquet — metadata-as-data:
-        only the surviving entries are ever materialized on the driver,
-        so a point query on a 1M-file table parses a handful of entries,
-        not a million. Bounds are normalized (epoch micros/days) to
-        match the sidecar's orderable stat encoding; NULL stats are
-        conservatively kept, mirroring ManifestFile.overlaps*.
+        """Manifest file pruning, on the driver and without a Spark job
+        in either regime. Inline-JSON snapshots prune with a list pass
+        over the entries. Sidecar-backed snapshots (file count >
+        Manifest.inline_max) prune with one streamed pyarrow scan of
+        the files parquet under an Arrow filter
+        (manifest.sidecar_keep_filter) that projects only (path, seq):
+        entry_json is never read and only the surviving stubs are
+        materialized, so a point query on a 1M-file table builds a
+        handful of stubs, not a million entries. Bounds are normalized
+        (epoch micros/days) to match the sidecar's orderable stat
+        encoding; NULL stats, NaN min/max, and bounds Arrow cannot
+        compare with a stat column conservatively keep the file,
+        mirroring ManifestFile.overlaps*.
 
         Stats of a RENAMED column resolve through the same alias chain
         the read path uses: a file written before the rename keeps its
@@ -1242,74 +1248,6 @@ class IceTable:
                     files = [f for f in files if f.overlaps(clo, chi)]
             return files
 
-        from iceberg_core_spark.table.manifest import _norm_stat
-
-        mdf = self.spark.read.parquet(
-            self.manifest.sidecar_path(snap.files_ref)
-        )
-
-        def keep_ge(stat, bound):  # stat is a MAX column: keep if >= lo
-            return stat.isNull() | (stat >= F.lit(_norm_stat(bound)))
-
-        def keep_le(stat, bound):  # stat is a MIN column: keep if <= hi
-            return stat.isNull() | (stat <= F.lit(_norm_stat(bound)))
-
-        def chain_stat(prefix: str, col: str):
-            """coalesce over the alias chain's sidecar stat columns —
-            per file exactly one is non-NULL (its physical name at
-            write time); files predating a stat column are NULL
-            everywhere and are conservatively kept. None when no chain
-            member has a stat column at all (no pruning possible)."""
-            cols = [f"{prefix}_{n}" for n in stat_names(col)
-                    if f"{prefix}_{n}" in mdf.columns]
-            return F.coalesce(*[F.col(c) for c in cols]) if cols else None
-
-        if partition is not None and snap.partition_col:
-            # NULL partition_n = stat unavailable (e.g. unsupported stat
-            # type): conservatively keep; the residual filter corrects
-            same_spec_keep = (
-                F.col("partition_n").isNull()
-                | (F.col("partition_n") == F.lit(_norm_stat(partition)))
-            )
-            if not snap.partition_specs:
-                mdf = mdf.filter(same_spec_keep)
-            else:
-                # spec evolution: only seq ranges written under the
-                # CURRENT column trust partition_n; older-spec files
-                # fall back to the column's min/max stats (or keep)
-                smin = chain_stat("smin", snap.partition_col)
-                smax = chain_stat("smax", snap.partition_col)
-                older_keep = (F.lit(True) if smin is None else
-                              keep_ge(smax, partition)
-                              & keep_le(smin, partition))
-                cur_spec = F.lit(False)
-                lo_seq = 0
-                for e in snap.partition_specs:
-                    if e["col"] == snap.partition_col:
-                        cur_spec = cur_spec | (
-                            (F.col("seq") >= F.lit(lo_seq))
-                            & (F.col("seq") < F.lit(e["until_seq"])))
-                    lo_seq = e["until_seq"]
-                cur_spec = cur_spec | (F.col("seq") >= F.lit(lo_seq))
-                mdf = mdf.filter(
-                    F.when(cur_spec, same_spec_keep).otherwise(older_keep))
-        if snap.key_col:
-            if lo is not None:
-                mdf = mdf.filter(keep_ge(F.col("key_max_n"), lo))
-            if hi is not None:
-                mdf = mdf.filter(keep_le(F.col("key_min_n"), hi))
-        for col, (clo, chi) in ranges.items():
-            smin, smax = chain_stat("smin", col), chain_stat("smax", col)
-            if smin is not None:
-                if clo is not None:
-                    mdf = mdf.filter(keep_ge(smax, clo))
-                if chi is not None:
-                    mdf = mdf.filter(keep_le(smin, chi))
-            if snap.key_col == col:
-                if clo is not None:
-                    mdf = mdf.filter(keep_ge(F.col("key_max_n"), clo))
-                if chi is not None:
-                    mdf = mdf.filter(keep_le(F.col("key_min_n"), chi))
         # survivors ship as (path, seq) stubs — the read path needs file
         # locations and MoR seq scoping, never the stats that pruned
         # them. Documented ceiling: this is the same planning shape
@@ -1319,10 +1257,11 @@ class IceTable:
         # poorly on a huge table should raise driver memory or tighten
         # the predicate — the pruned-out majority never materializes.
         return [
-            ManifestFile(path=r.path, partition=None, key_min=None,
+            ManifestFile(path=p, partition=None, key_min=None,
                          key_max=None, rows=0, bytes=0, content_hash="",
-                         seq=r.seq if r.seq is not None else 0)
-            for r in mdf.select("path", "seq").collect()
+                         seq=s)
+            for p, s in self.manifest.read_sidecar_pruned(
+                snap, partition=partition, lo=lo, hi=hi, ranges=ranges)
         ]
 
     def range_scan(self, ranges: dict[str, tuple[Any, Any]],
@@ -1905,14 +1844,20 @@ class IceTable:
         files = self._pruned_files(snap, partition=partition, lo=lo, hi=hi)
 
         df = self._read_with_deletes(files, snap, snapshot_id)
+        # ONE residual filter over df[...] references: each PySpark
+        # Column call costs several py4j round trips (call-site capture)
+        # and each filter an eager analysis — at a handful of surviving
+        # files, more than the pruning itself
+        conds = []
         if partition is not None and snap.partition_col:
-            df = df.filter(F.col(snap.partition_col) == F.lit(partition))
+            conds.append(df[snap.partition_col] == F.lit(partition))
         if snap.key_col:
             if lo is not None:
-                df = df.filter(F.col(snap.key_col) >= F.lit(lo))
+                conds.append(df[snap.key_col] >= F.lit(lo))
             if hi is not None:
-                df = df.filter(F.col(snap.key_col) <= F.lit(hi))
-        return df
+                conds.append(df[snap.key_col] <= F.lit(hi))
+        return df.filter(functools.reduce(operator.and_, conds)) if conds \
+            else df
 
     def _read_files(self, files: list[ManifestFile],
                     snapshot_id: int | None = None) -> DataFrame:
@@ -1931,9 +1876,9 @@ class IceTable:
         chains = {k: v for k, v in _fold_chains(snap.renames).items()
                   if k in current}
         if not chains:
-            return self.spark.read.schema(schema).parquet(*paths).select(
-                *[F.col(f.name) for f in schema.fields]
-            )
+            # explicit FILE paths: no partition discovery, so the read
+            # already yields exactly ``schema``'s columns, in order
+            return self.spark.read.schema(schema).parquet(*paths)
         read_schema = StructType(list(schema.fields))
         for final, olds in chains.items():
             dt = schema[final].dataType  # renames never change the type

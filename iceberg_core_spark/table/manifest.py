@@ -38,13 +38,17 @@ Metadata-as-data: a snapshot whose file list exceeds
 (``files-<id>.parquet``) instead of inline JSON — one row per file with
 the pruning stats normalized to plainly-orderable types (timestamps →
 epoch micros, dates → epoch days) plus the full entry as a JSON string
-column. Query-time pruning then runs as a Spark DataFrame predicate
-over the sidecar and only the SURVIVING entries are materialized on the
-driver (ice_table._pruned_files) — a 1M-file table never parses 1M JSON
-entries to answer a point query. Small tables keep inline JSON for
-debuggability and zero per-query job latency; the pruning predicate is
-identical either way: ``partition == p AND key_max >= lo AND
-key_min <= hi``.
+column. Query-time pruning then runs on the DRIVER as one streamed
+pyarrow scan of the sidecar under an Arrow filter
+(``sidecar_keep_filter``) that reads only the stat columns it tests plus
+(path, seq), and only the SURVIVING (path, seq) stubs are materialized
+(``Manifest.read_sidecar_pruned``, called by ice_table._pruned_files):
+no Spark job plans a query, entry_json is never read, and a 1M-file
+table never parses 1M JSON entries to answer a point query. Small
+tables keep inline JSON for debuggability; the pruning verdicts are
+identical either way — a file is dropped only when a stat PROVES no
+overlap (``partition != p``, ``key_max < lo``, ``key_min > hi``), so
+NULL stats and NaN min/max keep it.
 """
 
 from __future__ import annotations
@@ -136,6 +140,107 @@ def sidecar_stat_cols(stat_cols: list[str], renames: list[dict]) -> list[str]:
     for c in stat_cols:
         out.extend(chains.get(c, []))
     return list(dict.fromkeys(out))
+
+
+def sidecar_keep_filter(schema, snap: "Snapshot", partition: Any = None,
+                        lo: Any = None, hi: Any = None,
+                        ranges: dict | None = None):
+    """``(filter, columns)``: an Arrow filter over a files sidecar
+    (``schema``) keeping every file a query with these bounds may need,
+    and the sidecar columns it reads — the sidecar twin of the inline
+    ``ManifestFile.overlaps``/``overlaps_col`` pass in
+    ``IceTable._pruned_files``. ``filter`` is None when no conjunct can
+    prune.
+
+    Each conjunct PROVES absence (``key_max < lo``, ``key_min > hi``,
+    ``partition_n != p``) and prunes only where that proof is true:
+    ``coalesce(cond, false)`` keeps NULL stats, and a NaN min/max keeps
+    too because Arrow's ``<``/``>`` against NaN are false — the same
+    verdicts the inline pass reaches (a NaN partition value prunes in
+    both: ``NaN == p`` is false inline). A conjunct Arrow cannot
+    evaluate (all-NULL int64 stat vs a string bound, a string partition
+    vs an int bound, a missing column) is dropped, i.e. keeps every
+    file; the caller's residual row filter corrects the rows. Bounds go
+    through ``_norm_stat`` to match the sidecar's orderable stat
+    encoding, and a renamed column's stat is the coalesce over its
+    alias chain (each file carries it under exactly one then-physical
+    name)."""
+    import functools
+    import operator
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ranges = ranges or {}
+    empty = schema.empty_table()
+    chains = _fold_chains(snap.renames)
+    used: set[str] = set()
+
+    def stat(prefix: str, col: str) -> list[str]:
+        return [f"{prefix}_{n}" for n in [col] + chains.get(col, [])
+                if f"{prefix}_{n}" in schema.names]
+
+    def proves(cols: list[str], op, bound):
+        b = _norm_stat(bound)
+        if not cols or b is None:
+            return None
+        fields = [pc.field(c) for c in cols]
+        try:
+            cond = pc.coalesce(
+                op(fields[0] if len(fields) == 1 else pc.coalesce(*fields),
+                   b), False)
+            empty.filter(cond)  # bind now: a type clash must not raise mid-scan
+        except (pa.ArrowNotImplementedError, pa.ArrowInvalid,
+                pa.ArrowTypeError, OverflowError):
+            return None
+        used.update(cols)
+        return cond
+
+    def outside(smin: list[str], smax: list[str], clo, chi) -> list:
+        return [proves(smax, operator.lt, clo) if clo is not None else None,
+                proves(smin, operator.gt, chi) if chi is not None else None]
+
+    def any_of(conds: list):
+        conds = [c for c in conds if c is not None]
+        return functools.reduce(operator.or_, conds) if conds else None
+
+    key_min, key_max = ["key_min_n"], ["key_max_n"]
+    prunes = []
+    if partition is not None and snap.partition_col:
+        other_part = proves(["partition_n"], operator.ne, partition)
+        if not snap.partition_specs:
+            prunes.append(other_part)
+        else:
+            # spec evolution: only seq ranges written under the CURRENT
+            # column trust partition_n; older-spec files fall back to
+            # the column's min/max stats (or keep). seq NULL reads as 0,
+            # as in the (path, seq) stubs.
+            older = any_of(outside(stat("smin", snap.partition_col),
+                                   stat("smax", snap.partition_col),
+                                   partition, partition))
+            if other_part is not None or older is not None:
+                seq = pc.coalesce(pc.field("seq"), 0)
+                cur_spec, lo_seq = [], 0
+                for e in snap.partition_specs:
+                    if e["col"] == snap.partition_col:
+                        cur_spec.append(
+                            (seq >= lo_seq) & (seq < e["until_seq"]))
+                    lo_seq = e["until_seq"]
+                cur_spec.append(seq >= lo_seq)
+                used.add("seq")
+                no = pc.scalar(False)
+                prunes.append(pc.if_else(
+                    any_of(cur_spec),
+                    no if other_part is None else other_part,
+                    no if older is None else older))
+    if snap.key_col:
+        prunes += outside(key_min, key_max, lo, hi)
+    for col, (clo, chi) in ranges.items():
+        prunes += outside(stat("smin", col), stat("smax", col), clo, chi)
+        if snap.key_col == col:
+            prunes += outside(key_min, key_max, clo, chi)
+    pruned = any_of(prunes)
+    return (None if pruned is None else ~pruned), sorted(used)
 
 
 @dataclass
@@ -425,7 +530,7 @@ class Manifest:
              load_files: bool = True) -> Snapshot:
         """``load_files=False`` skips materializing a sidecar-backed file
         list (``snap.files`` stays empty) — the pruned-query path reads
-        the sidecar with a DataFrame predicate instead."""
+        only the surviving stubs via ``read_sidecar_pruned`` instead."""
         sid = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
         if sid is None:
             raise FileNotFoundError(f"no current snapshot in {self.dir}")
@@ -465,16 +570,31 @@ class Manifest:
     def sidecar_path(self, files_ref: str) -> str:
         return os.path.join(self.dir, files_ref)
 
-    def _sidecar_columns(self, files_ref: str,
-                         columns: list[str]) -> list[list]:
+    def _sidecar_columns(self, files_ref: str, columns: list[str],
+                         prune=None) -> list[list]:
         """Column-projected sidecar read with the seq None->0
-        normalization — the ONE copy of the pattern both read paths
-        share, so a layout/seq-semantics change cannot drift the
-        scan path from the incremental-feed path."""
-        import pyarrow.parquet as pq
+        normalization — the ONE copy of the pattern every read path
+        shares (scan, incremental feed, pruned query), so a
+        layout/seq-semantics change cannot drift one from another.
+        Works on both layouts (the driver's single file, a Spark
+        commit's ``part-*`` directory, whose ``_SUCCESS``/``.crc`` the
+        dataset's default ignore prefixes skip).
 
-        tbl = pq.read_table(self.sidecar_path(files_ref),
-                            columns=columns)
+        ``prune(schema) -> (filter, filter_columns)`` keeps only the
+        rows the Arrow filter passes; only they are ever materialized.
+        The filter runs over the streamed batches, NOT pushed into the
+        Parquet scan: Parquet min/max statistics exclude NaN, and
+        Arrow's row-group pruning takes them as a complete bound, so a
+        pushed-down ``key_max_n < lo`` would drop a row group holding
+        a NaN key_max the filter itself keeps."""
+        import pyarrow.dataset as ds
+
+        src = ds.dataset(self.sidecar_path(files_ref), format="parquet")
+        keep, keep_cols = prune(src.schema) if prune else (None, [])
+        batches = src.scanner(
+            columns=list(dict.fromkeys(columns + keep_cols))).to_reader()
+        tbl = ds.Scanner.from_batches(batches, columns=columns,
+                                      filter=keep).to_table()
         out = [tbl[c].to_pylist() for c in columns]
         if "seq" in columns:
             i = columns.index("seq")
@@ -511,6 +631,21 @@ class Manifest:
         predicates (full scans, incremental feeds): column-projected
         pyarrow read, no JSON parse, no Spark job."""
         paths, seqs = self._sidecar_columns(files_ref, ["path", "seq"])
+        return list(zip(paths, seqs))
+
+    def read_sidecar_pruned(self, snap: Snapshot, partition: Any = None,
+                            lo: Any = None, hi: Any = None,
+                            ranges: dict | None = None,
+                            ) -> list[tuple[str, int]]:
+        """(path, seq) pairs of the sidecar entries that survive
+        ``sidecar_keep_filter`` — one streamed pyarrow scan on the
+        driver: no Spark job, only (path, seq) plus the stat columns
+        the filter tests are read (never entry_json), and only the
+        surviving rows are ever materialized."""
+        paths, seqs = self._sidecar_columns(
+            snap.files_ref, ["path", "seq"],
+            prune=lambda schema: sidecar_keep_filter(
+                schema, snap, partition, lo, hi, ranges))
         return list(zip(paths, seqs))
 
     def _write_files_sidecar(self, fs: list[ManifestFile],

@@ -16,7 +16,10 @@ computes each registered query's latest-driver-row age as of round R
 (default: newest artifact round + 1 — the upcoming window), and fails
 if the current first-50 window would let any row exceed its age bound
 or leave a registered query without a row. Run it after reordering
-the registry, before the round's final commit.
+the registry, before the round's final commit. The registry declares
+the round its window was built for (``registry.WINDOW_ROUND``, bumped
+with every rotation); ``--ages <WINDOW_ROUND>`` is the committed-window
+audit the test suite runs, independent of which artifacts have landed.
 
 ``--ages R --assume-green-window`` additionally pretends every query
 in the CURRENT window got a green row in round R-1 — the what-if

@@ -301,7 +301,8 @@ def test_reader_cache_keys_on_application_id(spark, tmp_path):
     crows, _brows = _seeded_corpora()
     _t, idx = _committed_index(spark, tmp_path, crows, n_commits=1)
     _READER_CACHE.clear()
-    dead = ("app-dead-0000", str(tmp_path / "idx"), "segs", 0, 1)
+    dead = ("app-dead-0000", id(spark), str(tmp_path / "idx"), "segs",
+            0, 1)
     _READER_CACHE[dead] = spark.range(1)  # a prior session's relic
     df1 = idx._read("segs")
     app = spark.sparkContext.applicationId
@@ -312,6 +313,37 @@ def test_reader_cache_keys_on_application_id(spark, tmp_path):
     idx._read("segs")
     assert dict(_READER_CACHE) == before
     assert df1.count() > 0
+
+
+def test_reader_cache_separates_sibling_sessions(spark, tmp_path):
+    """``newSession()`` siblings share the SparkContext (same
+    applicationId) but not session-scoped SQL confs: a sibling with a
+    different ``spark.sql.session.timeZone`` must get a reader frame
+    bound to ITSELF, not the frame the first session cached for the
+    same (root, kind, generation, watermark)."""
+    from iceberg_core_spark.functions.index_store import _READER_CACHE
+
+    crows, _brows = _seeded_corpora()
+    _t, idx = _committed_index(spark, tmp_path, crows, n_commits=1)
+    _READER_CACHE.clear()
+    sib = spark.newSession()
+    sib.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    assert sib.sparkContext.applicationId == \
+        spark.sparkContext.applicationId
+    idx_sib = FuzzyIndex(sib, str(tmp_path / "idx"))
+    df = idx._read("segs")
+    df_sib = idx_sib._read("segs")
+    assert df.sparkSession is spark
+    assert df_sib.sparkSession is sib
+    assert df_sib.sparkSession.conf.get(
+        "spark.sql.session.timeZone") == "Asia/Tokyo"
+    assert len(_READER_CACHE) == 2  # one entry per session
+    # each session still hits its own memo
+    before = dict(_READER_CACHE)
+    idx._read("segs")
+    idx_sib._read("segs")
+    assert dict(_READER_CACHE) == before
+    assert df_sib.count() == df.count() > 0
 
 
 def test_fuzzy_index_rejects_param_mismatch(spark, tmp_path):

@@ -147,18 +147,25 @@ def test_changelog_planning_bounded_100k(big_manifest_table):
 
 def test_pruned_query_survivor_stubs_100k(big_manifest_table):
     """A selective key-range query over the 100k-entry sidecar prunes
-    with a DataFrame predicate; only the ~10 surviving stubs ever
-    materialize on the driver (survivors-only planning)."""
+    with one driver-side Arrow scan (no Spark job); only the ~10
+    surviving stubs ever materialize as Python objects
+    (survivors-only planning)."""
     t, _base = big_manifest_table
     snap = t.manifest.load(load_files=False)
     t0 = time.monotonic()
+    tracemalloc.start()
     survivors = t._pruned_files(snap, lo=500_000, hi=500_099)
+    _cur, peak = tracemalloc.get_traced_memory()
+    tracemalloc.stop()
     elapsed = time.monotonic() - t0
     # keys are i*10..i*10+9 per file: 100 keys span ~10-11 files
     assert 0 < len(survivors) <= 12
     assert elapsed < 60, f"pruning took {elapsed:.0f}s"
     # stubs carry no parsed stats — the entry_json documents stay on disk
     assert all(f.key_min is None and not f.col_stats for f in survivors)
+    # Python-side peak: a handful of stubs, not a 100k-element path
+    # list (~10 MB) and never parsed entry_json documents (~100 MB)
+    assert peak < 2_000_000, f"planning peak {peak} bytes"
 
 
 def test_partitions_df_distributed_100k(big_manifest_table):

@@ -63,17 +63,41 @@ def test_bm25_multi_query_and_tiebreak(spark):
 
 
 def test_bm25_plan_single_pass_shape(spark):
-    """Term frequencies are literal per-term COLUMNS: the only
-    Generate in the plan is the |queries|-wide struct melt (never a
-    token explode), there is no shuffle join (the sole join is the
-    1-row stats broadcast), and the corpus scans exactly twice
-    regardless of the query count (stats + scoring — per-query union
-    legs would scan once per query)."""
+    """Term frequencies are literal per-term COLUMNS: the plan's only
+    Generates are the |queries|-wide struct melt and the one-element
+    ``explode(array(struct(t, ...)))`` CSE barrier over the token
+    array (printed once per reader of the persisted tf frame) — never
+    a token explode. Nothing below the persist shuffles, there is no
+    shuffle join (the sole join is the 1-row stats broadcast), and the
+    corpus scans at most twice regardless of the query count (stats +
+    scoring — per-query union legs would scan once per query)."""
     docs = spark.createDataFrame(
         [(1, "a b c d e f g"), (2, "a x")], "doc_id long, text string")
     plan = bm25_search(docs, [(1, "a b"), (2, "x"), (3, "c d")], k=3) \
         ._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Generate") == 1     # the struct melt only
+    lines = plan.splitlines()
+    gens = [ln.split("Generate ", 1)[1] for ln in lines if "Generate " in ln]
+    melts = [g for g in gens if g.startswith("explode(array(struct(query_id")]
+    wrappers = [g for g in gens if g.startswith("explode(array(struct(t, ")]
+    assert len(melts) == 1                 # the struct melt
+    assert wrappers and len(melts) + len(wrappers) == len(gens)
+    # the barrier explodes a ONE-element array wrapping the token array,
+    # so it emits exactly one row per document
+    assert all(g.count("struct(") == 1 for g in wrappers)
+
+    def depth(ln):
+        return ln.index("+-") if "+-" in ln else -1
+
+    # no Exchange anywhere in a persisted subtree (the map-side barrier
+    # must stay row-local)
+    for i, ln in enumerate(lines):
+        if "InMemoryRelation" not in ln:
+            continue
+        d = depth(ln)
+        for sub in lines[i + 1:]:
+            if depth(sub) <= d:
+                break
+            assert "Exchange" not in sub, sub
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
     assert plan.count("Scan ExistingRDD") <= 2

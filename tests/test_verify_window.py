@@ -304,15 +304,27 @@ def test_registry_window_obeys_twin_pairing():
     never strands a rows-only row whose twin neither sits in the
     window nor vouches from an in-date row of its own (the r16 vouch
     rule lives in audit_ages, so run the full audit read-only — it
-    also re-checks every age bound against the committed artifacts)."""
+    also re-checks every age bound against the committed artifacts).
+
+    The audit round is the one the registry DECLARES its window for
+    (registry.WINDOW_ROUND), not one derived from whichever artifacts
+    sit in the working tree: landing round R's CORRECTNESS artifact
+    before the round-R+1 rotation must not flip this test red. The
+    declared round may trail the newest artifact by at most that one
+    step, so a window that is never rotated still fails here."""
     vw = _vw()
     import glob
     import os
     import re
 
+    from iceberg_core_spark.registry import WINDOW_ROUND
+
     rounds = [int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
               for f in glob.glob(os.path.join(vw.REPO,
                                               "CORRECTNESS_r*.json"))]
+    assert WINDOW_ROUND >= max(rounds), (
+        f"registry window declared for r{WINDOW_ROUND} but r{max(rounds)} "
+        "artifacts exist: rotate the window and bump WINDOW_ROUND")
     # explicit round argument => read-only what-if (no first-seen
     # stamping side effect inside a test run)
-    assert vw.audit_ages(max(rounds) + 1) == 0
+    assert vw.audit_ages(WINDOW_ROUND) == 0
