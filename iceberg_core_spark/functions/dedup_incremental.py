@@ -63,9 +63,7 @@ from iceberg_core_spark.functions.dedup import (
 from iceberg_core_spark.functions.dedup_portable import (
     _JACC_RAW,
     _SIG_CTE_BODY,
-    _band_hash,
-    _minhash_sig,
-    N_BANDS,
+    _band_triples,
     THRESHOLD,
 )
 from iceberg_core_spark.functions.index_store import (
@@ -73,28 +71,6 @@ from iceberg_core_spark.functions.index_store import (
     _push_batch_keys_multi,
 )
 from iceberg_core_spark.session import load_table, spread
-
-
-def _band_triples(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, band_idx, band_hash) triples of the portable MinHash —
-    the only thing the candidate join ever shuffles. The signature map
-    (N_HASHES md5 evaluations per token) is the pipeline's CPU hot
-    spot, so the input is spread() first — a single-file corpus scan
-    would otherwise serialize the whole map on one core (no-op at
-    real scale, where the scan already has >= parallelism splits)."""
-    sigs = spread(df).select(
-        F.col(id_col), shingles(F.col(text_col)).alias("__t")
-    ).select(id_col, *_minhash_sig(F.col("__t")))
-    return sigs.select(
-        F.col(id_col),
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(b).alias("band_idx"),
-                         _band_hash(b).alias("band_hash"))
-                for b in range(N_BANDS)
-            ])
-        ).alias("band"),
-    ).select(id_col, "band.band_idx", "band.band_hash")
 
 
 def _corpus_fp(corpus: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -144,7 +120,7 @@ def _judge(
         F.col(id_col), T.fingerprint(F.col(text_col)).alias("fp")
     )
     # near tier: batch bands x corpus bands only
-    bb = _band_triples(batch, text_col, id_col).withColumnRenamed(
+    bb = _band_triples(spread(batch), text_col, id_col).withColumnRenamed(
         id_col, "__bid")
     if key_pushdown:
         # the localized batch frames also stop the band map (N_HASHES
@@ -214,7 +190,7 @@ def dedup_batch(
     return _judge(
         batch,
         _corpus_fp(corpus, text_col, id_col),
-        _band_triples(corpus, text_col, id_col).withColumnRenamed(
+        _band_triples(spread(corpus), text_col, id_col).withColumnRenamed(
             id_col, "__cid"),
         _corpus_shingles(corpus, text_col, id_col),
         text_col, id_col, threshold,
@@ -265,7 +241,7 @@ class AdmissionIndex(SnapshotSyncedStore):
         return {
             "fp": _corpus_fp(rows, self.text_col, self.id_col),
             "bands": _band_triples(
-                rows, self.text_col, self.id_col
+                spread(rows), self.text_col, self.id_col
             ).withColumnRenamed(self.id_col, "__cid"),
             "shingles": _corpus_shingles(rows, self.text_col,
                                          self.id_col),

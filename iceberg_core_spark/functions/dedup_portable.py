@@ -10,9 +10,14 @@ cross-engine — upgrading the hash-family op from the driver's
 rows-only check to a full hash match.
 
 Scale shape is identical to the production twin: signatures are pure
-Column expressions over the token array (map-side), the one shuffle
-carries skinny (band_idx, band_hash, doc_id) triples, candidates
-dedupe before the exact-Jaccard verify re-joins token arrays by id.
+expressions over the token array (map-side), the one shuffle carries
+skinny (band_idx, band_hash, doc_id) triples, candidates dedupe before
+the exact-Jaccard verify re-joins token arrays by id. The Spark
+signature and band expressions are SQL text (``_sig_spark_sql`` /
+``_band_spark_sql``) written beside the DuckDB template they mirror
+(``_sig_sql`` / ``_band_sql``): one ``selectExpr`` parse per frame
+instead of ~2,000 py4j Column calls, and the two engines' hash
+families read side by side.
 
 Parameters are fixed module constants so the Spark plan and the
 generated oracle SQL are built from the same numbers.
@@ -40,32 +45,60 @@ ROWS_PER_BAND = N_HASHES // N_BANDS
 THRESHOLD = 0.5
 
 
-def _hash_fn(seed: str):
-    """Single-arg lambda factory: F.transform passes (element, index)
-    to TWO-arg lambdas, so the seed must close over a one-arg one."""
-    def f(t):
-        return F.conv(
-            F.substring(F.md5(F.concat(t, F.lit(seed))), 1, 8), 16, 10
-        ).cast("long")
-    return f
+def _sig_spark_sql(i: int) -> str:
+    """One min-hash per seed: min over the shingle array ``__t`` of the
+    first 8 md5 hex chars of (token || seed), as int64 — the Spark SQL
+    twin of :func:`_sig_sql`."""
+    return (
+        "array_min(transform(__t, x -> "
+        f"CAST(conv(substring(md5(concat(x, 's{i}')), 1, 8), 16, 10)"
+        " AS BIGINT)))"
+    )
 
 
-def _minhash_sig(toks) -> list:
-    """One min-hash per seed: min over tokens of the first 8 md5 hex
-    chars of (token || seed), as int64 — the ('0x' || substr(md5(..),
-    1, 8))::BIGINT expression DuckDB evaluates identically."""
-    return [
-        F.array_min(F.transform(toks, _hash_fn(f"s{i}"))).alias(f"sig{i}")
-        for i in range(N_HASHES)
-    ]
-
-
-def _band_hash(b: int):
-    cols = [
-        F.col(f"sig{b * ROWS_PER_BAND + r}").cast("string")
+def _band_spark_sql(b: int) -> str:
+    """md5 over the band's comma-joined signatures — the Spark SQL
+    twin of :func:`_band_sql`."""
+    parts = ", ".join(
+        f"CAST(sig{b * ROWS_PER_BAND + r} AS STRING)"
         for r in range(ROWS_PER_BAND)
-    ]
-    return F.md5(F.concat_ws(",", *cols))
+    )
+    return f"md5(concat_ws(',', {parts}))"
+
+
+def _sig_sql(i: int) -> str:
+    return (
+        "list_aggregate(list_transform(t, x -> "
+        f"('0x' || substr(md5(x || 's{i}'), 1, 8))::BIGINT), 'min')"
+    )
+
+
+def _band_sql(b: int) -> str:
+    parts = " || ',' || ".join(
+        f"CAST(sig{b * ROWS_PER_BAND + r} AS VARCHAR)"
+        for r in range(ROWS_PER_BAND)
+    )
+    return f"md5({parts})"
+
+
+_SIGS_SPARK_SQL = [f"{_sig_spark_sql(i)} AS sig{i}" for i in range(N_HASHES)]
+_BANDS_SPARK_SQL = "inline(array({}))".format(", ".join(
+    f"named_struct('band_idx', {b}, 'band_hash', {_band_spark_sql(b)})"
+    for b in range(N_BANDS)))
+
+
+def _band_triples(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, band_idx, band_hash) triples of the portable MinHash — the
+    only thing a candidate join ever shuffles. Signatures are one
+    ``selectExpr`` and the bands one ``inline``, both parsed from SQL
+    text. Callers spread() the input first (the signature map is the
+    pipeline's CPU hot spot)."""
+    ident = f"`{id_col}`"
+    return (
+        df.select(F.col(id_col), shingles(F.col(text_col)).alias("__t"))
+        .selectExpr(ident, *_SIGS_SPARK_SQL)
+        .selectExpr(ident, _BANDS_SPARK_SQL)
+    )
 
 
 def minhash_portable_pairs(
@@ -79,19 +112,7 @@ def minhash_portable_pairs(
     from iceberg_core_spark.session import spread
 
     df = spread(df)
-    sigs = df.select(
-        F.col(id_col), shingles(F.col(text_col)).alias("__t")
-    ).select(id_col, "__t", *_minhash_sig(F.col("__t")))
-    bands = sigs.select(
-        id_col,
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(b).alias("band_idx"),
-                         _band_hash(b).alias("band_hash"))
-                for b in range(N_BANDS)
-            ])
-        ).alias("band"),
-    ).select(id_col, "band.band_idx", "band.band_hash")
+    bands = _band_triples(df, text_col, id_col)
     a = bands.select(F.col(id_col).alias("doc_a"), "band_idx", "band_hash")
     b = bands.select(F.col(id_col).alias("doc_b"), "band_idx", "band_hash")
     cand = _spread_verify(
@@ -115,21 +136,6 @@ def minhash_portable_pairs(
 def dedup_minhash_portable(spark: SparkSession, sf: str) -> DataFrame:
     """Registry query: the fully oracle-checked MinHash-LSH."""
     return minhash_portable_pairs(load_table(spark, sf, "documents"))
-
-
-def _sig_sql(i: int) -> str:
-    return (
-        "list_aggregate(list_transform(t, x -> "
-        f"('0x' || substr(md5(x || 's{i}'), 1, 8))::BIGINT), 'min')"
-    )
-
-
-def _band_sql(b: int) -> str:
-    parts = " || ',' || ".join(
-        f"CAST(sig{b * ROWS_PER_BAND + r} AS VARCHAR)"
-        for r in range(ROWS_PER_BAND)
-    )
-    return f"md5({parts})"
 
 
 _JACC_RAW = (

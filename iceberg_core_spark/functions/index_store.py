@@ -25,6 +25,15 @@ A store mirrors derived frames ("kinds") of an APPEND-ONLY
   upsert/delete/overwrite contradict the append-only contract and
   raise — on the incremental walk AND before any recovery rebuild
   that would otherwise paper over them.
+- Every write path (a sync increment, :meth:`compact`, :meth:`rebuild`)
+  writes its kinds concurrently, one thread per kind carrying the
+  caller's job group, and waits for all of them. If any kind's write
+  fails, the first failure is re-raised and the watermark (or the
+  generation) stays where it was; the retry overwrites the partial
+  per-snapshot or ``gen=G+1`` dirs the other kinds left.
+- Reader frames are memoized per watermark; when only the watermark
+  moved, the new reader reuses the kind's known schema, so a judge
+  after a sync starts no schema-inference job.
 - :meth:`compact` consolidates the current generation's per-snapshot
   dirs (a month of 1-minute micro-batches is ~43k directories) into
   one right-sized dir per kind under ``gen=G+1`` and flips the meta
@@ -47,9 +56,11 @@ from __future__ import annotations
 import json as _json
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: (applicationId, root, kind, generation, watermark) -> reader frame.
 #: MODULE-level (registry queries build a fresh store object per
@@ -451,14 +462,31 @@ class SnapshotSyncedStore:
         a many-snapshot store per micro-batch is driver time the
         plan never sees — guide §6). Invalidation mirrors
         ``_bytes_cache``: the store only changes when THIS process
-        writes, and every write moves the watermark or generation."""
+        writes, and every write moves the watermark or generation.
+
+        A sync moves the watermark on every micro-batch, so the memo
+        alone misses once per batch. When an entry for the same
+        generation exists (only the watermark moved), the new reader
+        is opened with that entry's data schema instead of inferring
+        it: the increments of one generation are all written from the
+        same ``_frames``, so the schema is the same, and the reader
+        costs a listing but no job. The ``snap=`` partition column is
+        left out of the pinned schema and re-inferred from the paths,
+        so a snapshot id past the first read's inferred int range
+        still parses."""
         meta = self._meta()
         key = (self.spark.sparkContext.applicationId, id(self.spark),
                self.root, kind, meta.get("generation", 0),
                meta["synced_snapshot_id"])
         df = _READER_CACHE.get(key)
         if df is None:
-            df = self.spark.read.parquet(self._kind_dir(kind))
+            prior = next((v for k, v in _READER_CACHE.items()
+                          if k[:5] == key[:5]), None)
+            reader = self.spark.read
+            if prior is not None:
+                reader = reader.schema(StructType(
+                    [f for f in prior.schema.fields if f.name != "snap"]))
+            df = reader.parquet(self._kind_dir(kind))
             for k in [k for k in _READER_CACHE
                       if k[:4] == key[:4]  # the kind's stale entries
                       or k[0] != key[0]]:  # any dead app's entries
@@ -477,6 +505,32 @@ class SnapshotSyncedStore:
         for increment/compact/rebuild."""
         return max(1, -(-n // self._ROWS_PER_FILE))
 
+    def _write_kinds(self, frames: dict[str, DataFrame],
+                     write: Callable[[str, DataFrame], None]) -> None:
+        """Run ``write(kind, frame)`` for every kind at once, one thread
+        per kind, and return only after all of them finished; re-raise
+        the first failure. Each kind is a shuffle job then a write job,
+        and the kinds share no data, so running them one after another
+        only added their fixed stage latencies. ``inheritable_thread_target``
+        copies the caller's job group, description and tags into each
+        thread, so cancelling the caller's group cancels these writes
+        and its job count includes them. Callers move the watermark or
+        flip the meta only after this returns, so a failed kind leaves
+        the store where it was and the retry overwrites whatever the
+        other kinds wrote."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark import inheritable_thread_target
+
+        target = inheritable_thread_target(self.spark)(write)
+        with ThreadPoolExecutor(max_workers=len(frames)) as pool:
+            futures = [pool.submit(target, kind, frame)
+                       for kind, frame in frames.items()]
+        errors = [e for e in (f.exception() for f in futures)
+                  if e is not None]
+        if errors:
+            raise errors[0]
+
     def _write_increment(self, rows: DataFrame, snapshot_id: int) -> None:
         # ONE materialization of the increment feeds the count and
         # every kind's write — deriving it per action (count + one
@@ -490,17 +544,21 @@ class SnapshotSyncedStore:
         # Projected FIRST: sync passes full-table-schema frames, and
         # wide non-indexed columns (embeddings, metadata) must not
         # ride the persist — _frames only consumes (id, text).
+        # The kinds are written concurrently (_write_kinds); if any
+        # fails this raises before sync advances the watermark, and
+        # the next sync rewrites every kind's snap= dir.
         from pyspark.storagelevel import StorageLevel
 
         rows = rows.select(self.id_col, self.text_col).persist(
             StorageLevel.MEMORY_AND_DISK)
         try:
-            n = rows.count()
+            parts = self._parts_for(rows.count())
             sub = f"snap={snapshot_id}"
-            for kind, frame in self._frames(rows).items():
-                frame.coalesce(self._parts_for(n)).write.mode(
+            self._write_kinds(
+                self._frames(rows),
+                lambda kind, frame: frame.coalesce(parts).write.mode(
                     "overwrite").parquet(
-                    os.path.join(self._kind_dir(kind), sub))
+                    os.path.join(self._kind_dir(kind), sub)))
         finally:
             rows.unpersist()
 
@@ -511,17 +569,22 @@ class SnapshotSyncedStore:
         invariant both :meth:`compact` and :meth:`rebuild` rely on:
         write every kind's frame under ``gen=G+1/<sub>`` (clearing any
         partial G+1 a crashed earlier attempt left — it was never
-        authoritative), then advance generation + watermark in the
-        single atomic meta write, then sweep every other generation.
-        A crash before the meta flip leaves gen G authoritative; a
-        crash after it leaves only sweepable garbage."""
+        authoritative; the kinds are written concurrently, see
+        :meth:`_write_kinds`), then advance generation + watermark in
+        the single atomic meta write, then sweep every other
+        generation. A crash or a failed kind before the meta flip
+        leaves gen G authoritative; a crash after it leaves only
+        sweepable garbage."""
         meta = self._meta()
         gen = meta.get("generation", 0) + 1
-        for kind, frame in frames.items():
+
+        def write(kind: str, frame: DataFrame) -> None:
             shutil.rmtree(self._kind_dir(kind, gen), ignore_errors=True)
             self._cluster_for_write(kind, frame, parts).write.mode(
                 "overwrite").parquet(
                 os.path.join(self._kind_dir(kind, gen), sub))
+
+        self._write_kinds(frames, write)
         stamp = ({"params": self._index_params()}
                  if self._index_params() else {})
         self._write_meta({**meta, "generation": gen,

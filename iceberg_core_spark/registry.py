@@ -111,16 +111,11 @@ def all_queries() -> dict[str, Entry]:
     priority = [
         # ROUND-16 WINDOW (= WINDOW_ROUND; the r6-r15 window lists
         # live in git history). The live `--ages 16
-        # --assume-green-window` audit at r15 close forces 48 rows; the 2 remaining slots go to the
-        # r15-touched-but-driver-unverified paths the r15 VERDICT
-        # (item 2) names: corpus_bm25 and sim_search_batch (the other
-        # two named, admission_index and corpus_fuzzy_admission, are
-        # in the forced 48 already). The three rows-only entries below
-        # (dedup_minhash_lsh, dedup_simhash, agg_approx_distinct) are
-        # vouched by their OUT-of-window portable twins under the r16
-        # deferred-twin rule (verify_window.twin_pairing_errors): each
-        # twin is green-r13 with a byte-unchanged helper closure, and
-        # windowing the twins too would need 53 slots of 50.
+        # --assume-green-window` audit at r15 close forces 48 rows; the
+        # 2 remaining slots go to the portable twins in (c). The
+        # rows-only dedup_minhash_lsh is vouched by its OUT-of-window
+        # twin dedup_minhash_portable (green within MAX_AGE) under the
+        # r16 deferred-twin rule (verify_window.twin_pairing_errors).
         # (a) the 24 r12 rows at hard age-4:
         "vocab_topk", "write_shards", "scan_avro", "scan_jsonl",
         "scan_orc", "corpus_lm_score", "range_join_window",
@@ -143,16 +138,20 @@ def all_queries() -> dict[str, Entry]:
         "corpus_fuzzy_admission", "table_incremental",
         "table_time_travel", "table_partition_evolution",
         "agg_approx_distinct",
-        # (c) 2 flex slots: the r15 VERDICT item-2 mandates (both
-        # touched by the r15 optimization, both re-touched r16):
-        "corpus_bm25", "sim_search_batch",
-        # R17 PLAN: the 13 deferred r13 rows (corpus_clean, text_ngrams,
-        # dedup_simhash_portable, agg_approx_distinct_portable,
+        # (c) the hash-checked twins of the rows-only dedup_simhash and
+        # agg_approx_distinct above: their module (dedup_portable.py)
+        # changed after their green r13 row, so they can no longer
+        # vouch from outside the window. They take the 2 flex slots
+        # corpus_bm25 and sim_search_batch held (the r15 VERDICT
+        # item-2 mandates), which now audit TOUCHED-UNWINDOWED:
+        "dedup_simhash_portable", "agg_approx_distinct_portable",
+        # R17 PLAN: the 11 deferred r13 rows (corpus_clean, text_ngrams,
         # split_train_test, sample_stratified, stateful_stats, scan_csv,
         # events_funnel, events_retention, events_downsample,
-        # udtf_tokenize, agg_pivot) hit hard age-4 at r17, plus the
-        # three vouching twins above and every r16-touched module's
-        # rows (the audit's TOUCHED-UNWINDOWED tier lists them).
+        # udtf_tokenize, agg_pivot) hit hard age-4 at r17, plus
+        # dedup_minhash_portable (the vouching twin above), corpus_bm25,
+        # sim_search_batch and every r16-touched module's rows (the
+        # audit's TOUCHED-UNWINDOWED tier lists them).
     ]
     ordered: dict[str, Entry] = {k: out[k] for k in priority if k in out}
     ordered.update({k: v for k, v in out.items() if k not in ordered})

@@ -269,6 +269,17 @@ def _cast_partition_string(raw: str, dtype) -> Any:
     return raw
 
 
+def _path_frame(spark: SparkSession, rel_paths: list[str]) -> DataFrame:
+    """One-column (path) frame over ``rel_paths``, already split into
+    min(files, defaultParallelism) partitions — the per-file stats
+    tasks run in the one job of the caller's action, with no shuffle
+    job to spread a single-partition local frame first."""
+    n = max(1, min(len(rel_paths), spark.sparkContext.defaultParallelism))
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize([(p,) for p in rel_paths], n),
+        "path string")
+
+
 def _collect_file_stats(spark: SparkSession, root: str, rel_paths: list[str],
                         key_col: str | None,
                         stat_cols: tuple[str, ...],
@@ -350,10 +361,8 @@ def _collect_file_stats(spark: SparkSession, root: str, rel_paths: list[str],
 
     import json as _json
 
-    pathdf = spark.createDataFrame([(p,) for p in rel_paths], "path string")
-    n = max(1, min(len(rel_paths), spark.sparkContext.defaultParallelism))
     rows = (
-        pathdf.repartition(n)
+        _path_frame(spark, rel_paths)
         .mapInPandas(
             task,
             "path string, rows long, bytes long, content_hash string, "
@@ -490,9 +499,7 @@ def _entries_df(spark: SparkSession, root: str, rel_paths: list[str],
                 out.append(row)
             yield _pd.DataFrame(out, columns=colnames)
 
-    pathdf = spark.createDataFrame([(p,) for p in rel_paths], "path string")
-    n = max(1, min(len(rel_paths), spark.sparkContext.defaultParallelism))
-    return pathdf.repartition(n).mapInPandas(task, out_schema)
+    return _path_frame(spark, rel_paths).mapInPandas(task, out_schema)
 
 
 class IceTable:
@@ -1222,7 +1229,7 @@ class IceTable:
             if partition is not None and snap.partition_col:
                 def part_keep(f):
                     if snap.spec_col_for(f.seq) == snap.partition_col:
-                        return f.partition == partition  # exact
+                        return f.may_hold_partition(partition)
                     # older partition spec: fall back to this column's
                     # min/max stats (conservative; residual corrects)
                     phys = next(
@@ -2063,7 +2070,7 @@ class IceTable:
             # their non-matching rows byte-exact)
             if partition is not None and snap.partition_col and \
                     snap.spec_col_for(f.seq) == snap.partition_col and \
-                    f.partition != partition:
+                    not f.may_hold_partition(partition):
                 hit = False
             if hit and snap.key_col and not f.overlaps(lo, hi):
                 hit = False

@@ -95,6 +95,20 @@ def _norm_stat(v: Any) -> Any:
     return v
 
 
+def _proves_lt(a: Any, b: Any) -> bool:
+    """``a < b`` as a pruning proof: False, i.e. keep the file, when
+    either side is missing, NaN (every NaN comparison is false), or of
+    a type Python cannot order against the other (``"3" < 4`` raises).
+    The sidecar Arrow filter keeps the same files (its conjuncts drop
+    on a type clash)."""
+    if a is None or b is None:
+        return False
+    try:
+        return bool(a < b)
+    except TypeError:
+        return False
+
+
 def _encode_key(v: Any) -> Any:
     """JSON-encode a key-column stat value, tagging non-JSON types."""
     if isinstance(v, datetime):
@@ -268,11 +282,8 @@ class ManifestFile:
 
     def overlaps(self, lo: Any, hi: Any) -> bool:
         """Inclusive range-overlap test — true min/max on both bounds."""
-        if lo is not None and self.key_max is not None and self.key_max < lo:
-            return False
-        if hi is not None and self.key_min is not None and self.key_min > hi:
-            return False
-        return True
+        return not (_proves_lt(self.key_max, lo)
+                    or _proves_lt(hi, self.key_min))
 
     def overlaps_col(self, col: str, lo: Any, hi: Any) -> bool:
         """Overlap test on any stats-tracked column; files without stats
@@ -281,11 +292,17 @@ class ManifestFile:
         if st is None:
             return True
         mn, mx = st
-        if lo is not None and mx is not None and mx < lo:
-            return False
-        if hi is not None and mn is not None and mn > hi:
-            return False
-        return True
+        return not (_proves_lt(mx, lo) or _proves_lt(hi, mn))
+
+    def may_hold_partition(self, p: Any) -> bool:
+        """Whether the file's identity-partition value leaves rows with
+        partition ``p`` possible. A str against a non-str proves
+        nothing: the query's residual filter casts, so ``"3"`` can
+        match ``3``, and the sidecar pass keeps such files too."""
+        v = self.partition
+        if v is not None and isinstance(v, str) != isinstance(p, str):
+            return True
+        return v == p
 
     def to_json(self) -> dict:
         d = asdict(self)

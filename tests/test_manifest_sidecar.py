@@ -675,3 +675,38 @@ def test_query_starts_no_spark_job_before_its_action(spark, tmp_path,
         sc.setLocalProperty("spark.job.description", None)
     assert sorted(r.id for r in rows) == [
         i for i in range(100, 501) if i % 4 == 3]
+
+
+def test_inline_and_sidecar_regimes_return_same_rows(spark, tmp_path,
+                                                     monkeypatch):
+    """The same queries against the same data under the default
+    ``inline_max`` (inline JSON pruning) and under a small one (sidecar
+    Arrow pruning) return identical rows, including bounds whose type
+    differs from the stat's: a string partition queried with an int, a
+    string stat column ranged with ints. The inline pass keeps such
+    files, as the sidecar does, and the residual filter picks the rows."""
+    def mk(name):
+        df = spark.range(0, 400).selectExpr(
+            "id", "cast(id % 4 as string) as part",
+            "cast(id % 10 as string) as tag")
+        return IceTable.create(spark, str(tmp_path / name), df,
+                               partition_col="part", key_col="id",
+                               stat_cols=["tag"], max_rows_per_file=50)
+
+    inline = mk("inline")
+    assert not inline.manifest.load(load_files=False).files_ref
+    monkeypatch.setattr(Manifest, "inline_max", 2)
+    sidecar = mk("sidecar")
+    assert sidecar.manifest.load(load_files=False).files_ref
+    queries = [
+        lambda t: t.query(partition=3),
+        lambda t: t.query(partition="3"),
+        lambda t: t.query(partition=3, lo=0, hi=40),
+        lambda t: t.query(partition="1", lo=150),
+        lambda t: t.range_scan({"tag": (2, 5)}),
+        lambda t: t.range_scan({"tag": ("2", "5"), "id": (100, 260)}),
+    ]
+    for i, q in enumerate(queries):
+        got = sorted(r.id for r in q(inline).collect())
+        assert got, i
+        assert got == sorted(r.id for r in q(sidecar).collect()), i
