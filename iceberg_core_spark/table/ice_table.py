@@ -26,14 +26,18 @@ Scale design:
   (metadata-only, no data I/O), then the same predicate is pushed into
   the Parquet scan as row-group skipping + residual filter. No collect()
   anywhere — ``query()`` returns a DataFrame.
-- Stats collection reads only Parquet footers (metadata-only), in SPARK
-  TASKS. Large commits never materialize per-file entries on the
-  driver: the sidecar is built as ``parent sidecar ∪ new entries`` by a
-  Spark job (``_commit_distributed``), dedupe is a semi-join, table
+- Stats collection reads only Parquet footers (metadata-only), in ONE
+  kind of SPARK TASK (``_entries_df``). Large commits never materialize
+  per-file entries on the driver: the sidecar is built as ``parent
+  sidecar ∪ new entries`` by a Spark job, dedupe is a semi-join, table
   stats aggregate over the sidecar DataFrame — commit metadata scales
-  with the cluster, not one machine.
+  with the cluster, not one machine. Small commits collect the same
+  task's rows to the driver.
 - Multi-writer safe: lock-free optimistic concurrency (see
-  table/manifest.py) with automatic append/overwrite rebase.
+  table/manifest.py). Every data commit, in either form, goes through
+  one compare-and-swap loop (``_commit_entries``) with automatic
+  append/overwrite/add_files rebase; metadata-only ops retry through
+  ``_commit_metadata``.
 """
 
 from __future__ import annotations
@@ -59,8 +63,6 @@ from iceberg_core_spark.table.manifest import (
     Manifest,
     ManifestFile,
     Snapshot,
-    _decode_key,
-    _encode_key,
     _fold_chains,
     sidecar_stat_cols,
 )
@@ -165,16 +167,20 @@ def _not_true(cond):
     return ~F.coalesce(cond, F.lit(False))
 
 
-def _file_stats(path: str, key_col: str | None, partition_col: str | None,
+def _file_stats(path: str, key_col: str | None,
                 stat_cols: tuple[str, ...] = ()):
-    """Per-file (rows, key_min, key_max, partition_value, col_stats)
-    from Parquet footers only — no data pages are read. ``stat_cols``
-    extends min/max tracking beyond the key column."""
+    """Per-file (rows, key_min, key_max, col_stats, schema_fp) from the
+    Parquet footer only — no data pages are read. ``stat_cols`` extends
+    min/max tracking beyond the key column. ``schema_fp`` is a canonical
+    fingerprint of the footer schema, sorted by name: the Spark read
+    path resolves columns by name, so field ORDER differences are not
+    schema divergence."""
     import pyarrow.parquet as pq
 
-    md = pq.ParquetFile(path).metadata
+    pf = pq.ParquetFile(path)
+    md = pf.metadata
     rows = md.num_rows
-    key_min = key_max = part_val = None
+    key_min = key_max = None
     col_stats: dict[str, list] = {}
     name_to_idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
 
@@ -205,15 +211,12 @@ def _file_stats(path: str, key_col: str | None, partition_col: str | None,
         group = md.row_group(rg)
         for col in set(stat_cols) | ({key_col} if key_col else set()):
             merge(col, group)
-        if partition_col is not None and partition_col in name_to_idx:
-            st = group.column(name_to_idx[partition_col]).statistics
-            if st is not None and st.has_min_max and part_val is None:
-                part_val = norm(st.min)  # one partition value per file by layout
     if key_col and key_col in col_stats:
         key_min, key_max = col_stats[key_col]
-    return rows, key_min, key_max, part_val, {
+    schema_fp = ";".join(sorted(f"{f.name}:{f.type}" for f in pf.schema_arrow))
+    return rows, key_min, key_max, {
         c: (v[0], v[1]) for c, v in col_stats.items()
-    }
+    }, schema_fp
 
 
 def _partition_value_from_path(relpath: str, dtype) -> Any:
@@ -280,116 +283,6 @@ def _path_frame(spark: SparkSession, rel_paths: list[str]) -> DataFrame:
         "path string")
 
 
-def _collect_file_stats(spark: SparkSession, root: str, rel_paths: list[str],
-                        key_col: str | None,
-                        stat_cols: tuple[str, ...],
-                        with_schema: bool = False) -> list[dict]:
-    """Per-file commit stats (footer min/max, row count, sha256) computed
-    IN SPARK TASKS via mapInPandas over the file list — the driver never
-    re-reads written bytes, so commit preparation scales with the cluster
-    instead of one machine's disk bandwidth (at 100 TB a commit may add
-    thousands of files; driver-side hashing was the round-1 bottleneck,
-    TODO item 4). Assumes table storage is reachable from executors —
-    the same assumption every read makes. Stats cross the wire as JSON
-    using the manifest's type-tagged encoding.
-
-    Returns one dict per file: {path, rows, bytes, content_hash,
-    key_min, key_max, col_stats} (decoded, driver-side types).
-    ``with_schema=True`` adds ``schema_fp``, a canonical
-    "name:arrow_type" fingerprint of each file's footer schema — the
-    add_files migration path validates EVERY file with it (a
-    first-file-only check let later mismatched files silently read
-    NULL columns; r14 review). Off by default: ordinary commits write
-    all files from one frame, so their schemas cannot diverge and the
-    extra footer parse would be waste.
-    """
-    if not rel_paths:
-        return []
-    cols = tuple(dict.fromkeys(
-        list(stat_cols) + ([key_col] if key_col else [])
-    ))
-
-    def task(batches):
-        import hashlib
-        import json as _json
-        import os as _os
-
-        import pandas as _pd
-
-        for pdf in batches:
-            out = []
-            for rel in pdf["path"]:
-                ap = _os.path.join(root, rel)
-                rows, kmin, kmax, _pv, cstats = _file_stats(
-                    ap, key_col, None, cols
-                )
-                fp = ""
-                if with_schema:
-                    import pyarrow.parquet as _pq
-
-                    # sorted by name: the Spark read path resolves
-                    # columns by name, so field ORDER differences are
-                    # not schema divergence (matches the order-
-                    # insensitive first-file dict check; r14 ADVICE)
-                    fp = ";".join(sorted(
-                        f"{f.name}:{f.type}"
-                        for f in _pq.ParquetFile(ap).schema_arrow))
-                h = hashlib.sha256()
-                with open(ap, "rb") as f:
-                    for chunk in iter(lambda: f.read(1 << 20), b""):
-                        h.update(chunk)
-                out.append({
-                    "path": rel,
-                    "rows": rows,
-                    "bytes": _os.path.getsize(ap),
-                    "content_hash": h.hexdigest(),
-                    "schema_fp": fp,
-                    "stats_json": _json.dumps({
-                        "key_min": _encode_key(kmin),
-                        "key_max": _encode_key(kmax),
-                        "col_stats": {
-                            c: [_encode_key(v[0]), _encode_key(v[1])]
-                            for c, v in cstats.items()
-                        },
-                    }),
-                })
-            yield _pd.DataFrame(
-                out,
-                columns=["path", "rows", "bytes", "content_hash",
-                         "schema_fp", "stats_json"],
-            )
-
-    import json as _json
-
-    rows = (
-        _path_frame(spark, rel_paths)
-        .mapInPandas(
-            task,
-            "path string, rows long, bytes long, content_hash string, "
-            "schema_fp string, stats_json string",
-        )
-        .collect()
-    )
-    out = []
-    for r in rows:
-        st = _json.loads(r.stats_json)
-        out.append({
-            "path": r.path,
-            "rows": r.rows,
-            "bytes": r.bytes,
-            "content_hash": r.content_hash,
-            "schema_fp": r.schema_fp,
-            "key_min": _decode_key(st["key_min"]),
-            "key_max": _decode_key(st["key_max"]),
-            "col_stats": {
-                c: (_decode_key(v[0]), _decode_key(v[1]))
-                for c, v in st["col_stats"].items()
-            },
-        })
-    out.sort(key=lambda d: d["path"])
-    return out
-
-
 def _stat_sidecar_type(dtype) -> str | None:
     """Spark SQL type of a normalized sidecar stat column for a data
     column of ``dtype`` — mirrors ``manifest._norm_stat``: timestamps /
@@ -428,13 +321,21 @@ def _stat_sidecar_type(dtype) -> str | None:
 def _entries_df(spark: SparkSession, root: str, rel_paths: list[str],
                 schema: StructType, key_col: str | None,
                 partition_col: str | None, stat_cols: tuple[str, ...]):
-    """Full sidecar entry rows (normalized pruning stats + entry_json +
-    content_hash) computed IN SPARK TASKS — the 1M-file commit path.
-    Unlike ``_collect_file_stats`` the driver never materializes one row
-    per file: the output DataFrame is written straight to the sidecar
-    (union with the parent's sidecar), so commit metadata scales with
-    the cluster. ``seq`` is added later as a literal column so a rebase
-    retargets it without re-running these tasks."""
+    """The one per-file stats task: footer min/max, row count and
+    sha256 computed IN SPARK TASKS via mapInPandas over the file list —
+    the driver never re-reads written bytes, so commit preparation
+    scales with the cluster instead of one machine's disk bandwidth.
+    Assumes table storage is reachable from executors, the same
+    assumption every read makes.
+
+    Each row is a full sidecar entry (normalized pruning stats +
+    entry_json) plus ``content_hash`` for the dedupe semi-join and
+    ``schema_fp`` (see ``_file_stats``) for add_files' per-file schema
+    check. The Spark form of a commit writes these rows straight into
+    the new sidecar, so the driver never materializes one entry per
+    file; the driver form collects them (``_collect_entries``). ``seq``
+    is added at commit time as a literal column, so a rebase retargets
+    it without re-running these tasks."""
     import json as _json
 
     from iceberg_core_spark.table.manifest import _norm_stat
@@ -447,7 +348,7 @@ def _entries_df(spark: SparkSession, root: str, rel_paths: list[str],
 
     fields = [
         ("path", "string"), ("rows", "bigint"), ("bytes", "bigint"),
-        ("content_hash", "string"),
+        ("content_hash", "string"), ("schema_fp", "string"),
         ("partition_n", _stat_sidecar_type(part_dtype) or "bigint"),
         ("key_min_n", _stat_sidecar_type(dtypes.get(key_col)) or "bigint"),
         ("key_max_n", _stat_sidecar_type(dtypes.get(key_col)) or "bigint"),
@@ -469,9 +370,8 @@ def _entries_df(spark: SparkSession, root: str, rel_paths: list[str],
             out = []
             for rel in pdf["path"]:
                 ap = _os.path.join(root, rel)
-                rows, kmin, kmax, _pv, cstats = _file_stats(
-                    ap, key_col, None, cols
-                )
+                rows, kmin, kmax, cstats, schema_fp = _file_stats(
+                    ap, key_col, cols)
                 h = hashlib.sha256()
                 with open(ap, "rb") as f:
                     for chunk in iter(lambda: f.read(1 << 20), b""):
@@ -481,12 +381,12 @@ def _entries_df(spark: SparkSession, root: str, rel_paths: list[str],
                 entry = ManifestFile(
                     path=rel, partition=pv, key_min=kmin, key_max=kmax,
                     rows=rows, bytes=_os.path.getsize(ap),
-                    content_hash=h.hexdigest(),
-                    col_stats={c: (v[0], v[1]) for c, v in cstats.items()},
+                    content_hash=h.hexdigest(), col_stats=cstats,
                 )
                 row = {
                     "path": rel, "rows": rows, "bytes": entry.bytes,
                     "content_hash": entry.content_hash,
+                    "schema_fp": schema_fp,
                     "partition_n": _norm_stat(pv),
                     "key_min_n": _norm_stat(kmin),
                     "key_max_n": _norm_stat(kmax),
@@ -500,6 +400,61 @@ def _entries_df(spark: SparkSession, root: str, rel_paths: list[str],
             yield _pd.DataFrame(out, columns=colnames)
 
     return _path_frame(spark, rel_paths).mapInPandas(task, out_schema)
+
+
+def _collect_entries(spark: SparkSession, root: str, rel_paths: list[str],
+                     schema: StructType, key_col: str | None,
+                     partition_col: str | None, stat_cols: tuple[str, ...],
+                     ) -> tuple[list[ManifestFile], dict[str, str]]:
+    """Driver form of ``_entries_df``: one Spark job, then each row's
+    entry_json decoded on the driver. Returns the entries of the
+    non-empty files, and every file's footer schema fingerprint by
+    path. Files with no rows (an empty write partition) are deleted
+    here, so they never become orphans."""
+    if not rel_paths:
+        return [], {}
+    entries, fps = [], {}
+    for r in _entries_df(spark, root, rel_paths, schema, key_col,
+                         partition_col, stat_cols
+                         ).select("entry_json", "schema_fp").collect():
+        f = ManifestFile.from_json(json.loads(r.entry_json))
+        fps[f.path] = r.schema_fp
+        if f.rows:
+            entries.append(f)
+        else:
+            _remove_files(root, [f.path])
+    return entries, fps
+
+
+def _remove_files(root: str, rel_paths) -> None:
+    """Delete data files that no commit references (losers, duplicates,
+    empty files); already-gone files are fine."""
+    for rel in rel_paths:
+        p = os.path.join(root, rel)
+        if os.path.exists(p):
+            os.remove(p)
+
+
+def _parquet_rows(path: str) -> int:
+    """Row count of a Spark-written parquet directory, from footers
+    only."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(os.path.join(dp, f)).num_rows
+        for dp, _d, fs in os.walk(path)
+        for f in fs if f.endswith(".parquet")
+    )
+
+
+# Operations whose new files join the file list of the snapshot they
+# land on (the rest bring their own carried-over base), and operations
+# that may rebase onto a concurrent winner: an append/add_files unions
+# with whatever the winner committed and an overwrite replaces
+# everything regardless. Every other operation based its output on
+# files that may have changed, so the caller must re-run it.
+_ON_PARENT = ("append", "add_files", "cdc-mor")
+_REBASES = ("append", "overwrite", "add_files")
 
 
 class IceTable:
@@ -636,7 +591,6 @@ class IceTable:
             df, "append", snap.partition_col, snap.key_col,
             max_rows_per_file, base_files=list(snap.files),
             dedupe_identical_files=dedupe_identical_files,
-            delete_predicates=snap.delete_predicates,  # still hide old rows
             source_batch_id=source_batch_id,
             source_lineage=source_lineage,
             expected_parent=snap.snapshot_id,
@@ -684,26 +638,32 @@ class IceTable:
         base_files_df: DataFrame | None = None,
         branch: str | None = None,
     ) -> Snapshot:
-        """``expected_parent``: snapshot id the caller's read state is
-        based on (None for create). If another writer commits first, the
-        manifest CAS fails and the commit is REBASED onto the new current
-        snapshot when that is provably safe — append (new files union
-        with whatever the winner committed) and overwrite (replaces
-        everything regardless) — else CommitConflictError surfaces to the
-        caller, whose read-modify-write must re-run. Data files are
-        written to a token-unique commit dir, so racing writers never
-        touch each other's bytes and a rebase re-commits metadata only.
+        """Write ``df`` as new data files and commit them as
+        ``operation`` on top of ``expected_parent`` (None for create),
+        through the one commit loop (``_commit_entries``).
 
-        ``base_mode="parent"`` (append) means the base file set IS the
-        parent snapshot's — when that parent is sidecar-backed, or the
-        commit is large, the whole manifest update runs as a Spark job
-        over sidecar DataFrames (``_commit_distributed``) and the driver
-        never materializes one entry per file.
+        ``expected_parent``: snapshot id the caller's read state is
+        based on. If another writer commits first, the manifest CAS
+        fails and the commit is REBASED onto the new current snapshot
+        when that is provably safe — append (new files union with
+        whatever the winner committed) and overwrite (replaces
+        everything regardless) — else the new files are deleted and
+        CommitConflictError surfaces to the caller, whose
+        read-modify-write must re-run. Data files are written to a
+        token-unique commit dir, so racing writers never touch each
+        other's bytes and a rebase re-commits metadata only.
+
+        The entries take one of two forms, chosen by size: large
+        commits, and any append onto a sidecar-backed parent, keep them
+        in Spark (the new sidecar is ``base ∪ new entries`` written by a
+        Spark job; dedupe is a semi-join); small ones collect them to
+        the driver in the same stats job. ``base_mode="parent"``
+        (append) sizes that choice by the parent's file count.
 
         ``base_files_df``: carried-over entries as a sidecar-schema
         DataFrame (e.g. compaction survivors = parent sidecar anti-join
-        victims) — forces the distributed commit path; entries never
-        materialize on the driver."""
+        victims) — forces the Spark form; entries never materialize on
+        the driver."""
         # inherit stats/clustering/bucket config from the current snapshot
         if stat_cols is None or zorder_by is None or bucket_by is None:
             cur = self.manifest.current_snapshot_id()
@@ -784,24 +744,10 @@ class IceTable:
             if name.endswith(".parquet")
         )
 
-        # Large commits (or any append onto a sidecar-backed parent) keep
-        # manifest construction OUT of the driver: entries are computed
-        # and unioned with the parent sidecar as DataFrames.
         parent_snap = (
             self.manifest.load(expected_parent, load_files=False)
             if expected_parent is not None else None
         )
-        # rename history rides every commit (a concurrent rename would
-        # change schema_json, which the CAS rebase refuses — so the
-        # inherited list stays valid across a rebase)
-        inherited_renames = parent_snap.renames if parent_snap else []
-        # staged (write-audit-publish) bookkeeping rides too: an
-        # ordinary append must not un-hide someone else's staged files
-        inherited_staged = dict(parent_snap.staged) if parent_snap else {}
-        # partition-spec history rides too: files written under an older
-        # spec keep pruning correctly only while the history survives
-        inherited_specs = (list(parent_snap.partition_specs)
-                           if parent_snap else [])
         # A rewrite that doesn't change the table's logical schema must
         # not drift the RECORDED one either: parquet-read frames come
         # back all-nullable, and committing that json would trip the
@@ -820,293 +766,204 @@ class IceTable:
                           else len(parent_snap.files))
         else:
             base_count = len(base_files)
-        if base_files_df is not None or (
+        # Large commits (or any append onto a sidecar-backed parent) keep
+        # manifest construction OUT of the driver: entries are computed
+        # and unioned with the parent sidecar as DataFrames.
+        spark_form = base_files_df is not None or (
             operation in ("create", "append", "overwrite", "cdc-mor") and (
                 len(rel_paths) + base_count > Manifest.inline_max
                 or (parent_snap is not None and parent_snap.files_ref
                     and operation in ("append", "cdc-mor"))
             )
-        ):
-            return self._commit_distributed(
-                commit_schema, operation, partition_col, key_col, rel_paths,
-                stat_cols, zorder_by, delete_predicates,
-                dedupe_identical_files, expected_parent,
-                source_batch_id, source_lineage, bucket_by,
-                base_override_df=base_files_df,
-                renames=inherited_renames,
-                branch=branch,
-            )
-
-        part_dtype = (
-            df.schema[partition_col].dataType if partition_col else None
         )
-        new_files = []
-        for st in _collect_file_stats(self.spark, self.root, rel_paths,
-                                      key_col, tuple(stat_cols)):
-            if st["rows"] == 0:
-                os.remove(os.path.join(self.root, st["path"]))  # no orphan
-                continue
-            new_files.append(
-                ManifestFile(
-                    path=st["path"],
-                    partition=_partition_value_from_path(st["path"], part_dtype)
-                    if partition_col else None,
-                    key_min=st["key_min"],
-                    key_max=st["key_max"],
-                    rows=st["rows"],
-                    bytes=st["bytes"],
-                    content_hash=st["content_hash"],
-                    col_stats=st["col_stats"],
-                )
-            )
 
-        def drop_dupes(new, base):
-            if not (dedupe_identical_files and base):
-                return new
-            seen = {f.content_hash for f in base}
-            kept = []
-            for f in new:
-                if f.content_hash in seen:
-                    p = os.path.join(self.root, f.path)
-                    if os.path.exists(p):
-                        os.remove(p)  # no orphan
-                else:
-                    kept.append(f)
-            return kept
+        fields = dict(
+            schema_json=commit_schema.json(), partition_col=partition_col,
+            key_col=key_col, stat_cols=list(stat_cols),
+            zorder_by=list(zorder_by),
+            bucket_col=bucket_by[0] if bucket_by else None,
+            n_buckets=bucket_by[1] if bucket_by else None,
+            source_batch_id=source_batch_id, source_lineage=source_lineage,
+        )
+        if operation != "append":
+            # an append keeps the predicates of the snapshot it lands on
+            # (they still hide old rows); every other write states its own
+            fields["delete_predicates"] = delete_predicates or []
+        stats = (self.spark, self.root, rel_paths, commit_schema, key_col,
+                 partition_col, tuple(stat_cols))
+        if not spark_form:
+            new, _fps = _collect_entries(*stats)
+            return self._commit_entries(
+                operation, parent_snap, new, fields, commit_dir,
+                base=base_files, dedupe=dedupe_identical_files,
+                branch=branch)
 
-        parent = expected_parent
-        new_files = drop_dupes(new_files, base_files)
-        while True:
-            commit_sid = 0 if parent is None else parent + 1
-            for f in new_files:
-                f.seq = commit_sid  # data sequence number = adding snapshot
-            staged = {b: list(ids) for b, ids in inherited_staged.items()}
-            if branch:
-                staged.setdefault(branch, []).append(commit_sid)
-            snap = Snapshot(
-                snapshot_id=commit_sid,
-                parent_id=parent,
-                timestamp_ms=Manifest.now_ms(),
-                operation=operation,
-                schema_json=commit_schema.json(),
-                partition_col=partition_col,
-                key_col=key_col,
-                files=base_files + new_files,
-                delete_predicates=_resolve_pred_seqs(
-                    delete_predicates, commit_sid),
-                stat_cols=stat_cols,
-                zorder_by=zorder_by,
-                bucket_col=bucket_by[0] if bucket_by else None,
-                n_buckets=bucket_by[1] if bucket_by else None,
-                source_batch_id=source_batch_id,
-                source_lineage=source_lineage,
-                partition_specs=inherited_specs,
-                staged=staged,
-                renames=inherited_renames,
-            )
-            try:
-                self.manifest.commit(snap)
-                return snap
-            except CommitConflictError:
-                if operation not in ("append", "overwrite"):
-                    # read-modify-write ops (delete/compact/upsert) based
-                    # their output on files that may have changed — the
-                    # caller must re-run against the new state
-                    for f in new_files:
-                        p = os.path.join(self.root, f.path)
-                        if os.path.exists(p):
-                            os.remove(p)
-                    raise
-                winner = self.manifest.load()
-                if expected_parent is not None:
-                    based_on = self.manifest.load(
-                        expected_parent, load_files=False
-                    )
-                    if not _schemas_equivalent(winner.schema_json,
-                                               based_on.schema_json):
-                        raise  # concurrent schema change: no safe rebase
-                parent = winner.snapshot_id
-                if operation == "append":
-                    base_files = list(winner.files)
-                    delete_predicates = winner.delete_predicates
-                    inherited_staged = dict(winner.staged)
-                    inherited_specs = list(winner.partition_specs)
-                    new_files = drop_dupes(new_files, base_files)
-                # overwrite: replaces everything regardless of winner
-
-    def _commit_distributed(
-        self,
-        schema: StructType,
-        operation: str,
-        partition_col: str | None,
-        key_col: str | None,
-        rel_paths: list[str],
-        stat_cols: list[str],
-        zorder_by: list[str],
-        delete_predicates: list[dict] | None,
-        dedupe_identical_files: bool,
-        expected_parent: int | None,
-        source_batch_id: int | None,
-        source_lineage: str | None,
-        bucket_by: tuple[str, int] | None = None,
-        base_override_df: DataFrame | None = None,
-        renames: list[dict] | None = None,
-        branch: str | None = None,
-    ) -> Snapshot:
-        """Manifest commit where entries never materialize on the driver:
-        footer stats + hashes run in Spark tasks once (to a temp entries
-        parquet), the new sidecar is ``parent sidecar ∪ new entries``
-        written by a Spark job, the snapshot doc references it with a
-        files_count from footer metadata. Content-hash dedupe is a
-        semi-join against the parent sidecar (only duplicate PATHS — a
-        handful — ever reach the driver). A rebase after a lost CAS
-        re-runs only the cheap union job; the stats tasks are not
-        repeated, and the new entries' ``seq`` retargets via one lit()."""
-        import pyarrow.parquet as pq
-
-        spark, man = self.spark, self.manifest
+        man = self.manifest
         os.makedirs(man.dir, exist_ok=True)
-
-        def dir_rows(path: str) -> int:
-            if os.path.isfile(path):
-                return pq.read_metadata(path).num_rows
-            return sum(
-                pq.read_metadata(os.path.join(dp, f)).num_rows
-                for dp, _d, fs in os.walk(path)
-                for f in fs if f.endswith(".parquet")
-            )
-
-        def rm_data(paths: list[str]) -> None:
-            for p in paths:
-                fp = os.path.join(self.root, p)
-                if os.path.exists(fp):
-                    os.remove(fp)
-
+        # stats tasks run once, to a temp entries parquet: a rebase
+        # re-runs only the sidecar union job
         ent_ref = f"tmp-entries-{os.urandom(4).hex()}.parquet"
-        _entries_df(
-            spark, self.root, rel_paths, schema, key_col, partition_col,
-            tuple(stat_cols)
-        ).write.parquet(man.sidecar_path(ent_ref))
+        _entries_df(*stats).write.parquet(man.sidecar_path(ent_ref))
         try:
-            new_df = spark.read.parquet(man.sidecar_path(ent_ref))
-            rm_data([r.path for r in
-                     new_df.filter("rows = 0").select("path").collect()])
-            new_df = new_df.filter("rows > 0")
-
-            parent = expected_parent
-            while True:
-                sid = 0 if parent is None else parent + 1
-                psnap = (man.load(parent, load_files=False)
-                         if parent is not None else None)
-                # staged (write-audit-publish) bookkeeping rides every
-                # commit; a branch append adds its own id to its branch
-                staged = ({b: list(ids) for b, ids in psnap.staged.items()}
-                          if psnap is not None else {})
-                if branch:
-                    staged.setdefault(branch, []).append(sid)
-                base_df, base_tmp, preds = None, None, delete_predicates or []
-                if base_override_df is not None:
-                    # caller computed the carried-over entry set itself
-                    # (e.g. compaction survivors); no rebase exists for
-                    # such read-modify-write ops, so use it as-is
-                    base_df = base_override_df
-                elif parent is not None and operation != "overwrite":
-                    if operation == "append":
-                        preds = psnap.delete_predicates
-                    if psnap.files_ref:
-                        base_df = spark.read.parquet(
-                            man.sidecar_path(psnap.files_ref))
-                    elif psnap.files:
-                        # retired alias names via the shared derivation:
-                        # pre-rename files carry their stats under the
-                        # then-physical name and pruning resolves
-                        # through the chain
-                        base_tmp = f"tmp-base-{os.urandom(4).hex()}.parquet"
-                        man._write_files_sidecar(
-                            psnap.files,
-                            sidecar_stat_cols(stat_cols, renames or []),
-                            base_tmp)
-                        base_df = spark.read.parquet(
-                            man.sidecar_path(base_tmp))
-
-                dup_paths: list[str] = []
-                keep_df = new_df
-                if dedupe_identical_files and base_df is not None:
-                    bh = base_df.select(
-                        F.get_json_object("entry_json", "$.content_hash")
-                        .alias("content_hash"))
-                    dup_paths = [r.path for r in keep_df.join(
-                        bh, "content_hash", "left_semi"
-                    ).select("path").collect()]
-                    if dup_paths:
-                        keep_df = keep_df.join(
-                            spark.createDataFrame(
-                                [(p,) for p in dup_paths], "path string"),
-                            "path", "left_anti")
-                final_new = keep_df.drop("content_hash").withColumn(
-                    "seq", F.lit(sid).cast("long"))
-                # allowMissingColumns: after a stat-column rename the
-                # parent sidecar tracks smin_<old> while new entries
-                # track smin_<new>; each file's stats live under its
-                # then-physical name (NULL elsewhere) and pruning
-                # coalesces over the alias chain
-                out_df = (final_new if base_df is None
-                          else base_df.unionByName(
-                              final_new, allowMissingColumns=True))
-                ref = f"files-{sid}-{os.urandom(4).hex()}.parquet"
-                out_df.write.parquet(man.sidecar_path(ref))
-
-                snap = Snapshot(
-                    snapshot_id=sid,
-                    parent_id=parent,
-                    timestamp_ms=Manifest.now_ms(),
-                    operation=operation,
-                    schema_json=schema.json(),
-                    partition_col=partition_col,
-                    key_col=key_col,
-                    files=[],
-                    delete_predicates=_resolve_pred_seqs(preds, sid),
-                    stat_cols=stat_cols,
-                    zorder_by=zorder_by,
-                    bucket_col=bucket_by[0] if bucket_by else None,
-                    n_buckets=bucket_by[1] if bucket_by else None,
-                    source_batch_id=source_batch_id,
-                    source_lineage=source_lineage,
-                    partition_specs=(list(psnap.partition_specs)
-                                     if psnap is not None else []),
-                    staged=staged,
-                    renames=renames or [],
-                    files_ref=ref,
-                    files_count=dir_rows(man.sidecar_path(ref)),
-                )
-                try:
-                    man.commit(snap)
-                except CommitConflictError:
-                    man.remove_sidecar(ref)
-                    if base_tmp:
-                        man.remove_sidecar(base_tmp)
-                    if operation not in ("append", "overwrite"):
-                        # create has no parent to rebase onto; compact &
-                        # other read-modify-write ops based their output
-                        # on state that changed — caller must re-run
-                        rm_data([r.path for r in
-                                 new_df.select("path").collect()])
-                        raise
-                    winner = man.load(load_files=False)
-                    if expected_parent is not None:
-                        based_on = man.load(expected_parent,
-                                            load_files=False)
-                        if not _schemas_equivalent(winner.schema_json,
-                                                   based_on.schema_json):
-                            raise  # concurrent schema change: no rebase
-                    parent = winner.snapshot_id
-                    continue
-                rm_data(dup_paths)
-                if base_tmp:
-                    man.remove_sidecar(base_tmp)
-                return snap
+            new_df = self.spark.read.parquet(man.sidecar_path(ent_ref))
+            _remove_files(self.root, [
+                r.path for r in
+                new_df.filter("rows = 0").select("path").collect()])
+            return self._commit_entries(
+                operation, parent_snap, new_df.filter("rows > 0"), fields,
+                commit_dir,
+                base=base_files if base_files_df is None else base_files_df,
+                dedupe=dedupe_identical_files, branch=branch)
         finally:
             man.remove_sidecar(ent_ref)
+
+    def _commit_entries(
+        self,
+        operation: str,
+        based_on: Snapshot | None,
+        new: list[ManifestFile] | DataFrame,
+        fields: dict,
+        commit_dir: str,
+        base: list[ManifestFile] | DataFrame | None = None,
+        dedupe: bool = False,
+        branch: str | None = None,
+    ) -> Snapshot:
+        """The one compare-and-swap loop every data commit goes through
+        (create, append, overwrite, delete, compact, upsert, merge, cdc,
+        add_files). ``new`` holds the added files' entries in one of two
+        forms: a driver list (committed as inline JSON, or spilled by
+        ``Manifest.commit`` to a driver-written sidecar above
+        ``inline_max``), or the Spark entries frame of ``_entries_df``
+        (the new sidecar is ``base ∪ new`` written by a Spark job, so no
+        entry materializes on the driver).
+
+        Every attempt is the ``child()`` of the snapshot it lands on —
+        ``based_on`` first, then each winner — with ``fields``
+        overriding what the commit itself decides, so staged branches,
+        spec and rename history always come from that snapshot;
+        ``create`` (no parent) is the one constructor call. New files
+        carry the attempt's id as their data sequence number, a
+        ``branch`` commit stages that id, and the carried-over base is
+        the parent's file list for ``_ON_PARENT`` operations and
+        ``base`` otherwise. With ``dedupe``, a new file whose content
+        hash is already in the base is dropped and deleted (the
+        reference's idempotent re-write, block.go:109-115).
+
+        A lost race rebases ``_REBASES`` operations when the winner's
+        schema is canonically equivalent to ``based_on``'s; otherwise
+        ``commit_dir`` (which holds exactly the new files) is deleted
+        and CommitConflictError propagates. ``based_on`` must carry its
+        file list when the driver form builds on it."""
+        man = self.manifest
+        spark_form = isinstance(new, DataFrame)
+        parent = based_on
+        while True:
+            if parent is None:
+                snap = Snapshot(snapshot_id=0, parent_id=None,
+                                timestamp_ms=Manifest.now_ms(),
+                                operation=operation, **fields)
+            else:
+                snap = parent.child(operation, **fields)
+            sid = snap.snapshot_id
+            snap.delete_predicates = _resolve_pred_seqs(
+                snap.delete_predicates, sid)
+            if branch:
+                snap.staged.setdefault(branch, []).append(sid)
+            carried = (parent if parent is not None
+                       and operation in _ON_PARENT else base)
+            if spark_form:
+                new = self._spark_file_set(snap, new, carried, dedupe)
+            else:
+                base_files = (carried.files if isinstance(carried, Snapshot)
+                              else carried or [])
+                if dedupe and base_files:
+                    seen = {f.content_hash for f in base_files}
+                    _remove_files(self.root, [
+                        f.path for f in new if f.content_hash in seen])
+                    new = [f for f in new if f.content_hash not in seen]
+                for f in new:
+                    f.seq = sid  # data sequence number = adding snapshot
+                snap.files = list(base_files) + new
+                snap.files_ref = snap.files_count = None
+            try:
+                man.commit(snap)
+                return snap
+            except CommitConflictError:
+                if spark_form:
+                    man.remove_sidecar(snap.files_ref)
+                if operation in _REBASES:
+                    winner = man.load(load_files=not spark_form
+                                      and operation in _ON_PARENT)
+                    if based_on is None or _schemas_equivalent(
+                            winner.schema_json, based_on.schema_json):
+                        parent = winner
+                        continue
+                # no safe rebase (read-modify-write op, or a concurrent
+                # schema change): the caller re-runs
+                shutil.rmtree(commit_dir, ignore_errors=True)
+                raise
+
+    def _spark_file_set(self, snap: Snapshot, new: DataFrame, carried,
+                        dedupe: bool) -> DataFrame:
+        """Spark form of one commit attempt's file set: writes the
+        sidecar ``carried ∪ new`` (new entries stamped with ``seq``)
+        and points ``snap`` at it. ``carried`` is the parent snapshot
+        (its sidecar, or its inline list spilled to a temp sidecar), a
+        sidecar-schema DataFrame, a list, or None. Content-hash dedupe
+        is a semi-join against the base — only duplicate PATHS, a
+        handful, reach the driver. Returns ``new`` minus the dropped
+        duplicates."""
+        man = self.manifest
+        base_df, tmp = None, None
+        if isinstance(carried, DataFrame):
+            base_df = carried
+        elif isinstance(carried, Snapshot) and carried.files_ref:
+            base_df = self.spark.read.parquet(
+                man.sidecar_path(carried.files_ref))
+        else:
+            base_list = (carried.files if isinstance(carried, Snapshot)
+                         else carried or [])
+            if base_list:
+                # retired alias names via the shared derivation:
+                # pre-rename files carry their stats under the
+                # then-physical name and pruning resolves through the
+                # chain
+                tmp = f"tmp-base-{os.urandom(4).hex()}.parquet"
+                man._write_files_sidecar(
+                    base_list,
+                    sidecar_stat_cols(snap.stat_cols, snap.renames), tmp)
+                base_df = self.spark.read.parquet(man.sidecar_path(tmp))
+        try:
+            if dedupe and base_df is not None:
+                bh = base_df.select(
+                    F.get_json_object("entry_json", "$.content_hash")
+                    .alias("content_hash"))
+                dups = [r.path for r in
+                        new.join(bh, "content_hash", "left_semi")
+                        .select("path").collect()]
+                if dups:
+                    _remove_files(self.root, dups)
+                    new = new.join(
+                        self.spark.createDataFrame([(p,) for p in dups],
+                                                   "path string"),
+                        "path", "left_anti")
+            out = new.drop("content_hash", "schema_fp").withColumn(
+                "seq", F.lit(snap.snapshot_id).cast("long"))
+            if base_df is not None:
+                # allowMissingColumns: after a stat-column rename the
+                # base tracks smin_<old> while new entries track
+                # smin_<new>; each file's stats live under its
+                # then-physical name (NULL elsewhere) and pruning
+                # coalesces over the alias chain
+                out = base_df.unionByName(out, allowMissingColumns=True)
+            ref = f"files-{snap.snapshot_id}-{os.urandom(4).hex()}.parquet"
+            out.write.parquet(man.sidecar_path(ref))
+        finally:
+            if tmp:
+                man.remove_sidecar(tmp)
+        snap.files, snap.files_ref = [], ref
+        snap.files_count = _parquet_rows(man.sidecar_path(ref))
+        return new
 
     # ------------------------------------------------------------------
     # read / query
@@ -1905,8 +1762,10 @@ class IceTable:
         (a user switching a directory of plain parquet onto the table
         layer pays metadata cost, not a data rewrite).
 
-        - Files must match the table schema exactly (validated against
-          the first file's footer before anything commits).
+        - Files must match the table schema exactly: the first file's
+          schema is checked against the table's, and every file's
+          footer schema fingerprint against the first's, before
+          anything commits.
         - Partitioned tables require each source path to carry a
           hive-style ``<partition_col>=<value>`` segment (the standard
           migration layout); that value becomes the file's recorded
@@ -1915,12 +1774,13 @@ class IceTable:
           same filesystem; cross-device falls back to a copy), so the
           source tree stays intact while the table owns its files —
           expire_snapshots / remove_orphans manage them like any other.
-        - Stats + content hash are computed in Spark tasks (the same
-          distributed ``_collect_file_stats`` every commit uses), so
+        - Stats, content hash and schema fingerprint come from the one
+          Spark stats task every commit uses (``_entries_df``), so
           manifest min/max pruning works on the added files
           immediately; files whose content hash already exists in the
           table are skipped (the reference's idempotent re-ingest,
-          block.go:109-115).
+          block.go:109-115), and when nothing is new no snapshot is
+          committed.
 
         Bucketed tables refuse: arbitrary external files cannot
         satisfy a recorded bucket layout. Driver note: the commit
@@ -1976,73 +1836,31 @@ class IceTable:
             raise ValueError(
                 f"add_files schema mismatch: files have {have}, "
                 f"table has {want}")
-        stats = _collect_file_stats(self.spark, self.root, rel_paths,
-                                    snap.key_col, tuple(snap.stat_cols),
-                                    with_schema=True)
+        # the partition value comes from the source path segment, so
+        # the stats task records none
+        new, fps = _collect_entries(self.spark, self.root, rel_paths,
+                                    schema, snap.key_col, None,
+                                    tuple(snap.stat_cols))
         # EVERY file's footer must match the first (which the check
         # above pinned to the table schema): a first-file-only check
         # let a mixed-schema migration register files whose missing
-        # columns silently read as NULL (r14 review). The fingerprints
-        # ride the same distributed stats pass — no extra job.
-        ref_fp = next((st["schema_fp"] for st in stats
-                       if st["path"] == rel_paths[0]), None)
-        bad = sorted(st["path"] for st in stats
-                     if st["schema_fp"] != ref_fp)
+        # columns silently read as NULL. The fingerprints ride the same
+        # stats job — no extra job.
+        bad = sorted(p for p, fp in fps.items() if fp != fps[rel_paths[0]])
         if bad:
             shutil.rmtree(dest_dir, ignore_errors=True)
             raise ValueError(
                 f"add_files schema mismatch: {len(bad)} file(s) differ "
                 f"from {paths[0]!r}'s footer schema (first: {bad[0]!r}); "
                 "all files in one migration must share one schema")
-        new_files = [
-            ManifestFile(
-                path=st["path"], partition=part_vals.get(st["path"]),
-                key_min=st["key_min"], key_max=st["key_max"],
-                rows=st["rows"], bytes=st["bytes"],
-                content_hash=st["content_hash"],
-                col_stats=st["col_stats"],
-            )
-            for st in stats if st["rows"] > 0
-        ]
-
-        def dedupe(files, against):
-            hashes = {f.content_hash for f in against}
-            kept = []
-            for f in files:
-                if f.content_hash in hashes:
-                    p = os.path.join(self.root, f.path)
-                    if os.path.exists(p):
-                        os.remove(p)
-                else:
-                    kept.append(f)
-            return kept
-
-        kept = dedupe(new_files, snap.files)
-        cur = snap
-        while True:
-            if not kept:
-                shutil.rmtree(dest_dir, ignore_errors=True)
-                return cur
-            for f in kept:
-                f.seq = cur.snapshot_id + 1
-            # a files override clears the inherited files_ref/count in
-            # child() itself (it would shadow the new list otherwise)
-            new = cur.child("add_files", files=list(cur.files) + kept)
-            try:
-                self.manifest.commit(new)
-                return new
-            except CommitConflictError:
-                winner = self.manifest.load()
-                if not _schemas_equivalent(winner.schema_json,
-                                           cur.schema_json):
-                    for f in kept:
-                        p = os.path.join(self.root, f.path)
-                        if os.path.exists(p):
-                            os.remove(p)
-                    shutil.rmtree(dest_dir, ignore_errors=True)
-                    raise  # concurrent schema change: no safe rebase
-                kept = dedupe(kept, winner.files)
-                cur = winner
+        for f in new:
+            f.partition = part_vals[f.path]
+        have_hashes = {f.content_hash for f in snap.files}
+        if all(f.content_hash in have_hashes for f in new):
+            shutil.rmtree(dest_dir, ignore_errors=True)
+            return snap
+        return self._commit_entries("add_files", snap, new, {}, dest_dir,
+                                    dedupe=True)
 
     # ------------------------------------------------------------------
     # row-level changes (copy-on-write, Iceberg CoW semantics)
@@ -2979,24 +2797,16 @@ class IceTable:
         auto-retry after a lost commit race: it carries no data files,
         so it reloads the winner and re-commits on top (the staged ids
         travel with every commit, so the winner still carries them)."""
-        snap = self.manifest.load(load_files=False)
-        while True:
-            if name not in snap.staged:
-                raise ValueError(f"no staged branch {name!r} "
-                                 f"(staged: {sorted(snap.staged)})")
-            new = snap.child(
+
+        def build(snap):
+            self._require_branch(snap, name)
+            return snap.child(
                 "publish",
                 staged={b: list(v) for b, v in snap.staged.items()
                         if b != name},
             )
-            try:
-                self.manifest.commit(new)
-                return new
-            except CommitConflictError:
-                winner = self.manifest.load(load_files=False)
-                if winner.snapshot_id == snap.snapshot_id:
-                    raise  # not a lost race — surface the real error
-                snap = winner
+
+        return self._commit_metadata(build)[1]
 
     def drop_branch(self, name: str) -> Snapshot:
         """Abandon a staged audit branch (the audit REJECTED the data):
@@ -3005,41 +2815,58 @@ class IceTable:
         Admin-plane op: materializes the current file list on the
         driver (rare by construction — audits are short-lived; the
         planning ceiling is the documented ~100-byte/file stub budget)."""
-        snap = self.manifest.load()
-        while True:
-            if name not in snap.staged:
-                raise ValueError(f"no staged branch {name!r} "
-                                 f"(staged: {sorted(snap.staged)})")
+
+        def build(snap):
+            self._require_branch(snap, name)
             ids = set(snap.staged[name])
-            dropped = [f for f in snap.files if f.seq in ids]
-            kept = [f for f in snap.files if f.seq not in ids]
-            new = snap.child(
+            return snap.child(
                 "drop-branch",
                 # the files override clears the inherited
                 # files_ref/files_count in child() itself
-                files=kept,
+                files=[f for f in snap.files if f.seq not in ids],
                 staged={b: list(v) for b, v in snap.staged.items()
                         if b != name},
             )
+
+        base, new = self._commit_metadata(build, load_files=True)
+        # data files go LAST: earlier snapshots still reference them
+        # until expire_snapshots, but a dropped branch's files are
+        # referenced only by this table's history — remove now
+        # (matching Iceberg's expire-after-branch-delete effect for a
+        # single-table layout); failures leave orphans that
+        # remove_orphans() reaps.
+        ids = set(base.staged[name])
+        _remove_files(self.root, [f.path for f in base.files if f.seq in ids])
+        return new
+
+    @staticmethod
+    def _require_branch(snap, name: str) -> None:
+        if name not in snap.staged:
+            raise ValueError(f"no staged branch {name!r} "
+                             f"(staged: {sorted(snap.staged)})")
+
+    def _commit_metadata(self, build, load_files: bool = False
+                         ) -> tuple[Snapshot, Snapshot]:
+        """Commit loop of the metadata-only ops (publish, drop-branch,
+        spec change, rename): ``build(snap)`` re-runs the op's guards
+        against ``snap`` and returns its child, or None when there is
+        nothing to commit. They carry no new data files, so a lost race
+        is safe to auto-retry: reload the winner and build again on top
+        of it. Returns (the snapshot built on, the committed one — the
+        same when nothing was committed)."""
+        snap = self.manifest.load(load_files=load_files)
+        while True:
+            new = build(snap)
+            if new is None:
+                return snap, snap
             try:
                 self.manifest.commit(new)
+                return snap, new
             except CommitConflictError:
-                winner = self.manifest.load()
+                winner = self.manifest.load(load_files=load_files)
                 if winner.snapshot_id == snap.snapshot_id:
-                    raise
+                    raise  # not a lost race — surface the real error
                 snap = winner
-                continue
-            # data files go LAST: earlier snapshots still reference
-            # them until expire_snapshots, but a dropped branch's files
-            # are referenced only by this table's history — remove now
-            # (matching Iceberg's expire-after-branch-delete effect for
-            # a single-table layout); failures leave orphans that
-            # remove_orphans() reaps.
-            for f in dropped:
-                p = os.path.join(self.root, f.path)
-                if os.path.exists(p):
-                    os.remove(p)
-            return new
 
     def _refs_dir(self) -> str:
         return os.path.join(self.manifest.dir, "refs")
@@ -3135,10 +2962,10 @@ class IceTable:
         O(1) metadata per change, valid for sidecar-backed tables
         without touching a single entry. Safe to auto-retry after a
         lost commit race (metadata-only, rename_column-style)."""
-        snap = self.manifest.load(load_files=False)
-        while True:
+
+        def build(snap):
             if new_col == snap.partition_col:
-                return snap
+                return None
             if snap.bucket_col:
                 raise ValueError(
                     "bucketed layout has no identity partition spec — "
@@ -3153,7 +2980,7 @@ class IceTable:
                     raise ValueError(
                         f"column name {new_col!r} was retired by a rename"
                     )
-            new = snap.child(
+            return snap.child(
                 "set-spec",
                 partition_col=new_col,
                 partition_specs=snap.partition_specs + [
@@ -3162,14 +2989,8 @@ class IceTable:
                 stat_cols=(list(dict.fromkeys(snap.stat_cols + [new_col]))
                            if new_col else list(snap.stat_cols)),
             )
-            try:
-                self.manifest.commit(new)
-                return new
-            except CommitConflictError:
-                winner = self.manifest.load(load_files=False)
-                if winner.snapshot_id == snap.snapshot_id:
-                    raise  # not a lost race — surface the real error
-                snap = winner
+
+        return self._commit_metadata(build)[1]
 
     def rename_column(self, old: str, new: str) -> Snapshot:
         """Rename a column as a METADATA-ONLY commit — no data rewrite,
@@ -3196,11 +3017,9 @@ class IceTable:
         re-commits on top — CommitConflictError only surfaces when a
         guard genuinely fails against the new state (e.g. the winner
         added a conflicting column)."""
-        import json as _json
 
-        snap = self.manifest.load(load_files=False)
-        while True:
-            schema = StructType.fromJson(_json.loads(snap.schema_json))
+        def build(snap):
+            schema = StructType.fromJson(json.loads(snap.schema_json))
             names = [f.name for f in schema.fields]
             if old not in names:
                 raise ValueError(f"no such column: {old!r}")
@@ -3228,7 +3047,7 @@ class IceTable:
                 if f.name == old else f
                 for f in schema.fields
             ])
-            new_snap = snap.child(
+            return snap.child(
                 "rename",
                 schema_json=new_schema.json(),
                 stat_cols=[new if c == old else c for c in snap.stat_cols],
@@ -3241,14 +3060,8 @@ class IceTable:
                 renames=snap.renames + [
                     {"from": old, "to": new, "seq": snap.snapshot_id}],
             )
-            try:
-                self.manifest.commit(new_snap)
-                return new_snap
-            except CommitConflictError:
-                winner = self.manifest.load(load_files=False)
-                if winner.snapshot_id == snap.snapshot_id:
-                    raise  # not a lost race — surface the real error
-                snap = winner
+
+        return self._commit_metadata(build)[1]
 
     def clone(self, dst_root: str) -> "IceTable":
         """SHALLOW clone (Delta ``SHALLOW CLONE`` / Iceberg

@@ -128,7 +128,7 @@ def test_distributed_commit_never_materializes_entries(
     def boom(*a, **k):
         raise AssertionError("driver-side entry collection ran")
 
-    monkeypatch.setattr(it, "_collect_file_stats", boom)
+    monkeypatch.setattr(it, "_collect_entries", boom)
 
     root = str(tmp_path / "dist")
     t = _mk_table(spark, root)  # create: 8 files > inline_max=2

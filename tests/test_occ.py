@@ -22,6 +22,17 @@ def root(tmp_path):
     return str(tmp_path / "occ_table")
 
 
+@pytest.fixture(params=["inline", "spark-sidecar"])
+def regime(request, monkeypatch):
+    """Both forms of the commit loop: at the default inline_max these
+    small commits collect their entries to the driver (inline JSON);
+    inline_max=0 sends creates and appends through the Spark-written
+    sidecar and spills every other commit to a driver-written one."""
+    if request.param == "spark-sidecar":
+        monkeypatch.setattr(Manifest, "inline_max", 0)
+    return request.param
+
+
 def _mk(spark, root, n_rows=3):
     rows = [location_row(timestamp=100 + i) for i in range(n_rows)]
     return IceTable.create(spark, root, location_df(spark, rows),
@@ -55,7 +66,7 @@ def test_commit_claim_requires_consecutive_id(spark, root):
         t.manifest.commit(bad)
 
 
-def test_stale_append_rebases_and_keeps_both(spark, root):
+def test_stale_append_rebases_and_keeps_both(spark, root, regime):
     """Writer A bases an append on snapshot 0; writer B commits first.
     A's CAS fails, A rebases onto B's snapshot, and the final table
     holds rows from BOTH appends plus the original."""
@@ -79,7 +90,31 @@ def test_stale_append_rebases_and_keeps_both(spark, root):
     assert snap.snapshot_id == 2 and snap.parent_id == 1
 
 
-def test_stale_read_modify_write_conflicts_and_cleans_up(spark, root):
+def test_stale_overwrite_rebase_keeps_winner_branches(spark, root, regime):
+    """A stale overwrite that loses the race to a branch append rebases
+    onto the winner and inherits its staged branches, whichever form
+    the commit takes: keeping the based-on snapshot's (empty) staged
+    dict would make the branch vanish."""
+    t_a = _mk(spark, root)
+    base = t_a.manifest.load()
+
+    IceTable(spark, root).append(
+        location_df(spark, [location_row(timestamp=500)]), branch="audit")
+
+    t_a._write_commit(
+        location_df(spark, [location_row(timestamp=900)]),
+        "overwrite", base.partition_col, base.key_col, 1_000_000,
+        base_files=[], expected_parent=base.snapshot_id,
+    )
+    final = IceTable(spark, root)
+    snap = final.manifest.load(load_files=False)
+    assert snap.snapshot_id == 2 and snap.operation == "overwrite"
+    assert bool(snap.files_ref) == (regime == "spark-sidecar")
+    assert final.branches() == {"audit": [1]}
+    assert sorted(r.timestamp for r in final.scan().collect()) == [900]
+
+
+def test_stale_read_modify_write_conflicts_and_cleans_up(spark, root, regime):
     """delete/compact/upsert-shaped commits must NOT auto-rebase: a
     stale one raises and removes its newly written (now orphan) files."""
     t_a = _mk(spark, root)
@@ -184,7 +219,7 @@ def test_current_hint_recovery_after_crash(spark, root):
     assert ts == [100, 101, 102, 500]
 
 
-def test_rebased_append_still_dedupes_identical_files(spark, root):
+def test_rebased_append_still_dedupes_identical_files(spark, root, regime):
     """Idempotent-rewrite semantics survive a rebase: if the winning
     commit already added byte-identical content, the rebased append
     drops its duplicate files (reference block.go:109-115)."""

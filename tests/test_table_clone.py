@@ -257,7 +257,7 @@ def test_clone_handles_directory_sidecars_and_staging_debris(
                     if n.startswith("files-") and
                     os.path.isdir(man / n)]
     assert sidecar_dirs, "test setup must produce a directory sidecar"
-    # a writer that died mid-_commit_distributed leaves staging dirs
+    # a writer that died mid-commit (Spark form) leaves staging dirs
     os.makedirs(man / "tmp-entries-deadbeef.parquet")
     (man / "tmp-entries-deadbeef.parquet" / "part-0.parquet").write_text("")
     os.makedirs(man / "tmp-base-deadbeef.parquet")
