@@ -29,10 +29,19 @@ Scale design:
 - Stats collection reads only Parquet footers (metadata-only), in ONE
   kind of SPARK TASK (``_entries_df``). Large commits never materialize
   per-file entries on the driver: the sidecar is built as ``parent
-  sidecar ∪ new entries`` by a Spark job, dedupe is a semi-join, table
-  stats aggregate over the sidecar DataFrame — commit metadata scales
-  with the cluster, not one machine. Small commits collect the same
-  task's rows to the driver.
+  sidecar ∪ new entries`` by a Spark job, dedupe is a semi-join —
+  commit metadata scales with the cluster, not one machine. Small
+  commits collect the same task's rows to the driver.
+- Every file-rewriting op (delete_range, the CoW upsert/merge/CDC,
+  overwrite_partitions, compact) splits the files into rewritten and
+  carried-over in ONE planner (``_plan_rewrite``): an Arrow filter over
+  the file inventory, read in the sidecar encoding in either manifest
+  regime, on the driver with no Spark job. Only the rewritten files'
+  (path, seq) stubs become Python objects; a sidecar's carried-over
+  entries are never parsed: the merges, overwrite_partitions and
+  compact anti-join them in Spark, delete_range copies them as stored
+  with Arrow. ``stats()`` and the maintain probe aggregate the same
+  inventory.
 - Multi-writer safe: lock-free optimistic concurrency (see
   table/manifest.py). Every data commit, in either form, goes through
   one compare-and-swap loop (``_commit_entries``) with automatic
@@ -51,7 +60,7 @@ import re
 import shutil
 import time
 from dataclasses import dataclass
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,10 +69,15 @@ from pyspark.sql.types import StructField, StructType
 from iceberg_core_spark.table.manifest import (
     _MANIFEST_DIR,
     CommitConflictError,
+    KeptSidecar,
     Manifest,
     ManifestFile,
     Snapshot,
     _fold_chains,
+    _norm_stat,
+    current_spec_filter,
+    sidecar_encode,
+    sidecar_keep_filter,
     sidecar_stat_cols,
 )
 
@@ -338,8 +352,6 @@ def _entries_df(spark: SparkSession, root: str, rel_paths: list[str],
     it without re-running these tasks."""
     import json as _json
 
-    from iceberg_core_spark.table.manifest import _norm_stat
-
     dtypes = {f.name: f.dataType for f in schema.fields}
     cols = tuple(dict.fromkeys(
         list(stat_cols) + ([key_col] if key_col else [])
@@ -455,6 +467,46 @@ def _parquet_rows(path: str) -> int:
 # files that may have changed, so the caller must re-run it.
 _ON_PARENT = ("append", "add_files", "cdc-mor")
 _REBASES = ("append", "overwrite", "add_files")
+
+
+def _layout(snap: Snapshot) -> tuple:
+    """The layout fields a data commit records for itself; a rebase
+    onto a winner that changed any of them would revert it."""
+    return (snap.partition_col, snap.key_col, snap.stat_cols,
+            snap.zorder_by, snap.bucket_col, snap.n_buckets)
+
+
+def _partition_groups(inv):
+    """Per-partition rollup of a file inventory (``IceTable._inventory``)
+    keyed by the normalized partition value ``partition_n``:
+    ``count_all`` files, plus ``rows_sum``/``bytes_sum`` when the
+    inventory carries those columns. compact's victim rule, the
+    maintain probe and ``stats()`` all read it."""
+    return inv.group_by("partition_n").aggregate(
+        [([], "count_all")] + [(c, "sum") for c in ("rows", "bytes")
+                               if c in inv.column_names])
+
+
+class _Rewrite(NamedTuple):
+    """An affected/keep split (``IceTable._plan_rewrite``)."""
+
+    victims: list[ManifestFile]  # (path, seq) stubs of rewritten files
+    keep: list[ManifestFile] | KeptSidecar  # carried-over files
+    preds: list[dict]  # MoR predicates that still hide kept rows
+
+
+def _partition_values(parts, inv):
+    """The partition VALUES ``parts`` in the normalized encoding of the
+    inventory's ``partition_n`` column, as an Arrow array of its type;
+    None when that type cannot hold them."""
+    import pyarrow as pa
+
+    try:
+        return pa.array([_norm_stat(p) for p in parts]).cast(
+            inv.schema.field("partition_n").type)
+    except (pa.ArrowInvalid, pa.ArrowNotImplementedError,
+            pa.ArrowTypeError):
+        return None
 
 
 class IceTable:
@@ -611,7 +663,7 @@ class IceTable:
             )
 
     def overwrite(self, df: DataFrame, max_rows_per_file: int = 1_000_000) -> Snapshot:
-        snap = self.manifest.load()
+        snap = self.manifest.load(load_files=False)
         self._require_no_staged(snap, "overwrite")
         return self._write_commit(df, "overwrite", snap.partition_col,
                                   snap.key_col, max_rows_per_file,
@@ -625,7 +677,7 @@ class IceTable:
         partition_col: str | None,
         key_col: str | None,
         max_rows_per_file: int,
-        base_files: list[ManifestFile],
+        base_files: list[ManifestFile] | KeptSidecar,
         dedupe_identical_files: bool = False,
         delete_predicates: list[dict] | None = None,
         stat_cols: list[str] | None = None,
@@ -663,7 +715,8 @@ class IceTable:
         ``base_files_df``: carried-over entries as a sidecar-schema
         DataFrame (e.g. compaction survivors = parent sidecar anti-join
         victims) — forces the Spark form; entries never materialize on
-        the driver."""
+        the driver. ``base_files`` may instead be a ``KeptSidecar``
+        for the driver form (see ``_commit_entries``)."""
         # inherit stats/clustering/bucket config from the current snapshot
         if stat_cols is None or zorder_by is None or bucket_by is None:
             cur = self.manifest.current_snapshot_id()
@@ -824,7 +877,7 @@ class IceTable:
         new: list[ManifestFile] | DataFrame,
         fields: dict,
         commit_dir: str,
-        base: list[ManifestFile] | DataFrame | None = None,
+        base: list[ManifestFile] | KeptSidecar | DataFrame | None = None,
         dedupe: bool = False,
         branch: str | None = None,
     ) -> Snapshot:
@@ -835,7 +888,11 @@ class IceTable:
         ``Manifest.commit`` to a driver-written sidecar above
         ``inline_max``), or the Spark entries frame of ``_entries_df``
         (the new sidecar is ``base ∪ new`` written by a Spark job, so no
-        entry materializes on the driver).
+        entry materializes on the driver). A driver-form ``base`` may be
+        a ``KeptSidecar``: above ``inline_max`` its rows are copied as
+        stored into a driver-written sidecar with the new entries
+        (``Manifest.write_kept_sidecar``); below it they are parsed and
+        the commit lands inline.
 
         Every attempt is the ``child()`` of the snapshot it lands on —
         ``based_on`` first, then each winner — with ``fields``
@@ -850,10 +907,13 @@ class IceTable:
         reference's idempotent re-write, block.go:109-115).
 
         A lost race rebases ``_REBASES`` operations when the winner's
-        schema is canonically equivalent to ``based_on``'s; otherwise
-        ``commit_dir`` (which holds exactly the new files) is deleted
-        and CommitConflictError propagates. ``based_on`` must carry its
-        file list when the driver form builds on it."""
+        schema is canonically equivalent to ``based_on``'s, its layout
+        (``_layout``: partition, key, stat, z-order and bucket columns)
+        is the same, and — for an overwrite — it has no staged
+        branches; otherwise ``commit_dir`` (which holds exactly the new
+        files) is deleted and CommitConflictError propagates.
+        ``based_on`` must carry its file list when the driver form
+        builds on it."""
         man = self.manifest
         spark_form = isinstance(new, DataFrame)
         parent = based_on
@@ -883,23 +943,45 @@ class IceTable:
                     new = [f for f in new if f.content_hash not in seen]
                 for f in new:
                     f.seq = sid  # data sequence number = adding snapshot
-                snap.files = list(base_files) + new
                 snap.files_ref = snap.files_count = None
+                if (isinstance(base_files, KeptSidecar)
+                        and len(base_files) + len(new) > man.inline_max):
+                    snap.files_ref = (f"files-{sid}-"
+                                      f"{os.urandom(4).hex()}.parquet")
+                    snap.files_count = man.write_kept_sidecar(
+                        base_files, new,
+                        sidecar_stat_cols(snap.stat_cols, snap.renames),
+                        snap.files_ref)
+                    snap.files = []
+                else:
+                    if isinstance(base_files, KeptSidecar):
+                        # lands inline: at most inline_max entries parsed
+                        base_files = man._read_files_sidecar(
+                            base_files.files_ref, base_files.prune)
+                    snap.files = list(base_files) + new
             try:
                 man.commit(snap)
                 return snap
             except CommitConflictError:
-                if spark_form:
+                if snap.files_ref and not snap.files:
                     man.remove_sidecar(snap.files_ref)
                 if operation in _REBASES:
                     winner = man.load(load_files=not spark_form
                                       and operation in _ON_PARENT)
-                    if based_on is None or _schemas_equivalent(
-                            winner.schema_json, based_on.schema_json):
+                    # an overwrite drops every file, so it cannot land
+                    # on a winner's staged branches (the same rule
+                    # _require_no_staged applies when the op starts)
+                    if based_on is None or (
+                            _schemas_equivalent(winner.schema_json,
+                                                based_on.schema_json)
+                            and _layout(winner) == _layout(based_on)
+                            and (operation in _ON_PARENT
+                                 or not winner.staged)):
                         parent = winner
                         continue
-                # no safe rebase (read-modify-write op, or a concurrent
-                # schema change): the caller re-runs
+                # no safe rebase (read-modify-write op, a concurrent
+                # schema or layout change, or an overwrite onto staged
+                # branches): the caller re-runs
                 shutil.rmtree(commit_dir, ignore_errors=True)
                 raise
 
@@ -918,8 +1000,7 @@ class IceTable:
         if isinstance(carried, DataFrame):
             base_df = carried
         elif isinstance(carried, Snapshot) and carried.files_ref:
-            base_df = self.spark.read.parquet(
-                man.sidecar_path(carried.files_ref))
+            base_df = self._sidecar_df(carried.files_ref)
         else:
             base_list = (carried.files if isinstance(carried, Snapshot)
                          else carried or [])
@@ -932,7 +1013,7 @@ class IceTable:
                 man._write_files_sidecar(
                     base_list,
                     sidecar_stat_cols(snap.stat_cols, snap.renames), tmp)
-                base_df = self.spark.read.parquet(man.sidecar_path(tmp))
+                base_df = self._sidecar_df(tmp)
         try:
             if dedupe and base_df is not None:
                 bh = base_df.select(
@@ -954,7 +1035,15 @@ class IceTable:
                 # base tracks smin_<old> while new entries track
                 # smin_<new>; each file's stats live under its
                 # then-physical name (NULL elsewhere) and pruning
-                # coalesces over the alias chain
+                # coalesces over the alias chain. A column that is text
+                # on one side only becomes text on both, as
+                # sidecar_encode keeps values of several types
+                bt, nt = dict(base_df.dtypes), dict(out.dtypes)
+                for c in bt.keys() & nt.keys():
+                    if bt[c] != nt[c] and "string" in (bt[c], nt[c]):
+                        text = F.col(c).cast("string")
+                        base_df = base_df.withColumn(c, text)
+                        out = out.withColumn(c, text)
                 out = base_df.unionByName(out, allowMissingColumns=True)
             ref = f"files-{snap.snapshot_id}-{os.urandom(4).hex()}.parquet"
             out.write.parquet(man.sidecar_path(ref))
@@ -993,13 +1082,8 @@ class IceTable:
             snapshot_id = self.resolve_ref(ref)
         snap = self.manifest.load(snapshot_id, load_files=False)
         if snap.files_ref:
-            files = [
-                ManifestFile(path=p, partition=None, key_min=None,
-                             key_max=None, rows=0, bytes=0,
-                             content_hash="", seq=s)
-                for p, s in self.manifest.read_sidecar_path_seq(
-                    snap.files_ref)
-            ]
+            files = [ManifestFile.stub(p, s) for p, s in
+                     self.manifest.read_sidecar_path_seq(snap.files_ref)]
             return self._read_with_deletes(files, snap, snapshot_id,
                                            branch=branch)
         return self._read_with_deletes(snap.files, snap, snapshot_id,
@@ -1121,9 +1205,7 @@ class IceTable:
         # poorly on a huge table should raise driver memory or tighten
         # the predicate — the pruned-out majority never materializes.
         return [
-            ManifestFile(path=p, partition=None, key_min=None,
-                         key_max=None, rows=0, bytes=0, content_hash="",
-                         seq=s)
+            ManifestFile.stub(p, s)
             for p, s in self.manifest.read_sidecar_pruned(
                 snap, partition=partition, lo=lo, hi=hi, ranges=ranges)
         ]
@@ -1344,9 +1426,8 @@ class IceTable:
         if cur.files_ref or base.files_ref:
             def side(snap):
                 if snap.files_ref:
-                    return self.spark.read.parquet(
-                        self.manifest.sidecar_path(snap.files_ref)
-                    ).select("path", "seq")
+                    return self._sidecar_df(snap.files_ref).select(
+                        "path", "seq")
                 rows = [(f.path, f.seq) for f in snap.files]
                 return self.spark.createDataFrame(
                     rows or [("", 0)], "path string, seq long"
@@ -1361,12 +1442,8 @@ class IceTable:
                     ~F.col("seq").isin(*[int(x) for x in base_hidden]))
             added_df = side(cur).join(
                 base_df.select("path"), "path", "left_anti")
-            added = [
-                ManifestFile(path=r.path, partition=None, key_min=None,
-                             key_max=None, rows=0, bytes=0, content_hash="",
-                             seq=r.seq if r.seq is not None else 0)
-                for r in added_df.collect()
-            ]
+            added = [ManifestFile.stub(r.path, r.seq or 0)
+                     for r in added_df.collect()]
         else:
             base_paths = {f.path for f in base.files
                           if f.seq not in base_hidden}
@@ -1424,11 +1501,7 @@ class IceTable:
             return {f.path: f.seq for f in full.files
                     if f.seq not in hid}
 
-        def stub(path: str, seq: int) -> ManifestFile:
-            return ManifestFile(path=path, partition=None, key_min=None,
-                                key_max=None, rows=0, bytes=0,
-                                content_hash="", seq=seq)
-
+        stub = ManifestFile.stub
         cur_e, base_e = entries(cur), entries(base)
         added = [stub(p, s) for p, s in cur_e.items() if p not in base_e]
         removed = [stub(p, s) for p, s in base_e.items()
@@ -1606,16 +1679,13 @@ class IceTable:
         still merges each partition into one row. An unpartitioned
         table reports one NULL-partition row (null-safe join).
         """
-        from iceberg_core_spark.table.manifest import _norm_stat
-
         cur = self.manifest.load(until, load_files=False)
         base = self.manifest.load(since, load_files=False)
 
         def side(snap) -> DataFrame:
             hid = _hidden_seqs(snap, None)
             if snap.files_ref:
-                mdf = self.spark.read.parquet(
-                    self.manifest.sidecar_path(snap.files_ref))
+                mdf = self._sidecar_df(snap.files_ref)
                 if hid:
                     mdf = mdf.filter(
                         ~F.col("seq").isin(*[int(x) for x in hid]))
@@ -1784,8 +1854,8 @@ class IceTable:
 
         Bucketed tables refuse: arbitrary external files cannot
         satisfy a recorded bucket layout. Driver note: the commit
-        materializes the parent file list (same ceiling as
-        delete_range); the added entries themselves are bounded by the
+        materializes the parent file list (for the content-hash
+        dedupe); the added entries themselves are bounded by the
         migration size."""
         snap = self.manifest.load()
         self._require_no_staged(snap, "add_files")
@@ -1865,40 +1935,122 @@ class IceTable:
     # ------------------------------------------------------------------
     # row-level changes (copy-on-write, Iceberg CoW semantics)
     # ------------------------------------------------------------------
+    def _sidecar_df(self, files_ref: str) -> DataFrame:
+        """A files sidecar as a Spark DataFrame, read with the schema its
+        Parquet footer declares — no schema-inference job."""
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        path = self.manifest.sidecar_path(files_ref)
+        schema = ds.dataset(path, format="parquet").schema
+        return self.spark.read.schema(from_arrow_schema(schema)).parquet(path)
+
+    def _inventory(self, snap: Snapshot, columns: list[str]):
+        """The snapshot's file inventory as Arrow columns of the sidecar
+        encoding, in either manifest regime: a sidecar-backed list is
+        the streamed column-projected sidecar read, an inline list goes
+        through the encoder the sidecar writer uses
+        (``sidecar_encode``). No Spark job, no entry_json parse."""
+        if snap.files_ref:
+            return self.manifest.sidecar_table(snap.files_ref, columns)
+        return sidecar_encode(snap.files, [], with_entries=False
+                              ).select(columns)
+
+    def _plan_rewrite(self, snap: Snapshot, mask) -> _Rewrite:
+        """The one affected/keep split of every file-rewriting op
+        (delete_range, the CoW merges, overwrite_partitions, compact),
+        in both manifest regimes, on the driver and without a Spark job.
+
+        ``mask(inventory)`` is the op's Arrow filter over the inventory
+        columns (path, seq, partition_n, key_min_n, key_max_n), true for
+        the files the op rewrites or drops; a None mask, or a mask that
+        returns None, means every file. Only those files become Python
+        objects, as (path, seq) ``victims``.
+        ``keep`` is every other file: the parent's entries minus the
+        victims (inline), or the parent sidecar minus the victim paths
+        (sidecar, a ``KeptSidecar``), so no sidecar entry reaches the
+        driver. ``preds`` are the MoR predicates that survive: those
+        some kept file still predates (seq scoping; rewritten files get
+        a fresh seq and are out)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        inv = self._inventory(
+            snap, ["path", "seq", "partition_n", "key_min_n", "key_max_n"])
+        cond = None if mask is None else mask(inv)
+        hit = inv if cond is None else inv.filter(cond)
+        paths = hit["path"].to_pylist()
+        victims = [ManifestFile.stub(p, s)
+                   for p, s in zip(paths, hit["seq"].to_pylist())]
+        # a NULL verdict keeps the file, as the anti-join on the victim
+        # paths does
+        kept = inv.slice(0, 0) if cond is None else inv.filter(
+            ~pc.field("path").isin(pa.array(paths, pa.string())))
+        min_kept = pc.min(kept["seq"]).as_py()
+        preds = [p for p in snap.delete_predicates
+                 if min_kept is not None and p["seq"] > min_kept]
+        if snap.files_ref:
+            keep = KeptSidecar(snap.files_ref, paths, len(kept))
+        else:
+            gone = set(paths)
+            keep = [f for f in snap.files if f.path not in gone]
+        return _Rewrite(victims, keep, preds)
+
+    def _commit_rewrite(self, df: DataFrame, operation: str, snap: Snapshot,
+                        plan: _Rewrite, max_rows_per_file: int = 1_000_000,
+                        **kw) -> Snapshot:
+        """Commit ``df``'s rows as ``operation`` on ``snap``, carrying
+        over ``plan.keep`` with ``plan.preds``: on a sidecar-backed
+        table in the Spark commit form, as the parent sidecar frame
+        anti-joined on the victim paths."""
+        keep, keep_df = plan.keep, None
+        if isinstance(keep, KeptSidecar):
+            import pyarrow as pa
+
+            keep_df = self._sidecar_df(keep.files_ref)
+            if not keep.n:
+                keep_df = keep_df.limit(0)  # full rewrite, nothing kept
+            elif keep.drop:
+                # an Arrow-built local relation: no per-row pickling,
+                # and the broadcast side needs no job of its own. Built
+                # from one array: createDataFrame drops rows of a
+                # multi-chunk table (seen on Spark 4.1)
+                keep_df = keep_df.join(self.spark.createDataFrame(
+                    pa.table({"path": pa.array(keep.drop, pa.string())})),
+                    "path", "left_anti")
+            keep = []
+        return self._write_commit(
+            df, operation, snap.partition_col, snap.key_col,
+            max_rows_per_file, base_files=keep, base_files_df=keep_df,
+            delete_predicates=plan.preds,
+            expected_parent=snap.snapshot_id, **kw)
+
     def delete_range(self, partition: Any = None, lo: Any = None,
                      hi: Any = None) -> Snapshot:
-        """Targeted copy-on-write delete of a partition/key range: only
-        files whose stats overlap the range are rewritten (minus the
-        deleted rows); all other files carry over untouched — the same
-        file-pruning logic the read path uses, applied to writes.
+        """Targeted copy-on-write delete of a partition/key range: the
+        files ``query(partition, lo, hi)`` would read are rewritten
+        (minus the deleted rows) and all other files carry over
+        untouched — the read path's own conservative pruning filter
+        (``sidecar_keep_filter``) is the rewrite planner's mask.
+        Older-spec files cannot be cleared by their recorded partition
+        value, so they are rewritten; the retained-rows filter keeps
+        their non-matching rows.
 
         Scale note: this is Iceberg copy-on-write; at heavy delete
         rates the merge-on-read paths amortize better —
         ``delete_where(mode="mor")`` for predicates,
         ``apply_cdc(mode="mor")`` for keyed change streams.
         """
-        snap = self.manifest.load()
+        snap = self.manifest.load(load_files=False)
         self._require_no_staged(snap, "delete_range")
-        affected, keep = [], []
-        for f in snap.files:
-            hit = True
-            # only a file written under the CURRENT spec can be cleared
-            # by its recorded partition value; older-spec files are
-            # conservatively rewritten (the retained-rows filter keeps
-            # their non-matching rows byte-exact)
-            if partition is not None and snap.partition_col and \
-                    snap.spec_col_for(f.seq) == snap.partition_col and \
-                    not f.may_hold_partition(partition):
-                hit = False
-            if hit and snap.key_col and not f.overlaps(lo, hi):
-                hit = False
-            (affected if hit else keep).append(f)
-        if not affected:
+        plan = self._plan_rewrite(snap, lambda inv: sidecar_keep_filter(
+            inv.schema, snap, partition, lo, hi)[0])
+        if not plan.victims:
             return snap
 
         # apply any outstanding MoR predicates to the files being
         # rewritten; they remain only for the untouched (kept) files
-        retained = self._read_with_deletes(affected, snap)
+        retained = self._read_with_deletes(plan.victims, snap)
         cond = F.lit(True)
         if partition is not None and snap.partition_col:
             cond = cond & (F.col(snap.partition_col) == F.lit(partition))
@@ -1907,16 +2059,12 @@ class IceTable:
                 cond = cond & (F.col(snap.key_col) >= F.lit(lo))
             if hi is not None:
                 cond = cond & (F.col(snap.key_col) <= F.lit(hi))
-        retained = retained.filter(_not_true(cond))
-        # predicates survive only while some kept file still predates
-        # them (seq scoping); rewritten files get a fresh seq and are out
-        remaining_preds = [
-            p for p in snap.delete_predicates
-            if any(f.seq < p["seq"] for f in keep)
-        ]
-        return self._write_commit(retained, "delete", snap.partition_col,
-                                  snap.key_col, 1_000_000, base_files=keep,
-                                  delete_predicates=remaining_preds,
+        # the driver commit form: on a sidecar-backed table the kept
+        # rows are copied as stored (Manifest.write_kept_sidecar)
+        return self._write_commit(retained.filter(_not_true(cond)),
+                                  "delete", snap.partition_col, snap.key_col,
+                                  1_000_000, base_files=plan.keep,
+                                  delete_predicates=plan.preds,
                                   expected_parent=snap.snapshot_id)
 
     def delete_where(self, condition, mode: str = "cow") -> Snapshot:
@@ -1961,7 +2109,7 @@ class IceTable:
             )
             self.manifest.commit(new)
             return new
-        snap = self.manifest.load()
+        snap = self.manifest.load(load_files=False)
         self._require_no_staged(snap, "delete_where")
         cond = F.expr(condition) if isinstance(condition, str) else condition
         retained = self.scan().filter(_not_true(cond))
@@ -2010,10 +2158,11 @@ class IceTable:
         Partition-scoped rewrite: when the table's partition column is
         one of ``key_cols`` (so a key can never change partitions), only
         files in the partitions the batch actually touches are rewritten
-        — every other file carries over byte-identical, delete_range's
-        affected/keep split applied to MERGE. That is what makes
-        per-micro-batch streaming upserts viable at 100 TB: cost scales
-        with the touched partitions, not the table. Without the
+        — every other file carries over byte-identical, the rewrite
+        planner's affected/keep split (``_plan_rewrite``) applied to
+        MERGE. That is what makes per-micro-batch streaming upserts
+        viable at 100 TB: cost scales with the touched partitions, not
+        the table. Without the
         partition column in the keys, the merge falls back to a full
         rewrite (a moved key's old row could hide in any file).
 
@@ -2065,9 +2214,12 @@ class IceTable:
         over byte-identical — the daily-partition-reload primitive. On
         an unpartitioned table this is a plain overwrite.
 
-        Same distributed affected/keep split as the CoW merge (sidecar
-        tables stay off the driver); MoR predicates survive only for
-        kept files that predate them."""
+        The rewrite planner's split with exact partition membership:
+        the replaced partitions' files are dropped unread, so a file
+        with a NULL partition (unaddressable here) is always kept. MoR
+        predicates survive only for kept files that predate them."""
+        import pyarrow.compute as pc
+
         snap = self.manifest.load(load_files=False)
         self._require_no_staged(snap, "overwrite-partitions")
         part_col = snap.partition_col
@@ -2078,10 +2230,12 @@ class IceTable:
                 source_lineage=source_lineage,
                 expected_parent=snap.snapshot_id)
         parts = {r[0] for r in df.select(part_col).distinct().collect()}
-        if None in parts:
+        if any(_norm_stat(p) is None for p in parts):
+            # NULL, or a decimal: no manifest records a decimal
+            # partition (its entry JSON cannot encode one)
             raise ValueError(
-                "overwrite_partitions: NULL partition values in the "
-                "incoming frame cannot address a partition")
+                "overwrite_partitions: NULL or decimal partition values "
+                "in the incoming frame cannot address a partition")
         if snap.partition_specs:
             # files written under an older spec scatter any partition's
             # rows across arbitrary files — neither keeping nor dropping
@@ -2089,58 +2243,18 @@ class IceTable:
             raise ValueError(
                 "overwrite_partitions needs a uniform partition spec; "
                 "compact() the pre-evolution files first")
-        if snap.files_ref:
-            from iceberg_core_spark.table.manifest import _norm_stat
 
-            norm = {_norm_stat(p) for p in parts}
-            if None not in norm:
-                mdf = self.spark.read.parquet(
-                    self.manifest.sidecar_path(snap.files_ref))
-                # NULL partition_n files are KEPT: a NULL partition
-                # value is representable (rows under
-                # __HIVE_DEFAULT_PARTITION__) but never addressable
-                # here (NULL parts raise above), so dropping those
-                # files — as the isNotNull() keep condition did —
-                # silently lost their rows (r13 DML review). Every
-                # ADDRESSED value normalizes non-None (guarded
-                # above), so NULL partition_n provably belongs to an
-                # unaddressed partition.
-                keep_df = mdf.filter(
-                    F.col("partition_n").isNull()
-                    | ~F.col("partition_n").isin(*norm))
-                min_seq = keep_df.agg(
-                    F.min(F.coalesce(F.col("seq"), F.lit(0)))).first()[0]
-                remaining = [] if min_seq is None else [
-                    p for p in snap.delete_predicates
-                    if min_seq < p["seq"]
-                ]
-                return self._write_commit(
-                    df, "overwrite-partitions", part_col, snap.key_col,
-                    1_000_000, base_files=[],
-                    delete_predicates=remaining,
-                    source_batch_id=source_batch_id,
-                    source_lineage=source_lineage,
-                    expected_parent=snap.snapshot_id,
-                    base_files_df=keep_df)
-            snap = self.manifest.load()  # rare encoding: driver split
-        str_parts = {str(p) for p in parts}
-        keep = [
-            f for f in snap.files
-            # NULL-partition files are unaddressable here (NULL parts
-            # raise above) — keep them, never drop (r13 DML review)
-            if f.partition is None
-            or str(f.partition) not in str_parts
-        ]
-        remaining = [
-            p for p in snap.delete_predicates
-            if any(f.seq < p["seq"] for f in keep)
-        ]
-        return self._write_commit(
-            df, "overwrite-partitions", part_col, snap.key_col,
-            1_000_000, base_files=keep, delete_predicates=remaining,
-            source_batch_id=source_batch_id,
-            source_lineage=source_lineage,
-            expected_parent=snap.snapshot_id)
+        def mask(inv):
+            # exact membership: a NULL partition, or a column type that
+            # cannot hold the values, addresses no file
+            vals = _partition_values(parts, inv)
+            return (pc.scalar(False) if vals is None
+                    else pc.field("partition_n").isin(vals))
+
+        plan = self._plan_rewrite(snap, mask)
+        return self._commit_rewrite(
+            df, "overwrite-partitions", snap, plan,
+            source_batch_id=source_batch_id, source_lineage=source_lineage)
 
     def merge(self, source: DataFrame, key_cols: list[str],
               when_matched: list[dict] | None = None,
@@ -2391,99 +2505,48 @@ class IceTable:
                    source_lineage: str | None) -> Snapshot:
         """Shared CoW merge: remove ``all_keys`` from the affected file
         set, union ``upserts`` back in, carry unaffected files over
-        untouched. MoR predicates are materialized into the rewritten
-        files and survive only for kept files that still predate them
-        (delete_range's seq-scoping rule).
+        untouched. When the partition column is a merge key, the rewrite
+        planner's mask is conservative membership in the batch's
+        partitions (older-spec files, by seq range, are always
+        affected); otherwise every file is. MoR predicates are
+        materialized into the rewritten files and survive only for kept
+        files that still predate them. Only the affected files' (path,
+        seq) stubs reach the driver in either manifest regime — a merge
+        into one partition of a 1M-file table plans a partition's worth
+        of stubs, not a million entries."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-        Sidecar-backed tables run the affected/keep split as a
-        DataFrame predicate over the sidecar (compact's discipline):
-        only the affected files' (path, seq) stubs reach the driver —
-        a merge into one partition of a 1M-file table plans a
-        partition's worth of stubs, not a million entries."""
         snap = self.manifest.load(load_files=False)  # sidecar stays lazy
         self._require_no_staged(snap, operation)
-        part_col = snap.partition_col
+        mask = None
+        if snap.partition_col and snap.partition_col in key_cols:
+            parts = {r[0] for r in all_keys.select(snap.partition_col)
+                     .distinct().collect()}
+            cur = current_spec_filter(snap)
 
-        def batch_parts():
-            if not (part_col and part_col in key_cols):
-                return None
-            got = {r[0] for r in
-                   all_keys.select(part_col).distinct().collect()}
-            return None if None in got else got
+            def mask(inv):
+                # conservative membership: a file is kept only when its
+                # partition provably is none of the batch's. Every file
+                # is hit when the column cannot hold the values, when a
+                # value has no normalized form (NULL, decimal), or when
+                # non-text values meet a text column (values of several
+                # types, see sidecar_encode)
+                vals = _partition_values(parts, inv)
+                if vals is None or vals.null_count or (
+                        pa.types.is_string(vals.type)
+                        and not all(isinstance(p, str) for p in parts)):
+                    return None
+                hit = (pc.field("partition_n").isin(vals)
+                       | pc.field("partition_n").is_null())
+                return hit if cur is None else hit | ~cur
 
-        if snap.files_ref:
-            from iceberg_core_spark.table.manifest import _norm_stat
-
-            mdf = self.spark.read.parquet(
-                self.manifest.sidecar_path(snap.files_ref))
-            affected_df, keep_df = mdf, None
-            # spec history means older files' recorded partition_n is a
-            # DIFFERENT column's value — scope only on a uniform spec
-            parts = batch_parts() if not snap.partition_specs else None
-            if parts is not None:
-                norm = {_norm_stat(p) for p in parts}
-                if None not in norm:
-                    miss = (F.col("partition_n").isNotNull()
-                            & ~F.col("partition_n").isin(*norm))
-                    affected_df = mdf.filter(~miss)
-                    keep_df = mdf.filter(miss)
-            victims = [
-                ManifestFile(path=r.path, partition=None, key_min=None,
-                             key_max=None, rows=0, bytes=0,
-                             content_hash="",
-                             seq=r.seq if r.seq is not None else 0)
-                for r in affected_df.select("path", "seq").collect()
-            ]
-            existing = self._read_with_deletes(victims, snap).join(
-                all_keys, key_cols, "left_anti")
-            merged = existing.unionByName(upserts)
-            if keep_df is None:
-                keep_df = mdf.limit(0)  # full rewrite, nothing kept
-                remaining = []
-            else:
-                min_seq = keep_df.agg(
-                    F.min(F.coalesce(F.col("seq"), F.lit(0)))).first()[0]
-                remaining = [] if min_seq is None else [
-                    p for p in snap.delete_predicates
-                    if min_seq < p["seq"]
-                ]
-            return self._write_commit(
-                merged, operation, snap.partition_col, snap.key_col,
-                1_000_000, base_files=[], delete_predicates=remaining,
-                source_batch_id=source_batch_id,
-                source_lineage=source_lineage,
-                expected_parent=snap.snapshot_id, base_files_df=keep_df)
-
-        affected, keep = list(snap.files), []
-        parts = batch_parts()
-        if parts is not None:
-            str_parts = {str(p) for p in parts}
-            affected, keep = [], []
-            for f in snap.files:
-                # current-spec files scope exactly by recorded
-                # partition value; older-spec files rewrite
-                # conservatively (their non-matching rows survive
-                # the anti-join byte-equal, just re-encoded)
-                if (snap.spec_col_for(f.seq) == part_col
-                        and f.partition is not None
-                        and str(f.partition) not in str_parts):
-                    keep.append(f)
-                else:
-                    affected.append(f)
-        existing = self._read_with_deletes(affected, snap).join(
+        plan = self._plan_rewrite(snap, mask)
+        existing = self._read_with_deletes(plan.victims, snap).join(
             all_keys, key_cols, "left_anti")
-        merged = existing.unionByName(upserts)
-        remaining_preds = [
-            p for p in snap.delete_predicates
-            if any(f.seq < p["seq"] for f in keep)
-        ]
-        return self._write_commit(merged, operation, snap.partition_col,
-                                  snap.key_col, 1_000_000,
-                                  base_files=keep,
-                                  delete_predicates=remaining_preds,
-                                  source_batch_id=source_batch_id,
-                                  source_lineage=source_lineage,
-                                  expected_parent=snap.snapshot_id)
+        return self._commit_rewrite(
+            existing.unionByName(upserts), operation, snap, plan,
+            source_batch_id=source_batch_id, source_lineage=source_lineage)
 
     # ------------------------------------------------------------------
     # maintenance
@@ -2494,75 +2557,40 @@ class IceTable:
 
         Partitions holding >= ``min_files`` files are re-read, re-sorted
         and rewritten as full-size files; untouched partitions keep their
-        files byte-identical. One new snapshot swaps the entries.
+        files byte-identical. One new snapshot swaps the entries. Any
+        file that predates an MoR delete predicate is rewritten too, so
+        compaction always rewrites outstanding deletes away.
 
-        Sidecar-backed tables stay metadata-distributed end to end:
-        victim selection is a window count over the sidecar DataFrame,
-        only victim (path, seq) pairs reach the driver (the reader needs
-        the paths), and the survivor entries flow into the new sidecar
-        as a DataFrame anti-join via the distributed commit — per-file
-        entries never materialize on the driver.
+        Victims come from the rewrite planner (``_plan_rewrite``) over
+        the per-partition file counts (``_partition_groups``), on the
+        driver without a Spark job in either manifest regime: only
+        victim (path, seq) stubs materialize (the reader needs the
+        paths), and on a sidecar-backed table the survivors flow into
+        the new sidecar as a DataFrame anti-join.
         """
+        import pyarrow.compute as pc
+
         snap = self.manifest.load(load_files=False)
         self._require_no_staged(snap, "compact")
         max_del_seq = max(
             (p["seq"] for p in snap.delete_predicates), default=None
         )
-        if snap.files_ref:
-            from pyspark.sql import Window
 
-            mdf = self.spark.read.parquet(
-                self.manifest.sidecar_path(snap.files_ref))
-            n_in_part = F.count(F.lit(1)).over(
-                Window.partitionBy("partition_n"))
-            cond = n_in_part >= F.lit(min_files)
-            # any file carrying MoR deletes (seq predates a predicate)
-            # is compacted too, so compaction always rewrites
-            # outstanding deletes away
+        def mask(inv):
+            groups = _partition_groups(inv)
+            big = groups.filter(pc.field("count_all") >= min_files)
+            hit = pc.field("partition_n").isin(
+                big["partition_n"].combine_chunks())
             if max_del_seq is not None:
-                cond = cond | (F.col("seq") < F.lit(max_del_seq))
-            victims_df = mdf.withColumn("__victim", cond) \
-                .filter("__victim").select("path", "seq")
-            victims = [
-                ManifestFile(path=r.path, partition=None, key_min=None,
-                             key_max=None, rows=0, bytes=0,
-                             content_hash="",
-                             seq=r.seq if r.seq is not None else 0)
-                for r in victims_df.collect()
-            ]
-            if not victims:
-                return snap
-            keep_df = mdf.join(victims_df.select("path"), "path",
-                               "left_anti")
-            df = self._read_with_deletes(victims, snap)
-            return self._write_commit(
-                df, "compact", snap.partition_col, snap.key_col,
-                target_rows_per_file, base_files=[],
-                expected_parent=snap.snapshot_id,
-                base_files_df=keep_df,
-            )
+                hit = hit | (pc.field("seq") < max_del_seq)
+            return hit
 
-        snap = self.manifest.load()
-        by_part: dict[Any, list[ManifestFile]] = {}
-        for f in snap.files:
-            by_part.setdefault(f.partition, []).append(f)
-        victims = {f.path: f for fs in by_part.values()
-                   if len(fs) >= min_files for f in fs}
-        if max_del_seq is not None:
-            for f in snap.files:
-                if f.seq < max_del_seq:
-                    victims[f.path] = f
-        if not victims:
+        plan = self._plan_rewrite(snap, mask)
+        if not plan.victims:
             return snap
-        keep = [f for f in snap.files if f.path not in victims]
-
-        df = self._read_with_deletes(list(victims.values()), snap)
-        # Reuse the standard write path then splice kept files back in.
-        return self._write_commit(
-            df, "compact", snap.partition_col, snap.key_col,
-            target_rows_per_file, base_files=keep,
-            expected_parent=snap.snapshot_id,
-        )
+        df = self._read_with_deletes(plan.victims, snap)
+        return self._commit_rewrite(df, "compact", snap, plan,
+                                    target_rows_per_file)
 
     def _snapshot_paths(self, snap: Snapshot) -> set[str]:
         """File PATHS of one snapshot without materializing entries:
@@ -2676,21 +2704,14 @@ class IceTable:
         return [s.snapshot_id for s in drop]
 
     def _max_files_per_partition(self, snap) -> int:
-        """Fragmentation probe, metadata-plane only: sidecar-backed
-        tables aggregate the files parquet down to ONE number in a
-        Spark job; inline lists count in Python."""
-        if snap.files_ref:
-            mdf = self.spark.read.parquet(
-                self.manifest.sidecar_path(snap.files_ref))
-            row = (mdf.groupBy("partition_n")
-                   .agg(F.count(F.lit(1)).alias("n"))
-                   .agg(F.max("n")).first())
-            return int(row[0] or 0)
-        full = self.manifest.load()
-        counts: dict[Any, int] = {}
-        for f in full.files:
-            counts[f.partition] = counts.get(f.partition, 0) + 1
-        return max(counts.values(), default=0)
+        """Fragmentation probe, metadata-plane only: the largest file
+        count of ``_partition_groups`` over the partition column of the
+        inventory — one number, on the driver, no Spark job and no
+        entry materialized, in either manifest regime."""
+        import pyarrow.compute as pc
+
+        groups = _partition_groups(self._inventory(snap, ["partition_n"]))
+        return pc.max(groups["count_all"]).as_py() or 0
 
     def maintain(self, policy: "MaintenancePolicy") -> dict:
         """One tick of table maintenance under ``policy``: compact when
@@ -3341,9 +3362,7 @@ class IceTable:
         the hash is extracted from entry_json JVM-side)."""
         snap = self.manifest.load(snapshot_id, load_files=False)
         if snap.files_ref:
-            raw = self.spark.read.parquet(
-                self.manifest.sidecar_path(snap.files_ref))
-            return raw.select(
+            return self._sidecar_df(snap.files_ref).select(
                 F.col("path"),
                 F.col("partition_n").cast("string").alias("partition"),
                 F.col("key_min_n").cast("string").alias("key_min"),
@@ -3354,7 +3373,6 @@ class IceTable:
                 .alias("content_hash"),
                 F.col("seq"),
             )
-        from iceberg_core_spark.table.manifest import _norm_stat
 
         def pstr(v):
             # the sidecar branch stringifies the NORMALIZED stat
@@ -3462,47 +3480,24 @@ class IceTable:
 
     def stats(self) -> dict:
         """Table statistics from the manifest alone (metadata-only, no
-        data I/O): totals plus per-partition file/row/byte breakdown.
-        Sidecar-backed tables aggregate over the files parquet as a
-        DataFrame — entries never materialize on the driver (partition
-        keys are reported in their normalized sidecar encoding, e.g.
-        timestamps as epoch micros)."""
+        data I/O): totals plus per-partition file/row/byte breakdown,
+        from ``_partition_groups`` over the inventory — on the driver,
+        no Spark job, no entry materialized, in either manifest regime.
+        Partition keys are in the normalized sidecar encoding
+        (``_norm_stat``: dates as epoch days, timestamps as epoch
+        micros), as in ``files_df`` and ``diff_stats``."""
         snap = self.manifest.load(load_files=False)
-        if snap.files_ref:
-            mdf = self.spark.read.parquet(
-                self.manifest.sidecar_path(snap.files_ref))
-            rows = mdf.groupBy("partition_n").agg(
-                F.count(F.lit(1)).alias("files"),
-                F.sum("rows").alias("rows"),
-                F.sum("bytes").alias("bytes"),
-            ).collect()
-            return {
-                "snapshot_id": snap.snapshot_id,
-                "operation": snap.operation,
-                "files": sum(r.files for r in rows),
-                "rows": sum(r.rows for r in rows),
-                "bytes": sum(r.bytes for r in rows),
-                "pending_mor_deletes": len(snap.delete_predicates),
-                "partitions": {
-                    r.partition_n: {"files": r.files, "rows": r.rows,
-                                    "bytes": r.bytes}
-                    for r in rows
-                },
-            }
-        per_part: dict = {}
-        for f in snap.files:
-            d = per_part.setdefault(
-                f.partition, {"files": 0, "rows": 0, "bytes": 0}
-            )
-            d["files"] += 1
-            d["rows"] += f.rows
-            d["bytes"] += f.bytes
+        groups = _partition_groups(self._inventory(
+            snap, ["partition_n", "rows", "bytes"])).to_pylist()
+        parts = {g["partition_n"]: {"files": g["count_all"],
+                                    "rows": g["rows_sum"],
+                                    "bytes": g["bytes_sum"]}
+                 for g in groups}
         return {
             "snapshot_id": snap.snapshot_id,
             "operation": snap.operation,
-            "files": len(snap.files),
-            "rows": sum(f.rows for f in snap.files),
-            "bytes": sum(f.bytes for f in snap.files),
+            **{k: sum(d[k] for d in parts.values())
+               for k in ("files", "rows", "bytes")},
             "pending_mor_deletes": len(snap.delete_predicates),
-            "partitions": per_part,
+            "partitions": parts,
         }

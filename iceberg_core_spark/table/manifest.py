@@ -44,11 +44,14 @@ pyarrow scan of the sidecar under an Arrow filter
 (path, seq), and only the SURVIVING (path, seq) stubs are materialized
 (``Manifest.read_sidecar_pruned``, called by ice_table._pruned_files):
 no Spark job plans a query, entry_json is never read, and a 1M-file
-table never parses 1M JSON entries to answer a point query. Small
-tables keep inline JSON for debuggability; the pruning verdicts are
-identical either way — a file is dropped only when a stat PROVES no
-overlap (``partition != p``, ``key_max < lo``, ``key_min > hi``), so
-NULL stats and NaN min/max keep it.
+table never parses 1M JSON entries to answer a point query. The
+rewrite planner (ice_table ``_plan_rewrite``) reads the same stat
+columns, and encodes an inline list on the fly with the sidecar
+writer's own encoder (``sidecar_encode``). Small tables keep inline
+JSON for debuggability; the pruning verdicts are identical either
+way — a file is dropped only when a stat PROVES no overlap
+(``partition != p``, ``key_max < lo``, ``key_min > hi``), so NULL
+stats and NaN min/max keep it.
 """
 
 from __future__ import annotations
@@ -222,29 +225,21 @@ def sidecar_keep_filter(schema, snap: "Snapshot", partition: Any = None,
     prunes = []
     if partition is not None and snap.partition_col:
         other_part = proves(["partition_n"], operator.ne, partition)
-        if not snap.partition_specs:
+        cur_spec = current_spec_filter(snap)
+        if cur_spec is None:
             prunes.append(other_part)
         else:
             # spec evolution: only seq ranges written under the CURRENT
             # column trust partition_n; older-spec files fall back to
-            # the column's min/max stats (or keep). seq NULL reads as 0,
-            # as in the (path, seq) stubs.
+            # the column's min/max stats (or keep)
             older = any_of(outside(stat("smin", snap.partition_col),
                                    stat("smax", snap.partition_col),
                                    partition, partition))
             if other_part is not None or older is not None:
-                seq = pc.coalesce(pc.field("seq"), 0)
-                cur_spec, lo_seq = [], 0
-                for e in snap.partition_specs:
-                    if e["col"] == snap.partition_col:
-                        cur_spec.append(
-                            (seq >= lo_seq) & (seq < e["until_seq"]))
-                    lo_seq = e["until_seq"]
-                cur_spec.append(seq >= lo_seq)
                 used.add("seq")
                 no = pc.scalar(False)
                 prunes.append(pc.if_else(
-                    any_of(cur_spec),
+                    cur_spec,
                     no if other_part is None else other_part,
                     no if older is None else older))
     if snap.key_col:
@@ -255,6 +250,101 @@ def sidecar_keep_filter(schema, snap: "Snapshot", partition: Any = None,
             prunes += outside(key_min, key_max, clo, chi)
     pruned = any_of(prunes)
     return (None if pruned is None else ~pruned), sorted(used)
+
+
+def current_spec_filter(snap: "Snapshot"):
+    """Arrow filter over a files sidecar that is true for the files
+    written under the CURRENT partition column: the seq ranges of
+    ``snap.partition_specs`` (``Snapshot.spec_col_for`` as one
+    expression), with a NULL seq read as 0, as in the (path, seq)
+    stubs. None when the snapshot has no spec history, i.e. every
+    file."""
+    import functools
+    import operator
+
+    import pyarrow.compute as pc
+
+    if not snap.partition_specs:
+        return None
+    seq = pc.coalesce(pc.field("seq"), 0)
+    cur, lo_seq = [], 0
+    for e in snap.partition_specs:
+        if e["col"] == snap.partition_col:
+            cur.append((seq >= lo_seq) & (seq < e["until_seq"]))
+        lo_seq = e["until_seq"]
+    cur.append(seq >= lo_seq)
+    return functools.reduce(operator.or_, cur)
+
+
+def sidecar_encode(fs: list["ManifestFile"], stat_cols: list[str],
+                   with_entries: bool = True):
+    """The files-sidecar encoding of ``fs`` as an Arrow table — the ONE
+    definition of it: one row per file with the pruning stats
+    normalized to orderable types (``_norm_stat``), rows, bytes, the
+    ``stat_cols`` min/max pairs, the full entry as JSON (survivors of
+    a pruning predicate are reconstructed from entry_json alone) and
+    ``seq`` in its own column. ``Manifest`` writes it as a sidecar;
+    ``IceTable`` reads an inline list through it
+    (``with_entries=False`` skips the JSON column) so both manifest
+    regimes answer the same Arrow expressions."""
+    import pyarrow as pa
+
+    def col(vals):
+        if all(v is None for v in vals):
+            return pa.array(vals, type=pa.int64())
+        try:
+            return pa.array(vals)
+        except (pa.ArrowInvalid, pa.ArrowTypeError):
+            # values of several types (partition_n once
+            # set_partition_spec moved to a column of another type):
+            # kept as text, which no bound of another type compares to
+            return pa.array([None if v is None else str(v) for v in vals],
+                            type=pa.string())
+
+    data = {
+        "path": pa.array([f.path for f in fs], type=pa.string()),
+        "partition_n": col([_norm_stat(f.partition) for f in fs]),
+        "key_min_n": col([_norm_stat(f.key_min) for f in fs]),
+        "key_max_n": col([_norm_stat(f.key_max) for f in fs]),
+        "rows": pa.array([f.rows for f in fs], type=pa.int64()),
+        "bytes": pa.array([f.bytes for f in fs], type=pa.int64()),
+    }
+    for c in stat_cols:
+        data[f"smin_{c}"] = col(
+            [_norm_stat(f.col_stats.get(c, (None, None))[0]) for f in fs]
+        )
+        data[f"smax_{c}"] = col(
+            [_norm_stat(f.col_stats.get(c, (None, None))[1]) for f in fs]
+        )
+    if with_entries:
+        data["entry_json"] = pa.array(
+            [json.dumps(f.to_json()) for f in fs], type=pa.string()
+        )
+    data["seq"] = pa.array([f.seq for f in fs], type=pa.int64())
+    return pa.table(data)
+
+
+@dataclass
+class KeptSidecar:
+    """The files a rewrite carries over on a sidecar-backed table: the
+    rows of sidecar ``files_ref`` whose path is not in ``drop``, ``n``
+    of them. ``Manifest.write_kept_sidecar`` copies them as stored;
+    they are parsed only for a commit that lands inline."""
+
+    files_ref: str
+    drop: list[str]
+    n: int
+
+    def __len__(self) -> int:
+        return self.n
+
+    def prune(self, schema=None):
+        """The ``Manifest.sidecar_table`` prune that keeps these rows."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        drop = pa.array(self.drop, type=pa.string())
+        return ~pc.field("path").isin(drop), ["path"]
 
 
 @dataclass
@@ -279,6 +369,13 @@ class ManifestFile:
     # delete scoping is a single integer compare (seq < delete.seq)
     # instead of a per-predicate path list that grows with file count.
     seq: int = 0
+
+    @classmethod
+    def stub(cls, path: str, seq: int) -> "ManifestFile":
+        """A (path, seq) stub: what the read path needs of a file (its
+        location and MoR seq scoping), without the stats."""
+        return cls(path=path, partition=None, key_min=None, key_max=None,
+                   rows=0, bytes=0, content_hash="", seq=seq)
 
     def overlaps(self, lo: Any, hi: Any) -> bool:
         """Inclusive range-overlap test — true min/max on both bounds."""
@@ -587,15 +684,16 @@ class Manifest:
     def sidecar_path(self, files_ref: str) -> str:
         return os.path.join(self.dir, files_ref)
 
-    def _sidecar_columns(self, files_ref: str, columns: list[str],
-                         prune=None) -> list[list]:
-        """Column-projected sidecar read with the seq None->0
-        normalization — the ONE copy of the pattern every read path
-        shares (scan, incremental feed, pruned query), so a
-        layout/seq-semantics change cannot drift one from another.
-        Works on both layouts (the driver's single file, a Spark
-        commit's ``part-*`` directory, whose ``_SUCCESS``/``.crc`` the
-        dataset's default ignore prefixes skip).
+    def sidecar_table(self, files_ref: str, columns: list[str],
+                      prune=None):
+        """Column-projected sidecar read as an Arrow table, with the
+        seq None->0 normalization — the ONE copy of the pattern every
+        read path shares (scan, incremental feed, pruned query, the
+        rewrite planner), so a layout/seq-semantics change cannot drift
+        one from another. Works on both layouts (the driver's single
+        file, a Spark commit's ``part-*`` directory, whose
+        ``_SUCCESS``/``.crc`` the dataset's default ignore prefixes
+        skip).
 
         ``prune(schema) -> (filter, filter_columns)`` keeps only the
         rows the Arrow filter passes; only they are ever materialized.
@@ -604,6 +702,7 @@ class Manifest:
         Arrow's row-group pruning takes them as a complete bound, so a
         pushed-down ``key_max_n < lo`` would drop a row group holding
         a NaN key_max the filter itself keeps."""
+        import pyarrow.compute as pc
         import pyarrow.dataset as ds
 
         src = ds.dataset(self.sidecar_path(files_ref), format="parquet")
@@ -612,15 +711,21 @@ class Manifest:
             columns=list(dict.fromkeys(columns + keep_cols))).to_reader()
         tbl = ds.Scanner.from_batches(batches, columns=columns,
                                       filter=keep).to_table()
-        out = [tbl[c].to_pylist() for c in columns]
         if "seq" in columns:
             i = columns.index("seq")
-            out[i] = [s if s is not None else 0 for s in out[i]]
-        return out
+            tbl = tbl.set_column(i, "seq", pc.fill_null(tbl["seq"], 0))
+        return tbl
 
-    def _read_files_sidecar(self, files_ref: str) -> list[ManifestFile]:
+    def _sidecar_columns(self, files_ref: str, columns: list[str],
+                         prune=None) -> list[list]:
+        """``sidecar_table`` as one Python list per column."""
+        tbl = self.sidecar_table(files_ref, columns, prune)
+        return [tbl[c].to_pylist() for c in columns]
+
+    def _read_files_sidecar(self, files_ref: str,
+                            prune=None) -> list[ManifestFile]:
         entries, seqs = self._sidecar_columns(
-            files_ref, ["entry_json", "seq"])
+            files_ref, ["entry_json", "seq"], prune)
         out = []
         for s, seq in zip(entries, seqs):
             f = ManifestFile.from_json(json.loads(s))
@@ -667,40 +772,57 @@ class Manifest:
 
     def _write_files_sidecar(self, fs: list[ManifestFile],
                              stat_cols: list[str], files_ref: str) -> None:
-        """One row per file: normalized orderable pruning stats + the
-        full entry as JSON (survivors of a pruning predicate are
-        reconstructed from entry_json alone; ``seq`` rides in its own
-        column)."""
-        import pyarrow as pa
+        """Write ``fs`` as a single-file sidecar (``sidecar_encode``)."""
         import pyarrow.parquet as pq
 
-        def col(vals):
-            if all(v is None for v in vals):
-                return pa.array(vals, type=pa.int64())
-            return pa.array(vals)
-
-        data = {
-            "path": pa.array([f.path for f in fs], type=pa.string()),
-            "partition_n": col([_norm_stat(f.partition) for f in fs]),
-            "key_min_n": col([_norm_stat(f.key_min) for f in fs]),
-            "key_max_n": col([_norm_stat(f.key_max) for f in fs]),
-            "rows": pa.array([f.rows for f in fs], type=pa.int64()),
-            "bytes": pa.array([f.bytes for f in fs], type=pa.int64()),
-        }
-        for c in stat_cols:
-            data[f"smin_{c}"] = col(
-                [_norm_stat(f.col_stats.get(c, (None, None))[0]) for f in fs]
-            )
-            data[f"smax_{c}"] = col(
-                [_norm_stat(f.col_stats.get(c, (None, None))[1]) for f in fs]
-            )
-        data["entry_json"] = pa.array(
-            [json.dumps(f.to_json()) for f in fs], type=pa.string()
-        )
-        data["seq"] = pa.array([f.seq for f in fs], type=pa.int64())
         tmp = self.sidecar_path(files_ref) + ".tmp"
-        pq.write_table(pa.table(data), tmp)
+        pq.write_table(sidecar_encode(fs, stat_cols), tmp)
         os.replace(tmp, self.sidecar_path(files_ref))
+
+    def write_kept_sidecar(self, kept: KeptSidecar,
+                           fs: list[ManifestFile], stat_cols: list[str],
+                           files_ref: str) -> int:
+        """Write a single-file sidecar holding the ``kept`` rows, copied
+        as stored (streamed batch by batch, no entry_json parsed), then
+        ``fs`` in the ``sidecar_encode`` encoding; returns its row
+        count. A column
+        only one side has is NULL on the other; one the two sides type
+        differently takes their common type (int64 and double: double)
+        or, when they have none, text, as ``sidecar_encode`` keeps
+        values of several types."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+        import pyarrow.parquet as pq
+
+        src = ds.dataset(self.sidecar_path(kept.files_ref),
+                         format="parquet")
+        add = sidecar_encode(fs, stat_cols)
+        types = {f.name: f.type for f in src.schema}
+        for f in add.schema:
+            t = types.setdefault(f.name, f.type)
+            if t != f.type:
+                try:
+                    types[f.name] = pa.unify_schemas(
+                        [pa.schema([(f.name, t)]), pa.schema([f])],
+                        promote_options="permissive").field(0).type
+                except (pa.ArrowInvalid, pa.ArrowTypeError):
+                    types[f.name] = pa.string()
+        schema = pa.schema(list(types.items()))
+
+        def conform(tbl):
+            return pa.table([
+                tbl[f.name].cast(f.type) if f.name in tbl.column_names
+                else pa.nulls(len(tbl), f.type) for f in schema],
+                schema=schema)
+
+        tmp, n = self.sidecar_path(files_ref) + ".tmp", len(add)
+        with pq.ParquetWriter(tmp, schema) as w:
+            for b in src.to_batches(filter=kept.prune()[0]):
+                n += b.num_rows
+                w.write_table(conform(pa.Table.from_batches([b])))
+            w.write_table(conform(add))
+        os.replace(tmp, self.sidecar_path(files_ref))
+        return n
 
     def remove_sidecar(self, files_ref: str) -> None:
         """Delete a sidecar — single parquet file (driver-written) or

@@ -1,0 +1,109 @@
+#!/usr/bin/env python
+"""Time the file-rewriting ops on a sidecar-backed table and count
+their Spark jobs and the manifest form each commit lands in.
+
+Builds a 48k-row table of 1536 files over 64 partitions (above
+``Manifest.inline_max``, so its file list is a Parquet sidecar), then
+runs four rounds of ``delete_range`` (a key range in one partition), a
+CoW ``upsert`` into one partition and ``overwrite_partitions`` of
+another, and one ``compact``. Prints one JSON line: per-op wall times
+(ms), Spark jobs per op (job groups, read after a probe job so the
+listener bus has caught up), and the form of each op's commit
+(``file``: driver-written sidecar, ``dir``: Spark-written sidecar,
+``inline``: JSON).
+
+Usage: python scripts/measure_rewrite_ops.py <checkout> <seed> [out.jsonl]
+
+``<checkout>`` is the source tree whose ``iceberg_core_spark`` is
+measured, so two checkouts (e.g. a commit and its parent unpacked with
+``git archive``) can be compared run for run.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import shutil
+import statistics
+import sys
+import tempfile
+import time
+
+N_ROWS, N_PARTS, ROWS_PER_FILE, ROUNDS = 48_000, 64, 32, 4
+
+
+def main() -> None:
+    repo, seed = os.path.abspath(sys.argv[1]), int(sys.argv[2])
+    out = sys.argv[3] if len(sys.argv) > 3 else None
+    sys.path.insert(0, repo)
+    # the Python workers Spark starts import the same checkout
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        [repo] + [p for p in [os.environ.get("PYTHONPATH")] if p])
+    from iceberg_core_spark import get_spark
+    from iceberg_core_spark.table import IceTable
+
+    spark = get_spark()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    d = tempfile.mkdtemp(prefix="rewrite-ops-")
+    df = spark.range(0, N_ROWS).selectExpr(
+        "id", f"id % {N_PARTS} as part", "cast(id * 7 as string) as payload")
+    t = IceTable.create(spark, os.path.join(d, "t"), df,
+                        partition_col="part", key_col="id",
+                        max_rows_per_file=ROWS_PER_FILE)
+    snap = t.manifest.load(load_files=False)
+    assert snap.files_ref, "table is not sidecar-backed"
+    ms, jobs, forms = {}, {}, {}
+
+    def form() -> str:
+        s = t.manifest.load(load_files=False)
+        if not s.files_ref:
+            return "inline"
+        path = t.manifest.sidecar_path(s.files_ref)
+        return "file" if os.path.isfile(path) else "dir"
+
+    def timed(name, fn) -> None:
+        group = f"{name}-{os.urandom(3).hex()}"
+        sc.setJobGroup(group, name)
+        t0 = time.perf_counter()
+        fn()
+        ms.setdefault(name, []).append((time.perf_counter() - t0) * 1e3)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        forms[name] = form()
+        probe = f"probe-{os.urandom(3).hex()}"
+        sc.setJobGroup(probe, "listener-bus probe")
+        spark.range(1).collect()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        while not tracker.getJobIdsForGroup(probe):
+            time.sleep(0.05)
+        jobs.setdefault(name, []).append(
+            len(tracker.getJobIdsForGroup(group)))
+
+    schema = "id long, part long, payload string"
+    for k in range(ROUNDS):
+        p, lo = (seed + k) % N_PARTS, 1000 * k
+        timed("delete_range",
+              lambda: t.delete_range(partition=p, lo=lo, hi=lo + 2000))
+        ids = range(p + 4000 * k, p + 4000 * k + 800, N_PARTS)
+        batch = spark.createDataFrame([(i, p, f"u{i}") for i in ids], schema)
+        timed("upsert", lambda: t.upsert(batch, key_cols=["part", "id"]))
+        other = spark.createDataFrame(
+            [(N_ROWS + k, (p + N_PARTS // 2) % N_PARTS, "ow")], schema)
+        timed("overwrite_partitions", lambda: t.overwrite_partitions(other))
+    timed("compact", t.compact)
+    rec = {"checkout": repo, "seed": seed, "files": snap.files_count,
+           "ms_median": {k: round(statistics.median(v), 1)
+                         for k, v in ms.items()},
+           "ms": {k: [round(x, 1) for x in v] for k, v in ms.items()},
+           "jobs": jobs, "form": forms, "rows": t.scan().count()}
+    line = json.dumps(rec)
+    if out:
+        with open(out, "a") as f:
+            f.write(line + "\n")
+    print(line)
+    shutil.rmtree(d, ignore_errors=True)
+    spark.stop()
+
+
+if __name__ == "__main__":
+    main()

@@ -1,6 +1,7 @@
 import pytest
 
 from iceberg_core_spark.session import get_spark
+from iceberg_core_spark.table.manifest import Manifest
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -16,3 +17,15 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(params=["inline", "spark-sidecar"])
+def regime(request, monkeypatch):
+    """Both manifest regimes and both forms of the commit loop: at the
+    default inline_max small commits collect their entries to the
+    driver (inline JSON); inline_max=0 sends creates and appends through
+    the Spark-written sidecar and spills every other commit to a
+    driver-written one."""
+    if request.param == "spark-sidecar":
+        monkeypatch.setattr(Manifest, "inline_max", 0)
+    return request.param

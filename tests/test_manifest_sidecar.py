@@ -710,3 +710,165 @@ def test_inline_and_sidecar_regimes_return_same_rows(spark, tmp_path,
         got = sorted(r.id for r in q(inline).collect())
         assert got, i
         assert got == sorted(r.id for r in q(sidecar).collect()), i
+
+
+# ---------------------------------------------------------------------------
+# the rewrite planner (IceTable._plan_rewrite): one affected/keep split for
+# every file-rewriting op, driver-only in both manifest regimes
+# ---------------------------------------------------------------------------
+
+def _part_batch(spark, ids, part):
+    return spark.createDataFrame(
+        [(i, part, f"new{i}") for i in ids], "id long, part long, payload string")
+
+
+@pytest.mark.parametrize("op", ["delete_range", "delete_where_cow", "upsert",
+                                "overwrite_partitions", "maintain"])
+def test_rewrite_ops_never_materialize_sidecar_entries(
+        spark, tmp_path, small_inline_max, monkeypatch, op):
+    """On a sidecar-backed table no file-rewriting op parses a sidecar
+    entry on the driver, and each one still returns the right rows."""
+    from iceberg_core_spark.table.ice_table import MaintenancePolicy
+
+    t = _mk_table(spark, str(tmp_path / "t"))
+    assert t.manifest.load(load_files=False).files_ref
+    _forbid_entry_materialization(monkeypatch)
+    ids, changed = set(range(2000)), set()
+    if op == "delete_range":
+        t.delete_range(partition=1, lo=100, hi=500)
+        ids -= {i for i in range(100, 501) if i % 4 == 1}
+    elif op == "delete_where_cow":
+        t.delete_where("part = 2 AND id < 1000")
+        ids -= {i for i in range(1000) if i % 4 == 2}
+    elif op == "upsert":
+        changed = {1, 5, 2001}
+        t.upsert(_part_batch(spark, changed, 1), key_cols=["part", "id"])
+        ids |= changed
+    elif op == "overwrite_partitions":
+        changed = {3, 7}
+        t.overwrite_partitions(_part_batch(spark, changed, 3))
+        ids -= {i for i in range(2000) if i % 4 == 3} - changed
+    else:
+        report = t.maintain(MaintenancePolicy(max_files_per_partition=2,
+                                              keep_snapshots=1))
+        assert report["compacted"] and report["skipped"] is None
+    assert t.manifest.load(load_files=False).files_ref
+    rows = t.scan().collect()
+    assert sorted(r.id for r in rows) == sorted(ids)
+    assert {r.payload for r in rows if r.id in changed} == {
+        f"new{i}" for i in changed}
+
+
+def _jobs_started(spark, fn):
+    """Spark job ids started while ``fn`` runs (its job group), checked
+    only after a later action's job is visible: status updates arrive
+    through the listener bus in order."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group, probe = f"fn-{os.urandom(4).hex()}", f"probe-{os.urandom(4).hex()}"
+    try:
+        sc.setJobGroup(group, "under test")
+        out = fn()
+        sc.setJobGroup(probe, "listener-bus probe")
+        spark.range(1).collect()
+        deadline = time.monotonic() + 30
+        while (not tracker.getJobIdsForGroup(probe)
+               and time.monotonic() < deadline):
+            time.sleep(0.05)
+        assert tracker.getJobIdsForGroup(probe)
+        return tracker.getJobIdsForGroup(group), out
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_rewrite_planner_starts_no_spark_job(spark, tmp_path, regime,
+                                            monkeypatch):
+    """The planner, the fragmentation probe and stats() run on the
+    driver in both manifest regimes: 0 Spark jobs inside each of them,
+    under the masks delete_range, a CoW upsert, overwrite_partitions
+    and compact give it, where the Spark splits they replace started
+    one or two each on a sidecar."""
+    t = _mk_table(spark, str(tmp_path / "t"))
+    assert bool(t.manifest.load(load_files=False).files_ref) == (
+        regime == "spark-sidecar")
+    sc = spark.sparkContext
+    plan_rewrite, groups, plans = IceTable._plan_rewrite, [], []
+
+    def traced(self, snap, mask):
+        groups.append(f"plan-{os.urandom(4).hex()}")
+        sc.setJobGroup(groups[-1], "rewrite planner")
+        try:
+            plans.append((snap, plan_rewrite(self, snap, mask)))
+            return plans[-1][1]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    monkeypatch.setattr(IceTable, "_plan_rewrite", traced)
+    t.delete_range(partition=1, lo=0, hi=300)
+    t.upsert(_part_batch(spark, {1, 5}, 1), key_cols=["part", "id"])
+    t.overwrite_partitions(_part_batch(spark, {3, 7}, 3))
+    t.compact(min_files=2)
+    jobs, (frag, stats) = _jobs_started(spark, lambda: (
+        t._max_files_per_partition(t.manifest.load(load_files=False)),
+        t.stats()))
+    assert jobs == []
+    tracker = sc.statusTracker()
+    assert [tracker.getJobIdsForGroup(g) for g in groups] == [[]] * 4
+    hit_parts = []
+    for snap, plan in plans:
+        files = t.manifest.load(snap.snapshot_id).files
+        by_part = {f.path: f.partition for f in files}
+        hit_parts.append({by_part[v.path] for v in plan.victims})
+        assert len(plan.keep) + len(plan.victims) == len(files)
+    assert hit_parts[:3] == [{1}, {1}, {3}]
+    assert frag == max(p["files"] for p in stats["partitions"].values())
+    assert stats["files"] == t.file_count()
+    assert stats["rows"] == t.scan().count()
+
+
+def test_delete_range_keeps_driver_commit_form(spark, tmp_path,
+                                               small_inline_max,
+                                               monkeypatch):
+    """On a sidecar-backed table delete_range commits in the driver
+    form: a driver-written single-file sidecar holding the kept rows
+    as stored plus the new entries, or inline JSON when kept and new
+    files fit ``inline_max`` (then at most that many entries are
+    parsed)."""
+    t = _mk_table(spark, str(tmp_path / "t"))
+    parent = t.manifest.load()
+    snap = t.delete_range(partition=1, lo=100, hi=500)
+    ref = t.manifest.sidecar_path(snap.files_ref)
+    assert os.path.isfile(ref)
+    full = t.manifest.load()
+    new = {f.path for f in full.files if f.seq == snap.snapshot_id}
+    kept = {f.path for f in full.files} - new
+    assert new and kept and kept < {f.path for f in parent.files}
+    old = {f.path: f for f in parent.files}
+    assert all(f == old[f.path] for f in full.files if f.path in kept)
+    assert sorted(r.id for r in t.scan().collect()) == sorted(
+        set(range(2000)) - {i for i in range(100, 501) if i % 4 == 1})
+
+    monkeypatch.setattr(Manifest, "inline_max", 512)
+    snap = t.delete_range(partition=2, lo=0, hi=100)
+    assert snap.files_ref is None and snap.files
+    assert t.scan().count() == 2000 - 100 - 25
+
+
+def test_stats_partition_keys_normalized_in_both_regimes(spark, tmp_path,
+                                                         regime):
+    """stats() keys partitions by the normalized sidecar encoding in
+    both regimes (dates as epoch days), as files_df and diff_stats do,
+    so a table crossing inline_max keeps its keys."""
+    df = spark.range(0, 40).selectExpr(
+        "id", "date_add(date'2024-01-01', cast(id % 2 as int)) as day")
+    t = IceTable.create(spark, str(tmp_path / "t"), df, partition_col="day",
+                        key_col="id", max_rows_per_file=10)
+    assert bool(t.manifest.load(load_files=False).files_ref) == (
+        regime == "spark-sidecar")
+    d0 = (datetime.date(2024, 1, 1) - datetime.date(1970, 1, 1)).days
+    s = t.stats()
+    assert set(s["partitions"]) == {d0, d0 + 1}
+    assert [s["partitions"][d]["rows"] for d in (d0, d0 + 1)] == [20, 20]
+    assert s["files"] == t.file_count() and s["rows"] == 40

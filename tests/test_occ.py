@@ -22,17 +22,6 @@ def root(tmp_path):
     return str(tmp_path / "occ_table")
 
 
-@pytest.fixture(params=["inline", "spark-sidecar"])
-def regime(request, monkeypatch):
-    """Both forms of the commit loop: at the default inline_max these
-    small commits collect their entries to the driver (inline JSON);
-    inline_max=0 sends creates and appends through the Spark-written
-    sidecar and spills every other commit to a driver-written one."""
-    if request.param == "spark-sidecar":
-        monkeypatch.setattr(Manifest, "inline_max", 0)
-    return request.param
-
-
 def _mk(spark, root, n_rows=3):
     rows = [location_row(timestamp=100 + i) for i in range(n_rows)]
     return IceTable.create(spark, root, location_df(spark, rows),
@@ -90,28 +79,69 @@ def test_stale_append_rebases_and_keeps_both(spark, root, regime):
     assert snap.snapshot_id == 2 and snap.parent_id == 1
 
 
+def _data_files_on_disk(root):
+    return {
+        os.path.relpath(os.path.join(dp, n), root)
+        for dp, _d, ns in os.walk(os.path.join(root, "data"))
+        for n in ns if n.endswith(".parquet")
+    }
+
+
 def test_stale_overwrite_rebase_keeps_winner_branches(spark, root, regime):
-    """A stale overwrite that loses the race to a branch append rebases
-    onto the winner and inherits its staged branches, whichever form
-    the commit takes: keeping the based-on snapshot's (empty) staged
-    dict would make the branch vanish."""
+    """A stale overwrite that loses the race to a branch append must
+    not rebase, whichever form the commit takes: an overwrite drops
+    every file, so landing on the winner would keep the branch name
+    but lose the branch's files — the rule ``_require_no_staged``
+    applies when an overwrite starts. It raises and removes its commit
+    dir; the winner's branch stays whole."""
     t_a = _mk(spark, root)
     base = t_a.manifest.load()
 
     IceTable(spark, root).append(
         location_df(spark, [location_row(timestamp=500)]), branch="audit")
 
-    t_a._write_commit(
-        location_df(spark, [location_row(timestamp=900)]),
-        "overwrite", base.partition_col, base.key_col, 1_000_000,
-        base_files=[], expected_parent=base.snapshot_id,
-    )
+    with pytest.raises(CommitConflictError):
+        t_a._write_commit(
+            location_df(spark, [location_row(timestamp=900)]),
+            "overwrite", base.partition_col, base.key_col, 1_000_000,
+            base_files=[], expected_parent=base.snapshot_id,
+        )
     final = IceTable(spark, root)
-    snap = final.manifest.load(load_files=False)
-    assert snap.snapshot_id == 2 and snap.operation == "overwrite"
-    assert bool(snap.files_ref) == (regime == "spark-sidecar")
+    snap = final.manifest.load()
+    assert snap.snapshot_id == 1 and snap.operation == "append"
     assert final.branches() == {"audit": [1]}
-    assert sorted(r.timestamp for r in final.scan().collect()) == [900]
+    assert sorted(r.timestamp for r in final.scan().collect()) == [
+        100, 101, 102]
+    assert sorted(r.timestamp for r in
+                  final.scan(branch="audit").collect()) == [
+        100, 101, 102, 500]
+    assert _data_files_on_disk(root) == {f.path for f in snap.files}
+
+
+def test_stale_append_does_not_revert_partition_spec(spark, root, regime):
+    """An append that loses the race to ``set_partition_spec`` must not
+    rebase: its commit records the partition column it was based on,
+    so landing on the winner would silently revert the spec change. It
+    raises and removes its commit dir, whichever form it takes."""
+    t_a = _mk(spark, root)
+    base = t_a.manifest.load()
+
+    IceTable(spark, root).set_partition_spec("source")
+
+    with pytest.raises(CommitConflictError):
+        t_a._write_commit(
+            location_df(spark, [location_row(timestamp=900)]),
+            "append", base.partition_col, base.key_col, 1_000_000,
+            base_files=list(base.files), expected_parent=base.snapshot_id,
+            base_mode="parent",
+        )
+    final = IceTable(spark, root)
+    snap = final.manifest.load()
+    assert snap.snapshot_id == 1 and snap.operation == "set-spec"
+    assert snap.partition_col == "source"
+    assert sorted(r.timestamp for r in final.scan().collect()) == [
+        100, 101, 102]
+    assert _data_files_on_disk(root) == {f.path for f in snap.files}
 
 
 def test_stale_read_modify_write_conflicts_and_cleans_up(spark, root, regime):
@@ -134,12 +164,7 @@ def test_stale_read_modify_write_conflicts_and_cleans_up(spark, root, regime):
     assert ts == [100, 101, 102, 500]  # loser's rows absent
     # loser's data files were deleted, not orphaned
     live = {f.path for f in final.manifest.load().files}
-    on_disk = {
-        os.path.relpath(os.path.join(dp, n), root)
-        for dp, _d, ns in os.walk(os.path.join(root, "data"))
-        for n in ns if n.endswith(".parquet")
-    }
-    assert on_disk == live
+    assert _data_files_on_disk(root) == live
 
 
 def test_stale_cdc_mor_conflicts_and_cleans_delete_file(spark, root):

@@ -138,3 +138,46 @@ def test_unpartitioned_to_partitioned(spark, sf_dir, tmp_path):
     got = sorted(r.doc_id for r in t.query(partition="de").collect())
     want = sorted(r.doc_id for r in docs.filter("lang = 'de'").collect())
     assert got == want
+
+
+def test_evolution_to_column_of_another_type(spark, tmp_path, regime):
+    """After a spec change from a long column to a string column, the
+    recorded partition values mix both types. Every file-rewriting op,
+    stats() and the maintain probe still work in both manifest regimes,
+    and the rows stay exact."""
+    def rows(lo, hi):
+        return spark.range(lo, hi).selectExpr(
+            "id", "id % 3 as part", "concat('s', id % 2) as source",
+            "cast(id as string) as payload")
+
+    t = IceTable.create(spark, str(tmp_path / "t"), rows(0, 60),
+                        partition_col="part", key_col="id",
+                        stat_cols=["source"], max_rows_per_file=10)
+    t.set_partition_spec("source")
+    t.append(rows(60, 100), dedupe_identical_files=False)
+    assert bool(t.manifest.load(load_files=False).files_ref) == (
+        regime == "spark-sidecar")
+    want = {i: str(i) for i in range(100)}
+
+    def check():
+        assert {r.id: r.payload for r in t.scan().collect()} == want
+
+    t.upsert(spark.createDataFrame(
+        [(3, 0, "s1", "new3"), (64, 1, "s0", "new64"),
+         (200, 2, "s0", "new200")],
+        "id long, part long, source string, payload string"),
+        key_cols=["source", "id"])
+    want.update({3: "new3", 64: "new64", 200: "new200"})
+    check()
+    t.delete_range(partition="s1", lo=70, hi=90)
+    for i in range(71, 90, 2):
+        del want[i]
+    check()
+    s = t.stats()
+    assert s["files"] == t.file_count() and s["rows"] == len(want)
+    assert t._max_files_per_partition(
+        t.manifest.load(load_files=False)) == max(
+        p["files"] for p in s["partitions"].values())
+    t.compact(min_files=1)
+    check()
+    assert t.stats()["rows"] == len(want)

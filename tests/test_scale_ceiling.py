@@ -205,8 +205,10 @@ def test_sidecar_bytes_on_disk_100k(big_manifest_table):
 
 def test_maintenance_probe_bounded_100k(big_manifest_table):
     """maintain()'s fragmentation probe on a sidecar-backed 100k-file
-    snapshot must aggregate Spark-side and return ONE number — no entry
-    materialization, bounded driver time/memory."""
+    snapshot groups the partition column of the sidecar with Arrow on
+    the driver and returns ONE number — no Spark job, no entry
+    materialization, bounded driver time/memory (the Arrow buffers sit
+    in Arrow's memory pool, which tracemalloc does not see)."""
     t, _ = big_manifest_table
     snap = t.manifest.load(load_files=False)
     assert snap.files_ref is not None
