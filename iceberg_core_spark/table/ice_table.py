@@ -26,25 +26,27 @@ Scale design:
   (metadata-only, no data I/O), then the same predicate is pushed into
   the Parquet scan as row-group skipping + residual filter. No collect()
   anywhere — ``query()`` returns a DataFrame.
-- Stats collection reads only Parquet footers (metadata-only), in ONE
-  kind of SPARK TASK (``_entries_df``). Large commits never materialize
-  per-file entries on the driver: the sidecar is built as ``parent
-  sidecar ∪ new entries`` by a Spark job, dedupe is a semi-join —
-  commit metadata scales with the cluster, not one machine. Small
-  commits collect the same task's rows to the driver.
+- Stats collection reads only Parquet footers and hashes bytes in ONE
+  kind of SPARK TASK (``_entries_df``); the driver never reads data
+  bytes. Every commit then has ONE form, as in Iceberg (tasks hand
+  their file entries to the driver, the driver writes the manifest):
+  the new entries are collected (``_collect_entries``) and the file set
+  lands inline, or as a single-file sidecar written on the driver. A
+  sidecar parent's carried-over rows are copied as stored, batch by
+  batch, never parsed, and content-hash dedupe against them is one
+  Arrow pass (``Manifest.known_hashes``). Driver memory per commit is
+  O(files the commit writes) plus one row group of carried rows.
 - Every file-rewriting op (delete_range, the CoW upsert/merge/CDC,
   overwrite_partitions, compact) splits the files into rewritten and
   carried-over in ONE planner (``_plan_rewrite``): an Arrow filter over
   the file inventory, read in the sidecar encoding in either manifest
   regime, on the driver with no Spark job. Only the rewritten files'
   (path, seq) stubs become Python objects; a sidecar's carried-over
-  entries are never parsed: the merges, overwrite_partitions and
-  compact anti-join them in Spark, delete_range copies them as stored
-  with Arrow. ``stats()`` and the maintain probe aggregate the same
-  inventory.
+  entries are never parsed (the commit copies them as stored).
+  ``stats()`` and the maintain probe aggregate the same inventory.
 - Multi-writer safe: lock-free optimistic concurrency (see
-  table/manifest.py). Every data commit, in either form, goes through
-  one compare-and-swap loop (``_commit_entries``) with automatic
+  table/manifest.py). Every data commit goes through one
+  compare-and-swap loop (``_commit_entries``) with automatic
   append/overwrite/add_files rebase; metadata-only ops retry through
   ``_commit_metadata``.
 """
@@ -189,6 +191,9 @@ def _file_stats(path: str, key_col: str | None,
     fingerprint of the footer schema, sorted by name: the Spark read
     path resolves columns by name, so field ORDER differences are not
     schema divergence."""
+    import decimal
+
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     pf = pq.ParquetFile(path)
@@ -207,13 +212,25 @@ def _file_stats(path: str, key_col: str | None,
             return v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
         return v
 
+    def bounds(st, i: int):
+        try:
+            return norm(st.min), norm(st.max)
+        except pa.ArrowNotImplementedError:
+            # a decimal stored as INT32/INT64: pyarrow does not decode
+            # its stats, but the raw unscaled integers are exact
+            c = md.schema.column(i)
+            if c.logical_type.type != "DECIMAL":
+                raise
+            return (decimal.Decimal(st.min_raw).scaleb(-c.scale),
+                    decimal.Decimal(st.max_raw).scaleb(-c.scale))
+
     def merge(col: str, group):
         if col not in name_to_idx:
             return
         st = group.column(name_to_idx[col]).statistics
         if st is None or not st.has_min_max:
             return
-        mn, mx = norm(st.min), norm(st.max)
+        mn, mx = bounds(st, name_to_idx[col])
         cur = col_stats.get(col)
         if cur is None:
             col_stats[col] = [mn, mx]
@@ -297,41 +314,6 @@ def _path_frame(spark: SparkSession, rel_paths: list[str]) -> DataFrame:
         "path string")
 
 
-def _stat_sidecar_type(dtype) -> str | None:
-    """Spark SQL type of a normalized sidecar stat column for a data
-    column of ``dtype`` — mirrors ``manifest._norm_stat``: timestamps /
-    dates / integrals → bigint, floats → double, strings → string,
-    booleans → boolean. ``None`` (e.g. decimals, nested types) means no
-    orderable sidecar stat exists: the column is written as NULL bigint
-    and pruning keeps such files conservatively."""
-    from pyspark.sql.types import (
-        BooleanType,
-        ByteType,
-        DateType,
-        DoubleType,
-        FloatType,
-        IntegerType,
-        LongType,
-        ShortType,
-        StringType,
-        TimestampNTZType,
-        TimestampType,
-    )
-
-    if dtype is None:
-        return None
-    if isinstance(dtype, (ByteType, ShortType, IntegerType, LongType,
-                          TimestampType, TimestampNTZType, DateType)):
-        return "bigint"
-    if isinstance(dtype, (FloatType, DoubleType)):
-        return "double"
-    if isinstance(dtype, StringType):
-        return "string"
-    if isinstance(dtype, BooleanType):
-        return "boolean"
-    return None
-
-
 def _entries_df(spark: SparkSession, root: str, rel_paths: list[str],
                 schema: StructType, key_col: str | None,
                 partition_col: str | None, stat_cols: tuple[str, ...]):
@@ -342,14 +324,11 @@ def _entries_df(spark: SparkSession, root: str, rel_paths: list[str],
     Assumes table storage is reachable from executors, the same
     assumption every read makes.
 
-    Each row is a full sidecar entry (normalized pruning stats +
-    entry_json) plus ``content_hash`` for the dedupe semi-join and
-    ``schema_fp`` (see ``_file_stats``) for add_files' per-file schema
-    check. The Spark form of a commit writes these rows straight into
-    the new sidecar, so the driver never materializes one entry per
-    file; the driver form collects them (``_collect_entries``). ``seq``
-    is added at commit time as a literal column, so a rebase retargets
-    it without re-running these tasks."""
+    Each row is (path, entry_json, schema_fp): the file's manifest
+    entry as JSON, and its footer schema fingerprint (see
+    ``_file_stats``) for add_files' per-file schema check. The driver
+    collects them (``_collect_entries``); ``seq`` is stamped at commit
+    time, so a rebase retargets it without re-running these tasks."""
     import json as _json
 
     dtypes = {f.name: f.dataType for f in schema.fields}
@@ -357,20 +336,6 @@ def _entries_df(spark: SparkSession, root: str, rel_paths: list[str],
         list(stat_cols) + ([key_col] if key_col else [])
     ))
     part_dtype = dtypes.get(partition_col) if partition_col else None
-
-    fields = [
-        ("path", "string"), ("rows", "bigint"), ("bytes", "bigint"),
-        ("content_hash", "string"), ("schema_fp", "string"),
-        ("partition_n", _stat_sidecar_type(part_dtype) or "bigint"),
-        ("key_min_n", _stat_sidecar_type(dtypes.get(key_col)) or "bigint"),
-        ("key_max_n", _stat_sidecar_type(dtypes.get(key_col)) or "bigint"),
-    ]
-    for c in stat_cols:
-        t = _stat_sidecar_type(dtypes.get(c)) or "bigint"
-        fields += [(f"smin_{c}", t), (f"smax_{c}", t)]
-    fields.append(("entry_json", "string"))
-    out_schema = ", ".join(f"`{n}` {t}" for n, t in fields)
-    colnames = [n for n, _t in fields]
 
     def task(batches):
         import hashlib
@@ -395,30 +360,19 @@ def _entries_df(spark: SparkSession, root: str, rel_paths: list[str],
                     rows=rows, bytes=_os.path.getsize(ap),
                     content_hash=h.hexdigest(), col_stats=cstats,
                 )
-                row = {
-                    "path": rel, "rows": rows, "bytes": entry.bytes,
-                    "content_hash": entry.content_hash,
-                    "schema_fp": schema_fp,
-                    "partition_n": _norm_stat(pv),
-                    "key_min_n": _norm_stat(kmin),
-                    "key_max_n": _norm_stat(kmax),
-                    "entry_json": _json.dumps(entry.to_json()),
-                }
-                for c in stat_cols:
-                    mn, mx = cstats.get(c, (None, None))
-                    row[f"smin_{c}"] = _norm_stat(mn)
-                    row[f"smax_{c}"] = _norm_stat(mx)
-                out.append(row)
-            yield _pd.DataFrame(out, columns=colnames)
+                out.append((rel, _json.dumps(entry.to_json()), schema_fp))
+            yield _pd.DataFrame(
+                out, columns=["path", "entry_json", "schema_fp"])
 
-    return _path_frame(spark, rel_paths).mapInPandas(task, out_schema)
+    return _path_frame(spark, rel_paths).mapInPandas(
+        task, "path string, entry_json string, schema_fp string")
 
 
 def _collect_entries(spark: SparkSession, root: str, rel_paths: list[str],
                      schema: StructType, key_col: str | None,
                      partition_col: str | None, stat_cols: tuple[str, ...],
                      ) -> tuple[list[ManifestFile], dict[str, str]]:
-    """Driver form of ``_entries_df``: one Spark job, then each row's
+    """``_entries_df`` collected: one Spark job, then each row's
     entry_json decoded on the driver. Returns the entries of the
     non-empty files, and every file's footer schema fingerprint by
     path. Files with no rows (an empty write partition) are deleted
@@ -447,18 +401,6 @@ def _remove_files(root: str, rel_paths) -> None:
             os.remove(p)
 
 
-def _parquet_rows(path: str) -> int:
-    """Row count of a Spark-written parquet directory, from footers
-    only."""
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.read_metadata(os.path.join(dp, f)).num_rows
-        for dp, _d, fs in os.walk(path)
-        for f in fs if f.endswith(".parquet")
-    )
-
-
 # Operations whose new files join the file list of the snapshot they
 # land on (the rest bring their own carried-over base), and operations
 # that may rebase onto a concurrent winner: an append/add_files unions
@@ -467,6 +409,15 @@ def _parquet_rows(path: str) -> int:
 # files that may have changed, so the caller must re-run it.
 _ON_PARENT = ("append", "add_files", "cdc-mor")
 _REBASES = ("append", "overwrite", "add_files")
+
+
+def _parent_files(snap: Snapshot) -> list[ManifestFile] | KeptSidecar:
+    """Every file of ``snap`` as a commit's carried-over base: its
+    inline list, or its whole sidecar as a ``KeptSidecar`` (never
+    parsed), so a snapshot loaded with ``load_files=False`` serves."""
+    if snap.files_ref:
+        return KeptSidecar(snap.files_ref, [], snap.files_count or 0)
+    return snap.files
 
 
 def _layout(snap: Snapshot) -> tuple:
@@ -641,12 +592,11 @@ class IceTable:
                     )
         return self._write_commit(
             df, "append", snap.partition_col, snap.key_col,
-            max_rows_per_file, base_files=list(snap.files),
+            max_rows_per_file,
             dedupe_identical_files=dedupe_identical_files,
             source_batch_id=source_batch_id,
             source_lineage=source_lineage,
             expected_parent=snap.snapshot_id,
-            base_mode="parent",
             branch=branch,
         )
 
@@ -677,7 +627,7 @@ class IceTable:
         partition_col: str | None,
         key_col: str | None,
         max_rows_per_file: int,
-        base_files: list[ManifestFile] | KeptSidecar,
+        base_files: list[ManifestFile] | KeptSidecar | None = None,
         dedupe_identical_files: bool = False,
         delete_predicates: list[dict] | None = None,
         stat_cols: list[str] | None = None,
@@ -685,9 +635,7 @@ class IceTable:
         source_batch_id: int | None = None,
         source_lineage: str | None = None,
         expected_parent: int | None = None,
-        base_mode: str = "list",
         bucket_by: tuple[str, int] | None = None,
-        base_files_df: DataFrame | None = None,
         branch: str | None = None,
     ) -> Snapshot:
         """Write ``df`` as new data files and commit them as
@@ -705,18 +653,15 @@ class IceTable:
         token-unique commit dir, so racing writers never touch each
         other's bytes and a rebase re-commits metadata only.
 
-        The entries take one of two forms, chosen by size: large
-        commits, and any append onto a sidecar-backed parent, keep them
-        in Spark (the new sidecar is ``base ∪ new entries`` written by a
-        Spark job; dedupe is a semi-join); small ones collect them to
-        the driver in the same stats job. ``base_mode="parent"``
-        (append) sizes that choice by the parent's file count.
-
-        ``base_files_df``: carried-over entries as a sidecar-schema
-        DataFrame (e.g. compaction survivors = parent sidecar anti-join
-        victims) — forces the Spark form; entries never materialize on
-        the driver. ``base_files`` may instead be a ``KeptSidecar``
-        for the driver form (see ``_commit_entries``)."""
+        The new files' entries come from the one stats job
+        (``_collect_entries``) and are committed on the driver; if that
+        job raises, ``commit_dir`` is removed. ``base_files`` is what
+        the commit carries over (a list, or a ``KeptSidecar`` of the
+        parent's sidecar); append, add_files and cdc-mor ignore it and
+        carry the snapshot they land on (see ``_commit_entries``).
+        Driver memory is O(files written) plus one row group of
+        carried rows: for 100k new entries the parse plus
+        ``sidecar_encode`` take ~1 s + 2.5-3.5 s on one core."""
         # inherit stats/clustering/bucket config from the current snapshot
         if stat_cols is None or zorder_by is None or bucket_by is None:
             cur = self.manifest.current_snapshot_id()
@@ -813,23 +758,6 @@ class IceTable:
                 parent_snap.schema_json, commit_schema.json()):
             commit_schema = StructType.fromJson(
                 json.loads(parent_snap.schema_json))
-        if base_mode == "parent" and parent_snap is not None:
-            base_count = (parent_snap.files_count or 0
-                          if parent_snap.files_ref
-                          else len(parent_snap.files))
-        else:
-            base_count = len(base_files)
-        # Large commits (or any append onto a sidecar-backed parent) keep
-        # manifest construction OUT of the driver: entries are computed
-        # and unioned with the parent sidecar as DataFrames.
-        spark_form = base_files_df is not None or (
-            operation in ("create", "append", "overwrite", "cdc-mor") and (
-                len(rel_paths) + base_count > Manifest.inline_max
-                or (parent_snap is not None and parent_snap.files_ref
-                    and operation in ("append", "cdc-mor"))
-            )
-        )
-
         fields = dict(
             schema_json=commit_schema.json(), partition_col=partition_col,
             key_col=key_col, stat_cols=list(stat_cols),
@@ -842,57 +770,38 @@ class IceTable:
             # an append keeps the predicates of the snapshot it lands on
             # (they still hide old rows); every other write states its own
             fields["delete_predicates"] = delete_predicates or []
-        stats = (self.spark, self.root, rel_paths, commit_schema, key_col,
-                 partition_col, tuple(stat_cols))
-        if not spark_form:
-            new, _fps = _collect_entries(*stats)
-            return self._commit_entries(
-                operation, parent_snap, new, fields, commit_dir,
-                base=base_files, dedupe=dedupe_identical_files,
-                branch=branch)
-
-        man = self.manifest
-        os.makedirs(man.dir, exist_ok=True)
-        # stats tasks run once, to a temp entries parquet: a rebase
-        # re-runs only the sidecar union job
-        ent_ref = f"tmp-entries-{os.urandom(4).hex()}.parquet"
-        _entries_df(*stats).write.parquet(man.sidecar_path(ent_ref))
         try:
-            new_df = self.spark.read.parquet(man.sidecar_path(ent_ref))
-            _remove_files(self.root, [
-                r.path for r in
-                new_df.filter("rows = 0").select("path").collect()])
-            return self._commit_entries(
-                operation, parent_snap, new_df.filter("rows > 0"), fields,
-                commit_dir,
-                base=base_files if base_files_df is None else base_files_df,
-                dedupe=dedupe_identical_files, branch=branch)
-        finally:
-            man.remove_sidecar(ent_ref)
+            new, _fps = _collect_entries(
+                self.spark, self.root, rel_paths, commit_schema, key_col,
+                partition_col, tuple(stat_cols))
+        except Exception:
+            shutil.rmtree(commit_dir, ignore_errors=True)
+            raise
+        return self._commit_entries(
+            operation, parent_snap, new, fields, commit_dir,
+            base=base_files, dedupe=dedupe_identical_files, branch=branch)
 
     def _commit_entries(
         self,
         operation: str,
         based_on: Snapshot | None,
-        new: list[ManifestFile] | DataFrame,
+        new: list[ManifestFile],
         fields: dict,
         commit_dir: str,
-        base: list[ManifestFile] | KeptSidecar | DataFrame | None = None,
+        base: list[ManifestFile] | KeptSidecar | None = None,
         dedupe: bool = False,
         branch: str | None = None,
     ) -> Snapshot:
         """The one compare-and-swap loop every data commit goes through
         (create, append, overwrite, delete, compact, upsert, merge, cdc,
-        add_files). ``new`` holds the added files' entries in one of two
-        forms: a driver list (committed as inline JSON, or spilled by
-        ``Manifest.commit`` to a driver-written sidecar above
-        ``inline_max``), or the Spark entries frame of ``_entries_df``
-        (the new sidecar is ``base ∪ new`` written by a Spark job, so no
-        entry materializes on the driver). A driver-form ``base`` may be
-        a ``KeptSidecar``: above ``inline_max`` its rows are copied as
-        stored into a driver-written sidecar with the new entries
-        (``Manifest.write_kept_sidecar``); below it they are parsed and
-        the commit lands inline.
+        add_files), in one form: ``new`` is the added files' entries on
+        the driver, and the file set lands as inline JSON when it fits
+        ``inline_max``. Above it, a ``KeptSidecar`` base has its rows
+        copied as stored into a driver-written single-file sidecar with
+        the new entries (``Manifest.write_kept_sidecar``), and a list
+        base is spilled by ``Manifest.commit``; a ``KeptSidecar`` is
+        parsed only when the commit lands inline (at most
+        ``inline_max`` entries).
 
         Every attempt is the ``child()`` of the snapshot it lands on —
         ``based_on`` first, then each winner — with ``fields``
@@ -901,9 +810,10 @@ class IceTable:
         ``create`` (no parent) is the one constructor call. New files
         carry the attempt's id as their data sequence number, a
         ``branch`` commit stages that id, and the carried-over base is
-        the parent's file list for ``_ON_PARENT`` operations and
-        ``base`` otherwise. With ``dedupe``, a new file whose content
-        hash is already in the base is dropped and deleted (the
+        every file of the parent (``_parent_files``) for ``_ON_PARENT``
+        operations and ``base`` otherwise. With ``dedupe``, a new file
+        whose content hash is already in the base
+        (``Manifest.known_hashes``) is dropped and deleted (the
         reference's idempotent re-write, block.go:109-115).
 
         A lost race rebases ``_REBASES`` operations when the winner's
@@ -911,11 +821,9 @@ class IceTable:
         (``_layout``: partition, key, stat, z-order and bucket columns)
         is the same, and — for an overwrite — it has no staged
         branches; otherwise ``commit_dir`` (which holds exactly the new
-        files) is deleted and CommitConflictError propagates.
-        ``based_on`` must carry its file list when the driver form
-        builds on it."""
+        files) is deleted and CommitConflictError propagates. Snapshots
+        loaded with ``load_files=False`` serve as ``based_on``."""
         man = self.manifest
-        spark_form = isinstance(new, DataFrame)
         parent = based_on
         while True:
             if parent is None:
@@ -929,36 +837,32 @@ class IceTable:
                 snap.delete_predicates, sid)
             if branch:
                 snap.staged.setdefault(branch, []).append(sid)
-            carried = (parent if parent is not None
-                       and operation in _ON_PARENT else base)
-            if spark_form:
-                new = self._spark_file_set(snap, new, carried, dedupe)
+            carried = (_parent_files(parent) if parent is not None
+                       and operation in _ON_PARENT else base or [])
+            if dedupe and new:
+                dups = man.known_hashes(
+                    carried, {f.content_hash for f in new})
+                _remove_files(self.root, [
+                    f.path for f in new if f.content_hash in dups])
+                new = [f for f in new if f.content_hash not in dups]
+            for f in new:
+                f.seq = sid  # data sequence number = adding snapshot
+            snap.files_ref = snap.files_count = None
+            if (isinstance(carried, KeptSidecar)
+                    and len(carried) + len(new) > man.inline_max):
+                snap.files_ref = (f"files-{sid}-"
+                                  f"{os.urandom(4).hex()}.parquet")
+                snap.files_count = man.write_kept_sidecar(
+                    carried, new,
+                    sidecar_stat_cols(snap.stat_cols, snap.renames),
+                    snap.files_ref)
+                snap.files = []
             else:
-                base_files = (carried.files if isinstance(carried, Snapshot)
-                              else carried or [])
-                if dedupe and base_files:
-                    seen = {f.content_hash for f in base_files}
-                    _remove_files(self.root, [
-                        f.path for f in new if f.content_hash in seen])
-                    new = [f for f in new if f.content_hash not in seen]
-                for f in new:
-                    f.seq = sid  # data sequence number = adding snapshot
-                snap.files_ref = snap.files_count = None
-                if (isinstance(base_files, KeptSidecar)
-                        and len(base_files) + len(new) > man.inline_max):
-                    snap.files_ref = (f"files-{sid}-"
-                                      f"{os.urandom(4).hex()}.parquet")
-                    snap.files_count = man.write_kept_sidecar(
-                        base_files, new,
-                        sidecar_stat_cols(snap.stat_cols, snap.renames),
-                        snap.files_ref)
-                    snap.files = []
-                else:
-                    if isinstance(base_files, KeptSidecar):
-                        # lands inline: at most inline_max entries parsed
-                        base_files = man._read_files_sidecar(
-                            base_files.files_ref, base_files.prune)
-                    snap.files = list(base_files) + new
+                if isinstance(carried, KeptSidecar):
+                    # lands inline: at most inline_max entries parsed
+                    carried = man._read_files_sidecar(
+                        carried.files_ref, carried.prune)
+                snap.files = list(carried) + new
             try:
                 man.commit(snap)
                 return snap
@@ -966,8 +870,7 @@ class IceTable:
                 if snap.files_ref and not snap.files:
                     man.remove_sidecar(snap.files_ref)
                 if operation in _REBASES:
-                    winner = man.load(load_files=not spark_form
-                                      and operation in _ON_PARENT)
+                    winner = man.load(load_files=False)
                     # an overwrite drops every file, so it cannot land
                     # on a winner's staged branches (the same rule
                     # _require_no_staged applies when the op starts)
@@ -984,75 +887,6 @@ class IceTable:
                 # branches): the caller re-runs
                 shutil.rmtree(commit_dir, ignore_errors=True)
                 raise
-
-    def _spark_file_set(self, snap: Snapshot, new: DataFrame, carried,
-                        dedupe: bool) -> DataFrame:
-        """Spark form of one commit attempt's file set: writes the
-        sidecar ``carried ∪ new`` (new entries stamped with ``seq``)
-        and points ``snap`` at it. ``carried`` is the parent snapshot
-        (its sidecar, or its inline list spilled to a temp sidecar), a
-        sidecar-schema DataFrame, a list, or None. Content-hash dedupe
-        is a semi-join against the base — only duplicate PATHS, a
-        handful, reach the driver. Returns ``new`` minus the dropped
-        duplicates."""
-        man = self.manifest
-        base_df, tmp = None, None
-        if isinstance(carried, DataFrame):
-            base_df = carried
-        elif isinstance(carried, Snapshot) and carried.files_ref:
-            base_df = self._sidecar_df(carried.files_ref)
-        else:
-            base_list = (carried.files if isinstance(carried, Snapshot)
-                         else carried or [])
-            if base_list:
-                # retired alias names via the shared derivation:
-                # pre-rename files carry their stats under the
-                # then-physical name and pruning resolves through the
-                # chain
-                tmp = f"tmp-base-{os.urandom(4).hex()}.parquet"
-                man._write_files_sidecar(
-                    base_list,
-                    sidecar_stat_cols(snap.stat_cols, snap.renames), tmp)
-                base_df = self._sidecar_df(tmp)
-        try:
-            if dedupe and base_df is not None:
-                bh = base_df.select(
-                    F.get_json_object("entry_json", "$.content_hash")
-                    .alias("content_hash"))
-                dups = [r.path for r in
-                        new.join(bh, "content_hash", "left_semi")
-                        .select("path").collect()]
-                if dups:
-                    _remove_files(self.root, dups)
-                    new = new.join(
-                        self.spark.createDataFrame([(p,) for p in dups],
-                                                   "path string"),
-                        "path", "left_anti")
-            out = new.drop("content_hash", "schema_fp").withColumn(
-                "seq", F.lit(snap.snapshot_id).cast("long"))
-            if base_df is not None:
-                # allowMissingColumns: after a stat-column rename the
-                # base tracks smin_<old> while new entries track
-                # smin_<new>; each file's stats live under its
-                # then-physical name (NULL elsewhere) and pruning
-                # coalesces over the alias chain. A column that is text
-                # on one side only becomes text on both, as
-                # sidecar_encode keeps values of several types
-                bt, nt = dict(base_df.dtypes), dict(out.dtypes)
-                for c in bt.keys() & nt.keys():
-                    if bt[c] != nt[c] and "string" in (bt[c], nt[c]):
-                        text = F.col(c).cast("string")
-                        base_df = base_df.withColumn(c, text)
-                        out = out.withColumn(c, text)
-                out = base_df.unionByName(out, allowMissingColumns=True)
-            ref = f"files-{snap.snapshot_id}-{os.urandom(4).hex()}.parquet"
-            out.write.parquet(man.sidecar_path(ref))
-        finally:
-            if tmp:
-                man.remove_sidecar(tmp)
-        snap.files, snap.files_ref = [], ref
-        snap.files_count = _parquet_rows(man.sidecar_path(ref))
-        return new
 
     # ------------------------------------------------------------------
     # read / query
@@ -1853,11 +1687,11 @@ class IceTable:
           committed.
 
         Bucketed tables refuse: arbitrary external files cannot
-        satisfy a recorded bucket layout. Driver note: the commit
-        materializes the parent file list (for the content-hash
-        dedupe); the added entries themselves are bounded by the
-        migration size."""
-        snap = self.manifest.load()
+        satisfy a recorded bucket layout. Driver note: the added
+        entries are bounded by the migration size; a sidecar parent is
+        never parsed (its content hashes are tested in one Arrow pass,
+        ``Manifest.known_hashes``)."""
+        snap = self.manifest.load(load_files=False)
         self._require_no_staged(snap, "add_files")
         if snap.bucket_col:
             raise ValueError(
@@ -1925,8 +1759,8 @@ class IceTable:
                 "all files in one migration must share one schema")
         for f in new:
             f.partition = part_vals[f.path]
-        have_hashes = {f.content_hash for f in snap.files}
-        if all(f.content_hash in have_hashes for f in new):
+        hashes = {f.content_hash for f in new}
+        if self.manifest.known_hashes(_parent_files(snap), hashes) == hashes:
             shutil.rmtree(dest_dir, ignore_errors=True)
             return snap
         return self._commit_entries("add_files", snap, new, {}, dest_dir,
@@ -1969,7 +1803,8 @@ class IceTable:
         ``keep`` is every other file: the parent's entries minus the
         victims (inline), or the parent sidecar minus the victim paths
         (sidecar, a ``KeptSidecar``), so no sidecar entry reaches the
-        driver. ``preds`` are the MoR predicates that survive: those
+        driver. When every file is a victim ``keep`` is empty, and the
+        commit reads nothing of the parent sidecar. ``preds`` are the MoR predicates that survive: those
         some kept file still predates (seq scoping; rewritten files get
         a fresh seq and are out)."""
         import pyarrow as pa
@@ -1982,48 +1817,19 @@ class IceTable:
         paths = hit["path"].to_pylist()
         victims = [ManifestFile.stub(p, s)
                    for p, s in zip(paths, hit["seq"].to_pylist())]
-        # a NULL verdict keeps the file, as the anti-join on the victim
-        # paths does
+        # a NULL verdict keeps the file, as KeptSidecar.prune (not a
+        # victim path) does
         kept = inv.slice(0, 0) if cond is None else inv.filter(
             ~pc.field("path").isin(pa.array(paths, pa.string())))
         min_kept = pc.min(kept["seq"]).as_py()
         preds = [p for p in snap.delete_predicates
                  if min_kept is not None and p["seq"] > min_kept]
-        if snap.files_ref:
+        if snap.files_ref and len(kept):
             keep = KeptSidecar(snap.files_ref, paths, len(kept))
         else:
             gone = set(paths)
             keep = [f for f in snap.files if f.path not in gone]
         return _Rewrite(victims, keep, preds)
-
-    def _commit_rewrite(self, df: DataFrame, operation: str, snap: Snapshot,
-                        plan: _Rewrite, max_rows_per_file: int = 1_000_000,
-                        **kw) -> Snapshot:
-        """Commit ``df``'s rows as ``operation`` on ``snap``, carrying
-        over ``plan.keep`` with ``plan.preds``: on a sidecar-backed
-        table in the Spark commit form, as the parent sidecar frame
-        anti-joined on the victim paths."""
-        keep, keep_df = plan.keep, None
-        if isinstance(keep, KeptSidecar):
-            import pyarrow as pa
-
-            keep_df = self._sidecar_df(keep.files_ref)
-            if not keep.n:
-                keep_df = keep_df.limit(0)  # full rewrite, nothing kept
-            elif keep.drop:
-                # an Arrow-built local relation: no per-row pickling,
-                # and the broadcast side needs no job of its own. Built
-                # from one array: createDataFrame drops rows of a
-                # multi-chunk table (seen on Spark 4.1)
-                keep_df = keep_df.join(self.spark.createDataFrame(
-                    pa.table({"path": pa.array(keep.drop, pa.string())})),
-                    "path", "left_anti")
-            keep = []
-        return self._write_commit(
-            df, operation, snap.partition_col, snap.key_col,
-            max_rows_per_file, base_files=keep, base_files_df=keep_df,
-            delete_predicates=plan.preds,
-            expected_parent=snap.snapshot_id, **kw)
 
     def delete_range(self, partition: Any = None, lo: Any = None,
                      hi: Any = None) -> Snapshot:
@@ -2059,8 +1865,6 @@ class IceTable:
                 cond = cond & (F.col(snap.key_col) >= F.lit(lo))
             if hi is not None:
                 cond = cond & (F.col(snap.key_col) <= F.lit(hi))
-        # the driver commit form: on a sidecar-backed table the kept
-        # rows are copied as stored (Manifest.write_kept_sidecar)
         return self._write_commit(retained.filter(_not_true(cond)),
                                   "delete", snap.partition_col, snap.key_col,
                                   1_000_000, base_files=plan.keep,
@@ -2231,8 +2035,9 @@ class IceTable:
                 expected_parent=snap.snapshot_id)
         parts = {r[0] for r in df.select(part_col).distinct().collect()}
         if any(_norm_stat(p) is None for p in parts):
-            # NULL, or a decimal: no manifest records a decimal
-            # partition (its entry JSON cannot encode one)
+            # NULL, or a decimal: entry JSON records a decimal
+            # partition exactly, but its normalized partition_n (the
+            # column the mask tests) is NULL, so it addresses no file
             raise ValueError(
                 "overwrite_partitions: NULL or decimal partition values "
                 "in the incoming frame cannot address a partition")
@@ -2252,9 +2057,11 @@ class IceTable:
                     else pc.field("partition_n").isin(vals))
 
         plan = self._plan_rewrite(snap, mask)
-        return self._commit_rewrite(
-            df, "overwrite-partitions", snap, plan,
-            source_batch_id=source_batch_id, source_lineage=source_lineage)
+        return self._write_commit(
+            df, "overwrite-partitions", part_col, snap.key_col, 1_000_000,
+            base_files=plan.keep, delete_predicates=plan.preds,
+            source_batch_id=source_batch_id, source_lineage=source_lineage,
+            expected_parent=snap.snapshot_id)
 
     def merge(self, source: DataFrame, key_cols: list[str],
               when_matched: list[dict] | None = None,
@@ -2474,8 +2281,8 @@ class IceTable:
                  source_lineage: str | None) -> Snapshot:
         """Merge-on-read CDC commit: write the key set under
         ``deletes/``, append the upsert rows through the standard write
-        path (sidecar parents stay on the distributed commit — no
-        driver entry materialization), and attach the equality-delete
+        path (a sidecar parent's rows are copied as stored, never
+        parsed on the driver), and attach the equality-delete
         predicate with the ``"commit"`` seq sentinel so it scopes to
         exactly the pre-commit files. The delete file outlives
         compaction until ``expire_snapshots`` drops every snapshot that
@@ -2489,11 +2296,11 @@ class IceTable:
         try:
             return self._write_commit(
                 upserts, "cdc-mor", snap.partition_col, snap.key_col,
-                1_000_000, base_files=list(snap.files),
+                1_000_000,
                 delete_predicates=snap.delete_predicates + [pred],
                 source_batch_id=source_batch_id,
                 source_lineage=source_lineage,
-                expected_parent=snap.snapshot_id, base_mode="parent")
+                expected_parent=snap.snapshot_id)
         except CommitConflictError:
             shutil.rmtree(os.path.join(self.root, ref),
                           ignore_errors=True)
@@ -2544,9 +2351,11 @@ class IceTable:
         plan = self._plan_rewrite(snap, mask)
         existing = self._read_with_deletes(plan.victims, snap).join(
             all_keys, key_cols, "left_anti")
-        return self._commit_rewrite(
-            existing.unionByName(upserts), operation, snap, plan,
-            source_batch_id=source_batch_id, source_lineage=source_lineage)
+        return self._write_commit(
+            existing.unionByName(upserts), operation, snap.partition_col,
+            snap.key_col, 1_000_000, base_files=plan.keep,
+            delete_predicates=plan.preds, source_batch_id=source_batch_id,
+            source_lineage=source_lineage, expected_parent=snap.snapshot_id)
 
     # ------------------------------------------------------------------
     # maintenance
@@ -2565,8 +2374,8 @@ class IceTable:
         the per-partition file counts (``_partition_groups``), on the
         driver without a Spark job in either manifest regime: only
         victim (path, seq) stubs materialize (the reader needs the
-        paths), and on a sidecar-backed table the survivors flow into
-        the new sidecar as a DataFrame anti-join.
+        paths), and on a sidecar-backed table the survivors' rows are
+        copied into the new sidecar as stored, never parsed.
         """
         import pyarrow.compute as pc
 
@@ -2588,9 +2397,11 @@ class IceTable:
         plan = self._plan_rewrite(snap, mask)
         if not plan.victims:
             return snap
-        df = self._read_with_deletes(plan.victims, snap)
-        return self._commit_rewrite(df, "compact", snap, plan,
-                                    target_rows_per_file)
+        return self._write_commit(
+            self._read_with_deletes(plan.victims, snap), "compact",
+            snap.partition_col, snap.key_col, target_rows_per_file,
+            base_files=plan.keep, delete_predicates=plan.preds,
+            expected_parent=snap.snapshot_id)
 
     def _snapshot_paths(self, snap: Snapshot) -> set[str]:
         """File PATHS of one snapshot without materializing entries:
@@ -3140,8 +2951,9 @@ class IceTable:
         def _scratch(n: str) -> bool:
             # in-flight writer scratch: sidecar tmp (*.tmp), the
             # commit CAS / CURRENT-hint tmp names (*.tmp-<hex>), the
-            # distributed commit's staging dirs (tmp-entries-<hex>/
-            # tmp-base-<hex>), and hidden/underscore scratch
+            # staging dirs older versions' Spark-written commits left
+            # (tmp-entries-<hex>/tmp-base-<hex>), and hidden/underscore
+            # scratch
             return (n.startswith(("_tmp", "tmp-", "."))
                     or n.endswith(".tmp") or ".tmp-" in n)
 
@@ -3299,13 +3111,13 @@ class IceTable:
                 removed.append(rel)
         # _manifest/ crash leftovers: unreferenced files-* sidecars
         # (a writer that died between its sidecar write and the commit
-        # CAS — both the driver path and the Spark path write the
-        # sidecar FIRST) and commit scratch. The scratch matcher is
-        # anchored to the EXACT names the writers emit (r12 ADVICE —
-        # a generic "contains .tmp" test would delete any future live
-        # artifact whose name happens to look tmp-ish after the
-        # retention window): tmp-base-/tmp-entries-<hex8>.parquet
-        # distributed-commit staging, files-*.parquet.tmp driver
+        # CAS — the sidecar is written FIRST) and commit scratch. The
+        # scratch matcher is anchored to the EXACT names the writers
+        # emit (r12 ADVICE — a generic "contains .tmp" test would
+        # delete any future live artifact whose name happens to look
+        # tmp-ish after the retention window):
+        # tmp-base-/tmp-entries-<hex8>.parquet staging (left by older
+        # versions' Spark-written commits), files-*.parquet.tmp driver
         # sidecar temps, snapshot-N.json.tmp-<hex8> CAS temps, and
         # CURRENT.tmp-<hex8> hint temps. ONLY those shapes plus
         # unreferenced sidecars are candidates: snapshot-*.json is

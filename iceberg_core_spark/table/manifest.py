@@ -56,11 +56,13 @@ stats and NaN min/max keep it.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import time
 from dataclasses import asdict, dataclass, field
 from datetime import date, datetime, timedelta, timezone
+from decimal import Decimal
 from typing import Any
 
 _MANIFEST_DIR = "_manifest"
@@ -83,15 +85,13 @@ def _norm_stat(v: Any) -> Any:
     DAYS (int32-range int) — sidesteps every timestamp-type subtlety in
     the pruning comparison (the same raw-integer trick the nanos read
     path uses). Other types are stored natively."""
-    import decimal
-
     if isinstance(v, datetime):
         if v.tzinfo is not None:
             v = v.astimezone(timezone.utc).replace(tzinfo=None)
         return (v - _EPOCH_DT) // timedelta(microseconds=1)
     if isinstance(v, date):
         return (v - _EPOCH_D).days
-    if isinstance(v, decimal.Decimal):
+    if isinstance(v, Decimal):
         # no exactly-orderable plain encoding (strings sort wrong,
         # doubles round) — NULL stat, pruning keeps conservatively
         return None
@@ -113,11 +113,14 @@ def _proves_lt(a: Any, b: Any) -> bool:
 
 
 def _encode_key(v: Any) -> Any:
-    """JSON-encode a key-column stat value, tagging non-JSON types."""
+    """JSON-encode a partition/key/stat value, tagging non-JSON types
+    (decimals as their exact text)."""
     if isinstance(v, datetime):
         return {"__t": "ts", "v": v.isoformat()}
     if isinstance(v, date):
         return {"__t": "date", "v": v.isoformat()}
+    if isinstance(v, Decimal):
+        return {"__t": "dec", "v": str(v)}
     return v
 
 
@@ -127,6 +130,8 @@ def _decode_key(v: Any) -> Any:
             return datetime.fromisoformat(v["v"])
         if v["__t"] == "date":
             return date.fromisoformat(v["v"])
+        if v["__t"] == "dec":
+            return Decimal(v["v"])
     return v
 
 
@@ -324,12 +329,23 @@ def sidecar_encode(fs: list["ManifestFile"], stat_cols: list[str],
     return pa.table(data)
 
 
+# smallest row group write_kept_sidecar writes (but the last)
+_ROW_GROUP_ROWS = 65_536
+
+# the content hash as it appears in an entry_json document (the
+# name cannot occur unescaped inside a JSON string value)
+_HASH_RE = r'"content_hash":\s*"(?P<h>[^"]*)"'
+
+
 @dataclass
 class KeptSidecar:
-    """The files a rewrite carries over on a sidecar-backed table: the
-    rows of sidecar ``files_ref`` whose path is not in ``drop``, ``n``
-    of them. ``Manifest.write_kept_sidecar`` copies them as stored;
-    they are parsed only for a commit that lands inline."""
+    """The files a commit carries over from a sidecar-backed snapshot:
+    the rows of sidecar ``files_ref`` whose path is not in ``drop``,
+    ``n`` of them — all of them for an append (``drop=[]``), the
+    rewrite planner's keep for a rewrite. ``Manifest.write_kept_sidecar``
+    copies them as stored and ``Manifest.known_hashes`` dedupes
+    against them unparsed; they are parsed only for a commit that
+    lands inline."""
 
     files_ref: str
     drop: list[str]
@@ -493,8 +509,9 @@ class Snapshot:
     # IceTable.rename_column / append(evolve_schema=True).
     renames: list[dict] = field(default_factory=list)
     # Set when the file list lives in a Parquet sidecar
-    # (``_manifest/files-<id>.parquet`` — a single file when written by
-    # the driver, a directory when written by a Spark job) rather than
+    # (``_manifest/files-<id>.parquet`` — a single file written by the
+    # driver; tables written by older versions may also hold Spark-
+    # written ``part-*`` directories, which read the same) rather than
     # inline JSON; ``files`` is then populated only when loaded with
     # load_files=True. ``files_count`` is the entry count (known without
     # materializing the sidecar).
@@ -566,8 +583,7 @@ class Snapshot:
             # (drop-branch, add_files), and a silently-inherited
             # files_ref would resurrect the parent's sidecar on the
             # next load_files=True read (r11 review finding 4a). An
-            # explicit files_ref/files_count override still wins — the
-            # Spark commit path sets all three together.
+            # explicit files_ref/files_count override still wins.
             if "files_ref" not in overrides:
                 d["files_ref"] = None
             if "files_count" not in overrides:
@@ -691,9 +707,9 @@ class Manifest:
         read path shares (scan, incremental feed, pruned query, the
         rewrite planner), so a layout/seq-semantics change cannot drift
         one from another. Works on both layouts (the driver's single
-        file, a Spark commit's ``part-*`` directory, whose
-        ``_SUCCESS``/``.crc`` the dataset's default ignore prefixes
-        skip).
+        file, and the ``part-*`` directory older versions' Spark-written
+        commits left, whose ``_SUCCESS``/``.crc`` the dataset's default
+        ignore prefixes skip).
 
         ``prune(schema) -> (filter, filter_columns)`` keeps only the
         rows the Arrow filter passes; only they are ever materialized.
@@ -729,8 +745,9 @@ class Manifest:
         out = []
         for s, seq in zip(entries, seqs):
             f = ManifestFile.from_json(json.loads(s))
-            # seq lives in its own column (a Spark-side rebase retargets
-            # it with one lit(), never rewriting entry_json strings)
+            # the seq column is authoritative: sidecars that older
+            # versions' Spark-written commits left hold entry_json
+            # documents serialized before the seq was known
             f.seq = seq
             out.append(f)
         return out
@@ -785,11 +802,13 @@ class Manifest:
         """Write a single-file sidecar holding the ``kept`` rows, copied
         as stored (streamed batch by batch, no entry_json parsed), then
         ``fs`` in the ``sidecar_encode`` encoding; returns its row
-        count. A column
-        only one side has is NULL on the other; one the two sides type
-        differently takes their common type (int64 and double: double)
-        or, when they have none, text, as ``sidecar_encode`` keeps
-        values of several types."""
+        count. Small batches are merged into row groups of at least
+        ``_ROW_GROUP_ROWS`` rows, so a sidecar that every append copies
+        does not gain a row group per commit. A column only one side
+        has is NULL on the other; one the two sides type differently
+        takes their common type (int64 and double: double) or, when
+        they have none, text, as ``sidecar_encode`` keeps values of
+        several types."""
         import pyarrow as pa
         import pyarrow.dataset as ds
         import pyarrow.parquet as pq
@@ -815,18 +834,52 @@ class Manifest:
                 else pa.nulls(len(tbl), f.type) for f in schema],
                 schema=schema)
 
-        tmp, n = self.sidecar_path(files_ref) + ".tmp", len(add)
+        tmp, n, group = self.sidecar_path(files_ref) + ".tmp", 0, []
+        parts = itertools.chain(
+            (pa.Table.from_batches([b])
+             for b in src.to_batches(filter=kept.prune()[0])), [add])
         with pq.ParquetWriter(tmp, schema) as w:
-            for b in src.to_batches(filter=kept.prune()[0]):
-                n += b.num_rows
-                w.write_table(conform(pa.Table.from_batches([b])))
-            w.write_table(conform(add))
+            for part in parts:
+                group.append(conform(part))
+                n += len(part)
+                if sum(map(len, group)) >= _ROW_GROUP_ROWS:
+                    w.write_table(pa.concat_tables(group))
+                    group = []
+            if group:
+                w.write_table(pa.concat_tables(group))
         os.replace(tmp, self.sidecar_path(files_ref))
         return n
 
+    def known_hashes(self, base: list[ManifestFile] | KeptSidecar,
+                     hashes: set[str]) -> set[str]:
+        """The content hashes among ``hashes`` that a file of ``base``
+        already has — the content-hash dedupe of every commit. A
+        ``KeptSidecar`` is one streamed Arrow pass over its entry_json
+        column: the hash is cut out with a regex and tested against
+        ``hashes``, and only the rows that pass are parsed, to confirm
+        the match (~0.2 s for 100k entries)."""
+        if not isinstance(base, KeptSidecar):
+            return hashes & {f.content_hash for f in base}
+        if not hashes or not base.n:
+            return set()
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+
+        want = pa.array(sorted(hashes), type=pa.string())
+        src = ds.dataset(self.sidecar_path(base.files_ref), format="parquet")
+        found = set()
+        for b in src.to_batches(columns=["entry_json"],
+                                filter=base.prune()[0]):
+            ej = b.column(0)
+            h = pc.struct_field(pc.extract_regex(ej, _HASH_RE), [0])
+            for s in ej.filter(pc.is_in(h, value_set=want)).to_pylist():
+                found.add(json.loads(s)["content_hash"])
+        return found & hashes
+
     def remove_sidecar(self, files_ref: str) -> None:
-        """Delete a sidecar — single parquet file (driver-written) or
-        directory (Spark-job-written)."""
+        """Delete a sidecar — a single parquet file, or the directory an
+        older version's Spark-written commit left."""
         import shutil
 
         p = self.sidecar_path(files_ref)
@@ -867,8 +920,10 @@ class Manifest:
             doc = snapshot.to_json()
         sidecar_ref = None
         if snapshot.files_ref is not None and not snapshot.files:
-            # sidecar was built externally (by a Spark job over the file
-            # entries — the 1M-file commit path); reference it as-is
+            # the sidecar already exists — written before the claim
+            # (IceTable copies a kept sidecar's rows as stored, see
+            # write_kept_sidecar) or inherited by reference from the
+            # parent (metadata-only commits); reference it as-is
             doc["files"] = []
             doc["files_ref"] = snapshot.files_ref
             doc["files_count"] = snapshot.files_count

@@ -1,16 +1,18 @@
 #!/usr/bin/env python
-"""Time the file-rewriting ops on a sidecar-backed table and count
-their Spark jobs and the manifest form each commit lands in.
+"""Time the commits on a sidecar-backed table and count their Spark
+jobs and the manifest form each commit lands in.
 
-Builds a 48k-row table of 1536 files over 64 partitions (above
-``Manifest.inline_max``, so its file list is a Parquet sidecar), then
-runs four rounds of ``delete_range`` (a key range in one partition), a
-CoW ``upsert`` into one partition and ``overwrite_partitions`` of
-another, and one ``compact``. Prints one JSON line: per-op wall times
+Builds (``create``, timed) a 48k-row table of 1536 files over 64
+partitions (above ``Manifest.inline_max``, so its file list is a
+Parquet sidecar) and scans it once, untimed. Then runs four rounds of
+``delete_range`` (a key range in one partition), a CoW ``upsert`` into
+one partition, ``overwrite_partitions`` of another and an ``append``
+of rows already in the table (the content-hash dedupe drops its
+files), and one ``compact``. Prints one JSON line: per-op wall times
 (ms), Spark jobs per op (job groups, read after a probe job so the
 listener bus has caught up), and the form of each op's commit
-(``file``: driver-written sidecar, ``dir``: Spark-written sidecar,
-``inline``: JSON).
+(``file``: single-file sidecar, ``inline``: JSON; a ``dir`` is the
+directory-shaped sidecar older versions wrote with a Spark job).
 
 Usage: python scripts/measure_rewrite_ops.py <checkout> <seed> [out.jsonl]
 
@@ -48,11 +50,8 @@ def main() -> None:
     d = tempfile.mkdtemp(prefix="rewrite-ops-")
     df = spark.range(0, N_ROWS).selectExpr(
         "id", f"id % {N_PARTS} as part", "cast(id * 7 as string) as payload")
-    t = IceTable.create(spark, os.path.join(d, "t"), df,
-                        partition_col="part", key_col="id",
-                        max_rows_per_file=ROWS_PER_FILE)
-    snap = t.manifest.load(load_files=False)
-    assert snap.files_ref, "table is not sidecar-backed"
+    root = os.path.join(d, "t")
+    t = IceTable(spark, root)
     ms, jobs, forms = {}, {}, {}
 
     def form() -> str:
@@ -79,6 +78,19 @@ def main() -> None:
         jobs.setdefault(name, []).append(
             len(tracker.getJobIdsForGroup(group)))
 
+    timed("create", lambda: IceTable.create(
+        spark, root, df, partition_col="part", key_col="id",
+        max_rows_per_file=ROWS_PER_FILE))
+    snap = t.manifest.load(load_files=False)
+    assert snap.files_ref, "table is not sidecar-backed"
+    # rows the table already holds, from a partition no op rewrites:
+    # the same files each round, so every append after the first has
+    # all of them deduped away
+    dup = df.filter(f"part = {(seed + 8) % N_PARTS} AND id < 4000")
+    t.append(dup)
+    # untimed first read of table files: the JVM's parquet read path
+    # warms up here, not inside the first timed op
+    t.scan().count()
     schema = "id long, part long, payload string"
     for k in range(ROUNDS):
         p, lo = (seed + k) % N_PARTS, 1000 * k
@@ -90,6 +102,7 @@ def main() -> None:
         other = spark.createDataFrame(
             [(N_ROWS + k, (p + N_PARTS // 2) % N_PARTS, "ow")], schema)
         timed("overwrite_partitions", lambda: t.overwrite_partitions(other))
+        timed("append", lambda: t.append(dup))
     timed("compact", t.compact)
     rec = {"checkout": repo, "seed": seed, "files": snap.files_count,
            "ms_median": {k: round(statistics.median(v), 1)

@@ -21,11 +21,10 @@ def sf_dir():
 
 @pytest.fixture(params=["inline", "spark-sidecar"])
 def regime(request, monkeypatch):
-    """Both manifest regimes and both forms of the commit loop: at the
-    default inline_max small commits collect their entries to the
-    driver (inline JSON); inline_max=0 sends creates and appends through
-    the Spark-written sidecar and spills every other commit to a
-    driver-written one."""
+    """Both manifest regimes: at the default inline_max small tables
+    keep their file list as inline JSON; inline_max=0 lands every
+    non-empty commit as a driver-written single-file sidecar. The
+    ``spark-sidecar`` ID is kept so test IDs stay stable."""
     if request.param == "spark-sidecar":
         monkeypatch.setattr(Manifest, "inline_max", 0)
     return request.param

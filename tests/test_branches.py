@@ -138,8 +138,8 @@ def test_two_branches_isolated(spark, sf_dir, tmp_path):
 
 def test_staged_survives_sidecar_commit_path(spark, sf_dir, tmp_path,
                                              monkeypatch):
-    """Branch append onto a sidecar-backed parent routes through the
-    distributed commit — staged bookkeeping must ride it too."""
+    """Branch append onto a sidecar-backed parent copies the parent's
+    rows into a new sidecar — staged bookkeeping must ride it too."""
     monkeypatch.setattr(Manifest, "inline_max", 4)
     docs = _docs(spark, sf_dir)
     t = IceTable.create(

@@ -9,7 +9,12 @@ import time
 import pytest
 
 from iceberg_core_spark.table import IceTable
-from iceberg_core_spark.table.manifest import Manifest, ManifestFile, Snapshot
+from iceberg_core_spark.table.manifest import (
+    KeptSidecar,
+    Manifest,
+    ManifestFile,
+    Snapshot,
+)
 
 
 @pytest.fixture
@@ -117,44 +122,63 @@ def test_sidecar_prunes_10k_files_metadata_only(spark, tmp_path):
     assert len(pv) < 20
 
 
-def test_distributed_commit_never_materializes_entries(
+def _count_parsed(monkeypatch) -> list[str]:
+    """Paths of every manifest entry decoded from JSON from now on."""
+    parsed, from_json = [], ManifestFile.from_json
+
+    def counting(d):
+        parsed.append(d["path"])
+        return from_json(d)
+
+    monkeypatch.setattr(ManifestFile, "from_json", staticmethod(counting))
+    return parsed
+
+
+def test_sidecar_append_never_parses_parent_entries(
         spark, tmp_path, small_inline_max, monkeypatch):
-    """Large commits build the sidecar with a Spark job: the driver-side
-    entry collector must never run, seq comes from the sidecar column,
-    and content-hash dedupe works as a semi-join against the parent
-    sidecar."""
-    import iceberg_core_spark.table.ice_table as it
-
-    def boom(*a, **k):
-        raise AssertionError("driver-side entry collection ran")
-
-    monkeypatch.setattr(it, "_collect_entries", boom)
-
+    """An append onto a sidecar-backed parent copies the parent's rows
+    as stored: no parent entry is parsed on the driver, seq comes from
+    the sidecar column, and content-hash dedupe works against the
+    parent sidecar unparsed."""
     root = str(tmp_path / "dist")
     t = _mk_table(spark, root)  # create: 8 files > inline_max=2
     snap = t.manifest.load(load_files=False)
     assert snap.files_ref and snap.files_count == t.file_count()
     assert snap.files == []  # lazy: nothing materialized
+    parent = {p for p, _s in t.manifest.read_sidecar_path_seq(snap.files_ref)}
 
-    # append onto the sidecar-backed parent (distributed union)
+    parsed = _count_parsed(monkeypatch)
     extra = spark.range(2000, 2600).selectExpr(
         "id", "id % 4 as part", "cast(id as string) as payload")
     t.append(extra)
     snap2 = t.manifest.load(load_files=False)
     assert snap2.files_ref and snap2.files_count > snap.files_count
+    assert os.path.isfile(t.manifest.sidecar_path(snap2.files_ref))
+    added = {p for p, s in t.manifest.read_sidecar_path_seq(snap2.files_ref)
+             if s == snap2.snapshot_id}
+    assert added and set(parsed) == added  # only the new files' entries
     assert t.scan().count() == 2600
-
-    # seq column round-trips: base files keep 0, new files carry 1
-    full = t.manifest.load()
-    seqs = {f.seq for f in full.files}
-    assert seqs == {0, 1}
 
     # idempotent re-append of identical content is dropped by the
-    # sidecar semi-join dedupe
-    before = t.file_count()
+    # content-hash pass over the parent sidecar
+    before, parsed[:] = t.file_count(), []
     t.append(extra, dedupe_identical_files=True)
+    assert parsed and not set(parsed) & (parent | added)
     assert t.scan().count() == 2600
     assert t.file_count() == before
+    # copied rows and new entries share a row group: a sidecar every
+    # append copies does not gain one per commit
+    import pyarrow.parquet as pq
+
+    ref = t.manifest.load(load_files=False).files_ref
+    assert pq.ParquetFile(
+        t.manifest.sidecar_path(ref)).metadata.num_row_groups == 1
+
+    # seq column round-trips: base files keep 0, new files carry 1
+    monkeypatch.undo()
+    full = t.manifest.load()
+    assert {f.seq for f in full.files} == {0, 1}
+    assert {f.path for f in full.files if f.seq == 1} == added
 
 
 # ---------------------------------------------------------------------------
@@ -256,9 +280,10 @@ def test_expire_with_shared_sidecar_among_dropped(spark, tmp_path,
 
 def test_stale_sidecar_compact_conflicts_and_cleans(spark, tmp_path,
                                                     small_inline_max):
-    """A stale distributed (base_files_df) compact commit must raise
-    CommitConflictError and delete its newly written data files — same
-    contract as the inline read-modify-write path (test_occ)."""
+    """A stale compact commit carrying a sidecar parent's rows
+    (``KeptSidecar`` base) must raise CommitConflictError, delete its
+    newly written data files and its own sidecar — same contract as
+    the inline read-modify-write path (test_occ)."""
     import pytest as _pytest
 
     from iceberg_core_spark.table.manifest import CommitConflictError
@@ -266,7 +291,7 @@ def test_stale_sidecar_compact_conflicts_and_cleans(spark, tmp_path,
     root = str(tmp_path / "t")
     t = _mk_table(spark, root)
     snap = t.manifest.load(load_files=False)
-    mdf = spark.read.parquet(t.manifest.sidecar_path(snap.files_ref))
+    keep = KeptSidecar(snap.files_ref, [], snap.files_count)
 
     # another writer advances the table first
     t.append(spark.range(2000, 2050).selectExpr(
@@ -277,8 +302,7 @@ def test_stale_sidecar_compact_conflicts_and_cleans(spark, tmp_path,
             spark.range(9000, 9010).selectExpr(
                 "id", "id % 4 as part", "cast(id as string) as payload"),
             "compact", snap.partition_col, snap.key_col, 1_000_000,
-            base_files=[], expected_parent=snap.snapshot_id,
-            base_files_df=mdf,
+            base_files=keep, expected_parent=snap.snapshot_id,
         )
     t2 = IceTable(spark, root)
     assert t2.scan().count() == 2050  # loser's rows absent
@@ -290,6 +314,9 @@ def test_stale_sidecar_compact_conflicts_and_cleans(spark, tmp_path,
         for n in ns if n.endswith(".parquet")
     }
     assert on_disk == live  # loser's files deleted, not orphaned
+    refs = {s.files_ref for s in t2.snapshots()}
+    assert {n for n in os.listdir(t2.manifest.dir)
+            if n.startswith("files-")} == refs  # loser's sidecar too
 
 
 def test_rollback_metadata_only_shared_ref(spark, tmp_path,
@@ -598,13 +625,19 @@ def test_sidecar_string_partition_int_bound_keeps_files(spark, tmp_path,
 
 def test_sidecar_prunes_like_inline_on_spark_written_directory(
         spark, tmp_path, small_inline_max):
-    """The distributed commit writes the sidecar as a Spark ``part-*``
-    directory (with ``_SUCCESS``/``.crc`` siblings); the Arrow pass must
-    read it as one dataset and agree with the inline verdicts."""
+    """Tables written by older versions hold sidecars that a Spark job
+    wrote as a ``part-*`` directory (with ``_SUCCESS``/``.crc``
+    siblings): the Arrow pass must read one as a dataset and agree with
+    the inline verdicts, and a commit must carry its rows over."""
     t = _mk_table(spark, str(tmp_path / "dir"))
     snap = t.manifest.load(load_files=False)
-    assert os.path.isdir(t.manifest.sidecar_path(snap.files_ref))
+    path = t.manifest.sidecar_path(snap.files_ref)
+    t._sidecar_df(snap.files_ref).repartition(3).write.parquet(path + ".d")
+    os.remove(path)
+    os.rename(path + ".d", path)
+    assert os.path.isdir(path)
     every = {f.path for f in t.manifest.load().files}
+    assert len(every) == snap.files_count
     for bounds in [dict(partition=3, lo=100, hi=500), dict(partition=1),
                    dict(lo=1500), dict(hi=-1), dict(ranges={"id": (10, 20)}),
                    dict(partition=2, ranges={"id": (900, 1300)})]:
@@ -613,6 +646,12 @@ def test_sidecar_prunes_like_inline_on_spark_written_directory(
         if bounds != dict(hi=-1):
             assert 0 < len(want) < len(every), bounds
     assert _sidecar_pruned(t, hi=-1) == set()
+    t.append(spark.range(2000, 2100).selectExpr(
+        "id", "id % 4 as part", "cast(id as string) as payload"))
+    cur = t.manifest.load(load_files=False)
+    assert os.path.isfile(t.manifest.sidecar_path(cur.files_ref))
+    assert every < {f.path for f in t.manifest.load().files}
+    assert t.scan().count() == 2100
 
 
 def test_sidecar_prunes_like_inline_across_spec_and_rename(
@@ -723,11 +762,16 @@ def _part_batch(spark, ids, part):
 
 
 @pytest.mark.parametrize("op", ["delete_range", "delete_where_cow", "upsert",
-                                "overwrite_partitions", "maintain"])
+                                "overwrite_partitions", "maintain",
+                                "add_files"])
 def test_rewrite_ops_never_materialize_sidecar_entries(
         spark, tmp_path, small_inline_max, monkeypatch, op):
-    """On a sidecar-backed table no file-rewriting op parses a sidecar
-    entry on the driver, and each one still returns the right rows."""
+    """On a sidecar-backed table no file-rewriting op, nor add_files,
+    parses a sidecar entry on the driver, and each one still returns
+    the right rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from iceberg_core_spark.table.ice_table import MaintenancePolicy
 
     t = _mk_table(spark, str(tmp_path / "t"))
@@ -748,6 +792,19 @@ def test_rewrite_ops_never_materialize_sidecar_entries(
         changed = {3, 7}
         t.overwrite_partitions(_part_batch(spark, changed, 3))
         ids -= {i for i in range(2000) if i % 4 == 3} - changed
+    elif op == "add_files":
+        changed = {5000, 5004}
+        src = tmp_path / "src" / "part=0" / "a.parquet"
+        src.parent.mkdir(parents=True)
+        pq.write_table(pa.table({
+            "id": pa.array(sorted(changed), pa.int64()),
+            "part": pa.array([0, 0], pa.int64()),
+            "payload": [f"new{i}" for i in sorted(changed)]}), str(src))
+        before = t.file_count()
+        t.add_files([str(src)])
+        t.add_files([str(src)])  # same bytes again: nothing new
+        assert t.file_count() == before + 1
+        ids |= changed
     else:
         report = t.maintain(MaintenancePolicy(max_files_per_partition=2,
                                               keep_snapshots=1))
@@ -854,6 +911,82 @@ def test_delete_range_keeps_driver_commit_form(spark, tmp_path,
     snap = t.delete_range(partition=2, lo=0, hi=100)
     assert snap.files_ref is None and snap.files
     assert t.scan().count() == 2000 - 100 - 25
+
+
+def test_full_rewrite_reads_nothing_of_parent_sidecar(spark, tmp_path,
+                                                      small_inline_max,
+                                                      monkeypatch):
+    """A merge whose keys miss the partition column rewrites every
+    file: the planner's keep is empty, and after planning the commit
+    opens nothing of the parent sidecar (no kept-row copy against a
+    drop list of every path)."""
+    t = _mk_table(spark, str(tmp_path / "t"))
+    parent = t.manifest.load(load_files=False).files_ref
+    assert parent
+    plan_rewrite, sidecar_path = IceTable._plan_rewrite, Manifest.sidecar_path
+    plans, opened = [], []
+
+    def traced_plan(self, snap, mask):
+        plans.append(plan_rewrite(self, snap, mask))
+        opened.clear()  # the planner reads the inventory; after it, none
+        return plans[-1]
+
+    def traced_path(self, files_ref):
+        opened.append(files_ref)
+        return sidecar_path(self, files_ref)
+
+    monkeypatch.setattr(IceTable, "_plan_rewrite", traced_plan)
+    monkeypatch.setattr(Manifest, "sidecar_path", traced_path)
+    t.upsert(_part_batch(spark, {1, 2001}, 1), key_cols=["id"])
+    (plan,) = plans
+    assert plan.keep == [] and len(plan.victims) == 8
+    assert parent not in opened
+    monkeypatch.undo()
+    snap = t.manifest.load(load_files=False)
+    assert snap.files_ref and snap.files_ref != parent
+    rows = t.scan().collect()
+    assert sorted(r.id for r in rows) == list(range(2000)) + [2001]
+    assert {r.payload for r in rows if r.id in (1, 2001)} == {
+        "new1", "new2001"}
+
+
+def test_decimal_partition_and_key_round_trip(spark, tmp_path, regime):
+    """A table partitioned by a decimal column with a decimal key
+    commits (the entry JSON tags decimals exactly) and reads back the
+    right rows after create, append, query, delete_range and scan in
+    both manifest regimes; decimal stats have no sidecar encoding, so
+    the sidecar keeps those files conservatively."""
+    from decimal import Decimal
+
+    def rows(a, b):
+        return spark.range(a, b).selectExpr(
+            "cast(id as decimal(7,2)) as k",
+            "cast(id % 3 as decimal(5,2)) as part",
+            "cast(id as string) as payload")
+
+    def ids(df):
+        return sorted(int(r.k) for r in df.collect())
+
+    t = IceTable.create(spark, str(tmp_path / "dec"), rows(0, 40),
+                        partition_col="part", key_col="k",
+                        max_rows_per_file=5)
+    assert bool(t.manifest.load(load_files=False).files_ref) == (
+        regime == "spark-sidecar")
+    assert ids(t.scan()) == list(range(40))
+    f = next(f for f in t.manifest.load().files if f.partition == 1)
+    assert isinstance(f.partition, Decimal) and isinstance(f.key_min,
+                                                           Decimal)
+    t.append(rows(40, 60))
+    assert ids(t.scan()) == list(range(60))
+    got = ids(t.query(partition=Decimal("1.00"), lo=Decimal("10"),
+                      hi=Decimal("30")))
+    assert got == [i for i in range(10, 31) if i % 3 == 1]
+    t.delete_range(partition=Decimal("2.00"), lo=Decimal("0"),
+                   hi=Decimal("20"))
+    assert ids(t.scan()) == [i for i in range(60)
+                             if not (i % 3 == 2 and i <= 20)]
+    assert ids(t.query(partition=Decimal("2.00"))) == [
+        i for i in range(21, 60) if i % 3 == 2]
 
 
 def test_stats_partition_keys_normalized_in_both_regimes(spark, tmp_path,

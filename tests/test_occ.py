@@ -133,7 +133,6 @@ def test_stale_append_does_not_revert_partition_spec(spark, root, regime):
             location_df(spark, [location_row(timestamp=900)]),
             "append", base.partition_col, base.key_col, 1_000_000,
             base_files=list(base.files), expected_parent=base.snapshot_id,
-            base_mode="parent",
         )
     final = IceTable(spark, root)
     snap = final.manifest.load()

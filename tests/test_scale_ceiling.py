@@ -223,3 +223,48 @@ def test_maintenance_probe_bounded_100k(big_manifest_table):
     assert elapsed < 30, f"probe took {elapsed:.1f}s"
     # Python-side peak: a scalar came back, not 100k entries (~10 MB)
     assert peak < 2_000_000, f"peak {peak} bytes"
+
+
+def test_append_onto_100k_sidecar_parses_no_entry(spark, tmp_path,
+                                                  monkeypatch):
+    """A 1-file append onto a 100k-entry sidecar copies the parent's
+    rows as stored, batch by batch: neither its content-hash dedupe
+    (one Arrow pass over entry_json) nor its commit parses a parent
+    entry, and the Python-side peak stays far below the ~100 MB that
+    100k parsed entries take. Its own table: the module's shared one
+    stays as the other tests expect it."""
+    root = str(tmp_path / "t")
+    t = IceTable.create(spark, root, spark.range(5).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")), key_col="k")
+    prev = t.manifest.load(load_files=False)
+    ref = "files-synth.parquet"
+    t.manifest._write_files_sidecar([ManifestFile(
+        path=os.path.join("data", "synthetic", f"f{i:06d}.parquet"),
+        partition=None, key_min=i * 10, key_max=i * 10 + 9, rows=5,
+        bytes=1000, content_hash=f"h{i:06d}") for i in range(N_FILES)],
+        [], ref)
+    t.manifest.commit(prev.child("append", files=[], files_ref=ref,
+                                 files_count=N_FILES))
+
+    parsed, from_json = [], ManifestFile.from_json
+
+    def counting(d):
+        parsed.append(d["path"])
+        return from_json(d)
+
+    monkeypatch.setattr(ManifestFile, "from_json", staticmethod(counting))
+    one_row = spark.range(2_000_000, 2_000_001).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+    tracemalloc.start()
+    snap = t.append(one_row)
+    _cur, peak = tracemalloc.get_traced_memory()
+    tracemalloc.stop()
+    monkeypatch.undo()
+    assert len(parsed) == 1 and not parsed[0].startswith(
+        os.path.join("data", "synthetic"))
+    assert snap.files_count == N_FILES + 1
+    assert os.path.isfile(t.manifest.sidecar_path(snap.files_ref))
+    # measured ~0.5 MB (Arrow batches sit in Arrow's pool, unseen)
+    assert peak < 5_000_000, f"append peak {peak} bytes"
+    assert [r.v for r in t.query(lo=2_000_000, hi=2_000_000).collect()
+            ] == [4_000_000]

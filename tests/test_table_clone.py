@@ -240,11 +240,11 @@ def test_clone_never_trusts_source_current_hint(
 
 def test_clone_handles_directory_sidecars_and_staging_debris(
         spark, tmp_path, monkeypatch):
-    """Once a commit's file count exceeds Manifest.inline_max, its
-    sidecar is a Spark-written parquet DIRECTORY under _manifest/ —
-    the clone must link its leaf files (os.link on a directory is
-    EPERM), and a crashed distributed commit's tmp-entries-<hex> /
-    tmp-base-<hex> staging dirs must be skipped, not linked in."""
+    """Tables written by older versions hold sidecars that a Spark job
+    wrote as a parquet DIRECTORY under _manifest/ — the clone must link
+    its leaf files (os.link on a directory is EPERM), and the
+    tmp-entries-<hex> / tmp-base-<hex> staging dirs a crashed commit of
+    that kind left must be skipped, not linked in."""
     from iceberg_core_spark.table.manifest import Manifest
 
     monkeypatch.setattr(Manifest, "inline_max", 3)
@@ -253,6 +253,11 @@ def test_clone_handles_directory_sidecars_and_staging_debris(
         _df(spark, [(i, "a", i * 10) for i in range(12)]),
         partition_col=None, key_col="k", max_rows_per_file=2)
     man = tmp_path / "src" / "_manifest"
+    ref = t.manifest.load(load_files=False).files_ref
+    side = t.manifest.sidecar_path(ref)
+    t._sidecar_df(ref).repartition(2).write.parquet(side + ".d")
+    os.remove(side)
+    os.rename(side + ".d", side)
     sidecar_dirs = [n for n in os.listdir(man)
                     if n.startswith("files-") and
                     os.path.isdir(man / n)]

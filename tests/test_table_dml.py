@@ -198,9 +198,10 @@ def test_cdc_mor_compact_then_expire_cleans_delete_files(spark, table):
 
 def test_apply_cdc_mor_sidecar_distributed_commit(spark, tmp_path,
                                                   monkeypatch):
-    """On a sidecar-backed table the cdc-mor commit must take the
-    distributed path (entries never materialize on the driver) and the
-    predicate's sentinel seq must resolve to the landed snapshot id."""
+    """On a sidecar-backed table the cdc-mor commit must stay
+    sidecar-backed (the parent's rows copied as stored, never parsed on
+    the driver) and the predicate's sentinel seq must resolve to the
+    landed snapshot id."""
     from iceberg_core_spark.table.manifest import Manifest
 
     monkeypatch.setattr(Manifest, "inline_max", 1)
@@ -225,10 +226,10 @@ def test_apply_cdc_mor_sidecar_distributed_commit(spark, tmp_path,
 
 def test_merge_cow_sidecar_scoped_distributed(spark, tmp_path,
                                               monkeypatch):
-    """CoW merge on a sidecar-backed table: the affected/keep split
-    runs as a DataFrame predicate over the sidecar — untouched
-    partitions carry over byte-identical through the distributed
-    commit, and the result is exact."""
+    """CoW merge on a sidecar-backed table: the rewrite planner's
+    affected/keep split runs over the sidecar — untouched partitions
+    carry over byte-identical (their rows copied as stored), and the
+    result is exact."""
     from iceberg_core_spark.table.manifest import Manifest
 
     monkeypatch.setattr(Manifest, "inline_max", 1)
