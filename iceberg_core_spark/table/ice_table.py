@@ -43,7 +43,14 @@ Scale design:
   regime, on the driver with no Spark job. Only the rewritten files'
   (path, seq) stubs become Python objects; a sidecar's carried-over
   entries are never parsed (the commit copies them as stored).
-  ``stats()`` and the maintain probe aggregate the same inventory.
+- The read and metadata plane reads the same inventory
+  (``Manifest.inventory``) in either regime: scan and the sidecar
+  query pruning take (path, seq) stubs of it, the change feeds
+  (scan_incremental, scan_changes, diff_stats) split two snapshots'
+  inventories in one driver-side diff (``_file_diff``), and
+  ``stats()``, the maintain probe, ``history_df`` and expiry aggregate
+  or list its columns. None of them starts a Spark job to plan or
+  parses an entry.
 - Multi-writer safe: lock-free optimistic concurrency (see
   table/manifest.py). Every data commit goes through one
   compare-and-swap loop (``_commit_entries``) with automatic
@@ -427,8 +434,16 @@ def _layout(snap: Snapshot) -> tuple:
             snap.zorder_by, snap.bucket_col, snap.n_buckets)
 
 
+def _stubs(inv) -> list[ManifestFile]:
+    """(path, seq) ``ManifestFile.stub``s of the rows of a file
+    inventory (``Manifest.inventory``): what the read path needs of a
+    file, at ~100 B each."""
+    return [ManifestFile.stub(p, s) for p, s in
+            zip(inv["path"].to_pylist(), inv["seq"].to_pylist())]
+
+
 def _partition_groups(inv):
-    """Per-partition rollup of a file inventory (``IceTable._inventory``)
+    """Per-partition rollup of a file inventory (``Manifest.inventory``)
     keyed by the normalized partition value ``partition_n``:
     ``count_all`` files, plus ``rows_sum``/``bytes_sum`` when the
     inventory carries those columns. compact's victim rule, the
@@ -801,7 +816,9 @@ class IceTable:
         the new entries (``Manifest.write_kept_sidecar``), and a list
         base is spilled by ``Manifest.commit``; a ``KeptSidecar`` is
         parsed only when the commit lands inline (at most
-        ``inline_max`` entries).
+        ``inline_max`` entries). A whole ``KeptSidecar`` with nothing
+        new (a fully-deduped append) is shared by reference, not
+        copied; a lost race removes only a sidecar the attempt wrote.
 
         Every attempt is the ``child()`` of the snapshot it lands on —
         ``based_on`` first, then each winner — with ``fields``
@@ -847,11 +864,19 @@ class IceTable:
                 new = [f for f in new if f.content_hash not in dups]
             for f in new:
                 f.seq = sid  # data sequence number = adding snapshot
-            snap.files_ref = snap.files_count = None
-            if (isinstance(carried, KeptSidecar)
+            snap.files_ref = snap.files_count = wrote = None
+            if (isinstance(carried, KeptSidecar) and not new
+                    and not carried.drop):
+                # the file set IS the carried sidecar (an append whose
+                # every file was a duplicate): share it by reference,
+                # as metadata-only commits do
+                snap.files_ref, snap.files_count = (carried.files_ref,
+                                                    carried.n)
+                snap.files = []
+            elif (isinstance(carried, KeptSidecar)
                     and len(carried) + len(new) > man.inline_max):
-                snap.files_ref = (f"files-{sid}-"
-                                  f"{os.urandom(4).hex()}.parquet")
+                snap.files_ref = wrote = (f"files-{sid}-"
+                                          f"{os.urandom(4).hex()}.parquet")
                 snap.files_count = man.write_kept_sidecar(
                     carried, new,
                     sidecar_stat_cols(snap.stat_cols, snap.renames),
@@ -867,8 +892,8 @@ class IceTable:
                 man.commit(snap)
                 return snap
             except CommitConflictError:
-                if snap.files_ref and not snap.files:
-                    man.remove_sidecar(snap.files_ref)
+                if wrote:  # never a sidecar this attempt shares
+                    man.remove_sidecar(wrote)
                 if operation in _REBASES:
                     winner = man.load(load_files=False)
                     # an overwrite drops every file, so it cannot land
@@ -902,9 +927,9 @@ class IceTable:
         """Full-table scan of one snapshot (time travel via snapshot_id,
         or by name via ``ref`` — a tag created with :meth:`create_tag`).
         Merge-on-read delete predicates are applied here, scoped to the
-        files they were issued against. Sidecar-backed snapshots read
-        only (path, seq) — a full scan of a 1M-file table never parses
-        1M JSON entries on the driver.
+        files they were issued against. Files are read as (path, seq)
+        stubs of the inventory (``Manifest.inventory``) — a full scan of
+        a 1M-file table never parses 1M JSON entries on the driver.
 
         ``branch``: audit view — files staged on THAT branch
         (append(..., branch=...)) become visible; files staged on other
@@ -915,12 +940,8 @@ class IceTable:
                 raise ValueError("pass snapshot_id or ref, not both")
             snapshot_id = self.resolve_ref(ref)
         snap = self.manifest.load(snapshot_id, load_files=False)
-        if snap.files_ref:
-            files = [ManifestFile.stub(p, s) for p, s in
-                     self.manifest.read_sidecar_path_seq(snap.files_ref)]
-            return self._read_with_deletes(files, snap, snapshot_id,
-                                           branch=branch)
-        return self._read_with_deletes(snap.files, snap, snapshot_id,
+        files = _stubs(self.manifest.inventory(snap, ["path", "seq"]))
+        return self._read_with_deletes(files, snap, snapshot_id,
                                        branch=branch)
 
     def _read_with_deletes(self, files, snap, snapshot_id=None,
@@ -978,8 +999,9 @@ class IceTable:
         in either regime. Inline-JSON snapshots prune with a list pass
         over the entries. Sidecar-backed snapshots (file count >
         Manifest.inline_max) prune with one streamed pyarrow scan of
-        the files parquet under an Arrow filter
-        (manifest.sidecar_keep_filter) that projects only (path, seq):
+        the files parquet (``Manifest.inventory``) under an Arrow
+        filter (manifest.sidecar_keep_filter) that projects only
+        (path, seq):
         entry_json is never read and only the surviving stubs are
         materialized, so a point query on a 1M-file table builds a
         handful of stubs, not a million entries. Bounds are normalized
@@ -1038,11 +1060,9 @@ class IceTable:
         # ~100 MB of driver heap. Queries whose predicate prunes
         # poorly on a huge table should raise driver memory or tighten
         # the predicate — the pruned-out majority never materializes.
-        return [
-            ManifestFile.stub(p, s)
-            for p, s in self.manifest.read_sidecar_pruned(
-                snap, partition=partition, lo=lo, hi=hi, ranges=ranges)
-        ]
+        return _stubs(self.manifest.inventory(
+            snap, ["path", "seq"], prune=lambda schema: sidecar_keep_filter(
+                schema, snap, partition, lo, hi, ranges)))
 
     def range_scan(self, ranges: dict[str, tuple[Any, Any]],
                    snapshot_id: int | None = None) -> DataFrame:
@@ -1146,8 +1166,11 @@ class IceTable:
         bucket id from the bucket-suffix file names the bucketed write
         produced, which the links preserve. Returns ``name``; drop with
         ``spark.sql(f"DROP TABLE {name}")`` (links stay until
-        expire_snapshots removes the snapshot)."""
-        snap = self.manifest.load(snapshot_id)
+        expire_snapshots removes the snapshot). Only the (path, seq)
+        columns of the inventory are read; no entry is parsed."""
+        import pyarrow.compute as pc
+
+        snap = self.manifest.load(snapshot_id, load_files=False)
         # the catalog scan reads raw files and cannot hide staged ones
         self._require_no_staged(snap, "as_bucketed_table")
         if not snap.bucket_col:
@@ -1168,6 +1191,7 @@ class IceTable:
         # snapshot id; entries without the r14 "seq" stamp are treated
         # as predated — conservative). compact(min_files=1) rewrites
         # every file under current names and clears the condition.
+        inv = self.manifest.inventory(snap, ["path", "seq"])
         current = {f.name for f in schema.fields}
         chains = _fold_chains(snap.renames)
         live_retired = {o for k, olds in chains.items()
@@ -1201,8 +1225,7 @@ class IceTable:
                                      snap.snapshot_id)
                     for s, r in zip(seqs, relevant)
                 ]
-            bound = max(seqs)
-            if any(f.seq <= bound for f in snap.files):
+            if pc.any(pc.less_equal(inv["seq"], max(seqs))).as_py():
                 raise ValueError(
                     "snapshot holds files written before a column "
                     "rename; the bucketed catalog scan reads raw files "
@@ -1214,10 +1237,10 @@ class IceTable:
             self.root, "_bucketed", f"v{snap.snapshot_id}"
         )
         os.makedirs(linkdir, exist_ok=True)
-        for f in snap.files:
-            dst = os.path.join(linkdir, os.path.basename(f.path))
+        for path in inv["path"].to_pylist():
+            dst = os.path.join(linkdir, os.path.basename(path))
             if not os.path.exists(dst):
-                os.link(os.path.join(self.root, f.path), dst)
+                os.link(os.path.join(self.root, path), dst)
         cols_ddl = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
         )
@@ -1243,46 +1266,55 @@ class IceTable:
         keeps its path across stage→publish, so visibility — not path
         presence — is what the main-view consumer tracks: rows
         published inside the window surface as added; r14 review).
-        For sidecar-backed snapshots the difference runs as a
-        DataFrame anti-join over the two sidecars, and only
-        (path, seq) PAIRS — never per-file entries — reach the
-        driver: the reader needs paths, MoR scoping needs seq,
-        nothing needs stats. A backfill commit adding 100k files
-        costs 100k short strings, not 100k parsed JSON entries. Note
+        The difference is ``_file_diff`` on the driver in either
+        manifest regime, with no Spark job: only the ADDED files become
+        (path, seq) stubs — the reader needs paths, MoR scoping needs
+        seq, nothing needs stats — so a backfill commit adding 100k
+        files costs 100k stubs, not 100k parsed JSON entries. Note
         rows REWRITTEN by compact/upsert/delete re-emit (their files
         are new); on append-only ingest, the common case, the feed is
         exactly-once. MoR delete predicates of the ``until`` snapshot
         apply."""
         cur = self.manifest.load(until, load_files=False)
         base = self.manifest.load(since, load_files=False)
-        base_hidden = _hidden_seqs(base, None)
+        added, _removed, _common = self._file_diff(cur, base)
+        return self._read_with_deletes(_stubs(added), cur, until)
 
-        if cur.files_ref or base.files_ref:
-            def side(snap):
-                if snap.files_ref:
-                    return self._sidecar_df(snap.files_ref).select(
-                        "path", "seq")
-                rows = [(f.path, f.seq) for f in snap.files]
-                return self.spark.createDataFrame(
-                    rows or [("", 0)], "path string, seq long"
-                ).filter(F.col("path") != "")
+    def _file_diff(self, cur: Snapshot, base: Snapshot,
+                   columns: tuple[str, ...] = ("path", "seq")):
+        """The one file diff of two snapshots, behind scan_incremental,
+        scan_changes and diff_stats: ``(added, removed, common)``
+        inventories (``Manifest.inventory``, ``columns``; they include
+        path and seq) — ``cur``'s files whose path ``base`` lacks,
+        ``base``'s files whose path ``cur`` lacks, and ``cur``'s rows of
+        the files both hold. Only VISIBLE files take part: each side
+        drops its own write-audit-publish hidden seqs
+        (``_hidden_seqs(snap, None)``), since a staged file keeps its
+        path across stage→publish and the main view tracks visibility.
 
-            base_df = side(base)
-            if base_hidden:
-                # hidden-at-since files are not part of the consumer's
-                # since-view; leaving them in the base side would
-                # suppress their publish
-                base_df = base_df.filter(
-                    ~F.col("seq").isin(*[int(x) for x in base_hidden]))
-            added_df = side(cur).join(
-                base_df.select("path"), "path", "left_anti")
-            added = [ManifestFile.stub(r.path, r.seq or 0)
-                     for r in added_df.collect()]
-        else:
-            base_paths = {f.path for f in base.files
-                          if f.seq not in base_hidden}
-            added = [f for f in cur.files if f.path not in base_paths]
-        return self._read_with_deletes(added, cur, until)
+        Runs on the driver with Arrow (``pc.is_in`` by path), no Spark
+        job and no entry parsed in either regime. Memory ceiling: both
+        snapshots' ``columns`` are held as Arrow arrays (for (path, seq)
+        with ~50-character paths, ~180 B per file of the two snapshots
+        at peak: 27 MB for 100k against 50k files), and only the
+        callers' changed files become Python objects."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        def visible(snap):
+            inv = self.manifest.inventory(snap, list(columns))
+            hid = _hidden_seqs(snap, None)
+            if hid:
+                inv = inv.filter(pc.invert(pc.is_in(
+                    inv["seq"], value_set=pa.array(sorted(hid),
+                                                   pa.int64()))))
+            return inv
+
+        c, b = visible(cur), visible(base)
+        in_base = pc.is_in(c["path"], value_set=b["path"].combine_chunks())
+        in_cur = pc.is_in(b["path"], value_set=c["path"].combine_chunks())
+        return (c.filter(pc.invert(in_base)), b.filter(pc.invert(in_cur)),
+                c.filter(in_base))
 
     def scan_changes(self, since: int,
                      until: int | None = None) -> DataFrame:
@@ -1300,7 +1332,9 @@ class IceTable:
         Mechanics: only files that can differ participate — files
         added since ``since``, files removed, and (when the window
         introduced MoR delete predicates) older common files those
-        predicates can hide rows of. Each side reads under its own
+        predicates can hide rows of; ``_file_diff`` splits them on the
+        driver with no Spark job, and only they become (path, seq)
+        stubs. Each side reads under its own
         snapshot (its predicates, its schema); the ``since`` side is
         aligned forward through the window's renames and widened with
         NULLs for evolved-in columns; inserts = until-side EXCEPT ALL
@@ -1315,31 +1349,13 @@ class IceTable:
         predicate-visible older file joins the diff (the predicate may
         hide rows anywhere — same cost profile as Iceberg's changelog
         over equality deletes)."""
+        import pyarrow.compute as pc
+
         cur = self.manifest.load(until, load_files=False)
         base = self.manifest.load(since, load_files=False)
-
-        def entries(snap) -> dict[str, int]:
-            # (path, seq) pairs only — never full sidecar entries
-            # (read_sidecar_path_seq is the documented ~100 B/file
-            # stub budget). VISIBLE files only: a WAP-staged file
-            # keeps its path across stage→publish, so visibility (not
-            # path presence) is what the diff must compare —
-            # publish_branch surfaces the staged rows as inserts here.
-            hid = _hidden_seqs(snap, None)
-            if snap.files_ref:
-                pairs = self.manifest.read_sidecar_path_seq(
-                    snap.files_ref)
-                return {p: s for p, s in pairs if s not in hid}
-            full = (snap if snap.files
-                    else self.manifest.load(snap.snapshot_id))
-            return {f.path: f.seq for f in full.files
-                    if f.seq not in hid}
-
-        stub = ManifestFile.stub
-        cur_e, base_e = entries(cur), entries(base)
-        added = [stub(p, s) for p, s in cur_e.items() if p not in base_e]
-        removed = [stub(p, s) for p, s in base_e.items()
-                   if p not in cur_e]
+        # VISIBLE files only (a WAP-staged file keeps its path across
+        # stage→publish, so publish_branch surfaces its rows as inserts)
+        added, removed, common = self._file_diff(cur, base)
         # predicates CHANGED in either direction pull predicate-visible
         # older common files into the diff: added preds hide rows
         # (deletes), and preds REMOVED by a rollback make rows
@@ -1355,12 +1371,11 @@ class IceTable:
         common_aff: list[ManifestFile] = []
         if changed_preds:
             mx = max(p["seq"] for p in changed_preds)
-            common_aff = [stub(p, s) for p, s in cur_e.items()
-                          if p in base_e and s < mx]
+            common_aff = _stubs(common.filter(pc.less(common["seq"], mx)))
         side_u = self._read_with_deletes(
-            added + common_aff, cur, cur.snapshot_id)
+            _stubs(added) + common_aff, cur, cur.snapshot_id)
         side_s = self._read_with_deletes(
-            removed + common_aff, base, base.snapshot_id)
+            _stubs(removed) + common_aff, base, base.snapshot_id)
         for r in [r for r in cur.renames if r not in base.renames]:
             side_s = side_s.withColumnRenamed(r["from"], r["to"])
         schema = StructType.fromJson(json.loads(cur.schema_json))
@@ -1503,66 +1518,35 @@ class IceTable:
         partitions, and a WAP publish inside the window shows up as
         adds, matching scan_incremental's row feed — staged-invisible
         files don't count until published; r14 review).
-        Sidecar-backed snapshots diff as DataFrame anti-joins over the
-        two sidecar parquets (nothing materializes on the driver);
-        inline lists are small by definition. Partition values are
-        reported as strings in the sidecar's NORMALIZED encoding
-        (timestamps as epoch micros etc., `_norm_stat`) — both inline
-        and sidecar sides use the same encoding, so a table that
-        crossed the inline→sidecar threshold between the two snapshots
-        still merges each partition into one row. An unpartitioned
-        table reports one NULL-partition row (null-safe join).
+        The split is ``_file_diff`` and the per-partition rollup
+        ``_partition_groups``, both on the driver with Arrow and no Spark
+        job in either manifest regime; the driver holds both snapshots'
+        (path, seq, partition_n, rows, bytes) columns, and only the two
+        small rollups become DataFrames. Partition values are reported
+        as Spark's string cast of the NORMALIZED sidecar encoding
+        (timestamps as epoch micros etc., `_norm_stat`) in both regimes,
+        so a table that crossed the inline→sidecar threshold between
+        the two snapshots still merges each partition into one row. An
+        unpartitioned table reports one NULL-partition row (null-safe
+        join).
         """
         cur = self.manifest.load(until, load_files=False)
         base = self.manifest.load(since, load_files=False)
+        added, removed, _common = self._file_diff(
+            cur, base, ("path", "seq", "partition_n", "rows", "bytes"))
 
-        def side(snap) -> DataFrame:
-            hid = _hidden_seqs(snap, None)
-            if snap.files_ref:
-                mdf = self._sidecar_df(snap.files_ref)
-                if hid:
-                    mdf = mdf.filter(
-                        ~F.col("seq").isin(*[int(x) for x in hid]))
-                return mdf.select(
-                    "path",
-                    F.col("partition_n").cast("string").alias("partition"),
-                    "rows", "bytes",
-                )
-            full = self.manifest.load(snap.snapshot_id)
+        def rollup(inv, suffix: str) -> DataFrame:
+            g = self.spark.createDataFrame(
+                _partition_groups(inv).combine_chunks())
+            return g.select(
+                F.col("partition_n").cast("string").alias("partition"),
+                F.col("count_all").alias(f"files_{suffix}"),
+                F.col("rows_sum").alias(f"rows_{suffix}"),
+                F.col("bytes_sum").alias(f"bytes_{suffix}"))
 
-            def pstr(v):
-                # match Spark's cast-to-string on the sidecar side:
-                # booleans stringify as 'true'/'false', not 'True'
-                n = _norm_stat(v)
-                if isinstance(n, bool):
-                    return "true" if n else "false"
-                return str(n)
-
-            data = [
-                (f.path,
-                 None if f.partition is None else pstr(f.partition),
-                 int(f.rows), int(f.bytes))
-                for f in full.files if f.seq not in hid
-            ]
-            return self.spark.createDataFrame(
-                data, "path string, partition string, rows long, bytes long"
-            )
-
-        cur_df, base_df = side(cur), side(base)
-
-        def rollup(df: DataFrame, suffix: str) -> DataFrame:
-            return df.groupBy("partition").agg(
-                F.count(F.lit(1)).alias(f"files_{suffix}"),
-                F.sum("rows").alias(f"rows_{suffix}"),
-                F.sum("bytes").alias(f"bytes_{suffix}"),
-            )
-
-        added = rollup(
-            cur_df.join(base_df.select("path"), "path", "left_anti"),
-            "added")
-        removed = rollup(
-            base_df.join(cur_df.select("path"), "path", "left_anti"),
-            "removed").withColumnRenamed("partition", "__rp")
+        added = rollup(added, "added")
+        removed = rollup(removed, "removed").withColumnRenamed(
+            "partition", "__rp")
         out = added.join(
             removed, added["partition"].eqNullSafe(removed["__rp"]),
             "full_outer")
@@ -1779,17 +1763,6 @@ class IceTable:
         schema = ds.dataset(path, format="parquet").schema
         return self.spark.read.schema(from_arrow_schema(schema)).parquet(path)
 
-    def _inventory(self, snap: Snapshot, columns: list[str]):
-        """The snapshot's file inventory as Arrow columns of the sidecar
-        encoding, in either manifest regime: a sidecar-backed list is
-        the streamed column-projected sidecar read, an inline list goes
-        through the encoder the sidecar writer uses
-        (``sidecar_encode``). No Spark job, no entry_json parse."""
-        if snap.files_ref:
-            return self.manifest.sidecar_table(snap.files_ref, columns)
-        return sidecar_encode(snap.files, [], with_entries=False
-                              ).select(columns)
-
     def _plan_rewrite(self, snap: Snapshot, mask) -> _Rewrite:
         """The one affected/keep split of every file-rewriting op
         (delete_range, the CoW merges, overwrite_partitions, compact),
@@ -1810,13 +1783,11 @@ class IceTable:
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        inv = self._inventory(
+        inv = self.manifest.inventory(
             snap, ["path", "seq", "partition_n", "key_min_n", "key_max_n"])
         cond = None if mask is None else mask(inv)
-        hit = inv if cond is None else inv.filter(cond)
-        paths = hit["path"].to_pylist()
-        victims = [ManifestFile.stub(p, s)
-                   for p, s in zip(paths, hit["seq"].to_pylist())]
+        victims = _stubs(inv if cond is None else inv.filter(cond))
+        paths = [v.path for v in victims]
         # a NULL verdict keeps the file, as KeptSidecar.prune (not a
         # victim path) does
         kept = inv.slice(0, 0) if cond is None else inv.filter(
@@ -2404,22 +2375,15 @@ class IceTable:
             expected_parent=snap.snapshot_id)
 
     def _snapshot_paths(self, snap: Snapshot) -> set[str]:
-        """File PATHS of one snapshot without materializing entries:
-        sidecar-backed lists read only the ``path`` column (no
-        entry_json parse, no Spark job); inline lists are small."""
-        if snap.files_ref:
-            import pyarrow.parquet as pq
-
-            try:
-                return set(
-                    pq.read_table(self.manifest.sidecar_path(snap.files_ref),
-                                  columns=["path"])["path"].to_pylist()
-                )
-            except FileNotFoundError:
-                # sidecar already gone (interrupted earlier expiry) —
-                # nothing left to account for
-                return set()
-        return {f.path for f in snap.files}
+        """File PATHS of one snapshot: the ``path`` column of its
+        inventory (no entry_json parse, no Spark job)."""
+        try:
+            return set(self.manifest.inventory(snap, ["path"])["path"]
+                       .to_pylist())
+        except FileNotFoundError:
+            # sidecar already gone (interrupted earlier expiry) —
+            # nothing left to account for
+            return set()
 
     def expire_snapshots(
         self, keep_last: int = 1,
@@ -2521,7 +2485,8 @@ class IceTable:
         entry materialized, in either manifest regime."""
         import pyarrow.compute as pc
 
-        groups = _partition_groups(self._inventory(snap, ["partition_n"]))
+        groups = _partition_groups(
+            self.manifest.inventory(snap, ["partition_n"]))
         return pc.max(groups["count_all"]).as_py() or 0
 
     def maintain(self, policy: "MaintenancePolicy") -> dict:
@@ -3165,52 +3130,34 @@ class IceTable:
         """One snapshot's data-file inventory as a DataFrame — path,
         partition value, key min/max, rows, bytes, content hash, seq —
         for maintenance queries (small-file counts, bytes per
-        partition, skew inspection) without touching data files.
-        Sidecar-backed snapshots return a projection of the sidecar
-        scan (entries never materialize on the driver); inline
-        snapshots lift their entries into a local DataFrame. Both
-        paths yield the SAME schema — path, partition, key_min,
-        key_max, rows, bytes, content_hash, seq (stats stringified;
-        the hash is extracted from entry_json JVM-side)."""
+        partition, skew inspection) without touching data files. One
+        ``select`` over the sidecar encoding in either regime: a
+        sidecar-backed snapshot's frame is the distributed sidecar scan
+        (entries never materialize on the driver), an inline list's is
+        its ``sidecar_encode`` table lifted into a local DataFrame.
+        Stats are Spark's string cast of the normalized encoding
+        (epoch micros for timestamps, 'true'/'false' booleans), so a
+        table crossing the inline→sidecar threshold keeps its
+        encoding; the hash is extracted from entry_json JVM-side."""
         snap = self.manifest.load(snapshot_id, load_files=False)
         if snap.files_ref:
-            return self._sidecar_df(snap.files_ref).select(
-                F.col("path"),
-                F.col("partition_n").cast("string").alias("partition"),
-                F.col("key_min_n").cast("string").alias("key_min"),
-                F.col("key_max_n").cast("string").alias("key_max"),
-                F.col("rows"),
-                F.col("bytes"),
-                F.get_json_object("entry_json", "$.content_hash")
-                .alias("content_hash"),
-                F.col("seq"),
-            )
-
-        def pstr(v):
-            # the sidecar branch stringifies the NORMALIZED stat
-            # encoding (epoch micros for timestamps, 'true'/'false'
-            # booleans); the inline branch must match or a table
-            # crossing the inline→sidecar threshold changes its
-            # files_df encoding mid-history (same rule diff_stats
-            # pins; r14 review)
-            if v is None:
-                return None
-            n = _norm_stat(v)
-            if isinstance(n, bool):
-                return "true" if n else "false"
-            return str(n)
-
-        rows = [
-            (f.path, pstr(f.partition), pstr(f.key_min), pstr(f.key_max),
-             f.rows, f.bytes, f.content_hash, f.seq)
-            for f in snap.files
-        ]
-        schema = ("path string, partition string, key_min string, "
-                  "key_max string, rows long, bytes long, "
-                  "content_hash string, seq long")
-        if not rows:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.createDataFrame(rows, schema)
+            src = self._sidecar_df(snap.files_ref)
+        else:
+            # one chunk: createDataFrame can drop rows of a multi-chunk
+            # Arrow table
+            src = self.spark.createDataFrame(
+                sidecar_encode(snap.files, []).combine_chunks())
+        return src.select(
+            F.col("path"),
+            F.col("partition_n").cast("string").alias("partition"),
+            F.col("key_min_n").cast("string").alias("key_min"),
+            F.col("key_max_n").cast("string").alias("key_max"),
+            F.col("rows"),
+            F.col("bytes"),
+            F.get_json_object("entry_json", "$.content_hash")
+            .alias("content_hash"),
+            F.col("seq"),
+        )
 
     def partitions_df(self, snapshot_id: int | None = None) -> DataFrame:
         """Per-partition file inventory rollup (Iceberg's
@@ -3239,17 +3186,18 @@ class IceTable:
         """Commit history as a DataFrame — snapshot id, parent,
         timestamp, operation, file/row counts, batch lineage, staged
         branches — the audit-trail view (Iceberg's history/snapshots
-        metadata tables folded into one). Metadata-only: sidecar file
-        lists are never materialized (files_count rides the snapshot
-        doc)."""
+        metadata tables folded into one). Metadata-only: file and row
+        counts come from each snapshot's ``rows`` inventory column
+        (``Manifest.inventory``), in either regime; no entry is
+        parsed."""
+        import pyarrow.compute as pc
+
         rows = []
         for s in self.manifest.snapshots(load_files=False):
-            n_files = (s.files_count if s.files_ref else len(s.files))
-            n_rows = (None if s.files_ref
-                      else sum(f.rows for f in s.files))
+            n = self.manifest.inventory(s, ["rows"])["rows"]
             rows.append((
                 s.snapshot_id, s.parent_id, s.timestamp_ms, s.operation,
-                n_files, n_rows, s.partition_col, s.key_col,
+                len(n), pc.sum(n).as_py() or 0, s.partition_col, s.key_col,
                 s.source_lineage, s.source_batch_id,
                 json.dumps(s.staged) if s.staged else None,
                 len(s.delete_predicates),
@@ -3264,10 +3212,10 @@ class IceTable:
         return self.spark.createDataFrame(rows, schema)
 
     def file_count(self) -> int:
+        """Live data files of the current snapshot (its inventory's row
+        count; no column is read)."""
         snap = self.manifest.load(load_files=False)
-        if snap.files_ref and snap.files_count is not None:
-            return snap.files_count
-        return len(self.manifest.load().files)
+        return self.manifest.inventory(snap, []).num_rows
 
     def last_committed_batch(self, lineage: str) -> int | None:
         """Max micro-batch id committed for a checkpoint lineage.
@@ -3299,7 +3247,7 @@ class IceTable:
         (``_norm_stat``: dates as epoch days, timestamps as epoch
         micros), as in ``files_df`` and ``diff_stats``."""
         snap = self.manifest.load(load_files=False)
-        groups = _partition_groups(self._inventory(
+        groups = _partition_groups(self.manifest.inventory(
             snap, ["partition_n", "rows", "bytes"])).to_pylist()
         parts = {g["partition_n"]: {"files": g["count_all"],
                                     "rows": g["rows_sum"],

@@ -38,20 +38,21 @@ Metadata-as-data: a snapshot whose file list exceeds
 (``files-<id>.parquet``) instead of inline JSON — one row per file with
 the pruning stats normalized to plainly-orderable types (timestamps →
 epoch micros, dates → epoch days) plus the full entry as a JSON string
-column. Query-time pruning then runs on the DRIVER as one streamed
-pyarrow scan of the sidecar under an Arrow filter
-(``sidecar_keep_filter``) that reads only the stat columns it tests plus
-(path, seq), and only the SURVIVING (path, seq) stubs are materialized
-(``Manifest.read_sidecar_pruned``, called by ice_table._pruned_files):
-no Spark job plans a query, entry_json is never read, and a 1M-file
-table never parses 1M JSON entries to answer a point query. The
-rewrite planner (ice_table ``_plan_rewrite``) reads the same stat
-columns, and encodes an inline list on the fly with the sidecar
-writer's own encoder (``sidecar_encode``). Small tables keep inline
-JSON for debuggability; the pruning verdicts are identical either
-way — a file is dropped only when a stat PROVES no overlap
-(``partition != p``, ``key_max < lo``, ``key_min > hi``), so NULL
-stats and NaN min/max keep it.
+column. Every driver-side reader of a file list — scan, query pruning,
+the change feeds and their diff, the rewrite planner, stats, history —
+reads it through ONE call, ``Manifest.inventory``: an Arrow table of the
+columns it asks for, in the sidecar encoding, in either regime (a
+sidecar is one streamed column-projected pyarrow scan, an inline list
+goes through the sidecar writer's own encoder, ``sidecar_encode``).
+Query-time pruning passes an Arrow filter (``sidecar_keep_filter``)
+that reads only the stat columns it tests, and only the SURVIVING
+(path, seq) rows are materialized: no Spark job plans a query,
+entry_json is never read, and a 1M-file table never parses 1M JSON
+entries to answer a point query. Small tables keep inline JSON for
+debuggability; the pruning verdicts are identical either way — a file
+is dropped only when a stat PROVES no overlap (``partition != p``,
+``key_max < lo``, ``key_min > hi``), so NULL stats and NaN min/max
+keep it.
 """
 
 from __future__ import annotations
@@ -659,8 +660,8 @@ class Manifest:
     def load(self, snapshot_id: int | None = None,
              load_files: bool = True) -> Snapshot:
         """``load_files=False`` skips materializing a sidecar-backed file
-        list (``snap.files`` stays empty) — the pruned-query path reads
-        only the surviving stubs via ``read_sidecar_pruned`` instead."""
+        list (``snap.files`` stays empty) — readers then take the columns
+        they need from ``inventory`` instead."""
         sid = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
         if sid is None:
             raise FileNotFoundError(f"no current snapshot in {self.dir}")
@@ -704,9 +705,9 @@ class Manifest:
                       prune=None):
         """Column-projected sidecar read as an Arrow table, with the
         seq None->0 normalization — the ONE copy of the pattern every
-        read path shares (scan, incremental feed, pruned query, the
-        rewrite planner), so a layout/seq-semantics change cannot drift
-        one from another. Works on both layouts (the driver's single
+        sidecar read shares (``inventory``, the kept-row parse of a
+        commit), so a layout/seq-semantics change cannot drift one from
+        another. Works on both layouts (the driver's single
         file, and the ``part-*`` directory older versions' Spark-written
         commits left, whose ``_SUCCESS``/``.crc`` the dataset's default
         ignore prefixes skip).
@@ -732,18 +733,12 @@ class Manifest:
             tbl = tbl.set_column(i, "seq", pc.fill_null(tbl["seq"], 0))
         return tbl
 
-    def _sidecar_columns(self, files_ref: str, columns: list[str],
-                         prune=None) -> list[list]:
-        """``sidecar_table`` as one Python list per column."""
-        tbl = self.sidecar_table(files_ref, columns, prune)
-        return [tbl[c].to_pylist() for c in columns]
-
     def _read_files_sidecar(self, files_ref: str,
                             prune=None) -> list[ManifestFile]:
-        entries, seqs = self._sidecar_columns(
-            files_ref, ["entry_json", "seq"], prune)
+        tbl = self.sidecar_table(files_ref, ["entry_json", "seq"], prune)
         out = []
-        for s, seq in zip(entries, seqs):
+        for s, seq in zip(tbl["entry_json"].to_pylist(),
+                          tbl["seq"].to_pylist()):
             f = ManifestFile.from_json(json.loads(s))
             # the seq column is authoritative: sidecars that older
             # versions' Spark-written commits left hold entry_json
@@ -752,40 +747,31 @@ class Manifest:
             out.append(f)
         return out
 
-    def snapshot_total_bytes(self, snap: "Snapshot") -> int:
-        """Total data bytes of a snapshot WITHOUT materializing
-        ManifestFile entries: sidecar-backed snapshots column-project
-        the ``bytes`` column (no entry_json JSON parse — a 1M-file
-        recovery path must not deserialize the whole manifest on the
-        driver just to sum one column); inline snapshots sum their
-        (≤ inline_max) entries directly."""
-        if snap.files_ref and not snap.files:
-            (vals,) = self._sidecar_columns(snap.files_ref, ["bytes"])
-            return sum(v or 0 for v in vals)
-        return sum(f.bytes for f in snap.files)
+    def inventory(self, snap: Snapshot, columns: list[str], prune=None):
+        """The file inventory of ``snap`` as an Arrow table of
+        ``columns`` in the sidecar encoding, in either manifest regime —
+        the ONE reader every driver-side consumer of a file list goes
+        through (scan, sidecar pruning, the change feeds, the rewrite
+        planner, stats, history, expiry). A sidecar is the streamed
+        column-projected ``sidecar_table`` read, which ``prune`` (its
+        filter) narrows to the surviving rows; an inline list goes
+        whole through the sidecar writer's encoder (``sidecar_encode``,
+        entry_json only when asked for) — inline pruning is the list
+        pass of ``IceTable._pruned_files``. No Spark job, and no
+        entry_json parsed in either regime."""
+        if snap.files_ref:
+            return self.sidecar_table(snap.files_ref, columns, prune)
+        return sidecar_encode(snap.files, [],
+                              with_entries="entry_json" in columns
+                              ).select(columns)
 
-    def read_sidecar_path_seq(self, files_ref: str) -> list[tuple[str, int]]:
-        """(path, seq) pairs of a sidecar WITHOUT parsing entry_json —
-        for consumers that only need to locate files and scope MoR
-        predicates (full scans, incremental feeds): column-projected
-        pyarrow read, no JSON parse, no Spark job."""
-        paths, seqs = self._sidecar_columns(files_ref, ["path", "seq"])
-        return list(zip(paths, seqs))
+    def snapshot_total_bytes(self, snap: Snapshot) -> int:
+        """Total data bytes of a snapshot from its ``bytes`` column
+        (``inventory``) — a 1M-file recovery path must not deserialize
+        the whole manifest on the driver just to sum one column."""
+        import pyarrow.compute as pc
 
-    def read_sidecar_pruned(self, snap: Snapshot, partition: Any = None,
-                            lo: Any = None, hi: Any = None,
-                            ranges: dict | None = None,
-                            ) -> list[tuple[str, int]]:
-        """(path, seq) pairs of the sidecar entries that survive
-        ``sidecar_keep_filter`` — one streamed pyarrow scan on the
-        driver: no Spark job, only (path, seq) plus the stat columns
-        the filter tests are read (never entry_json), and only the
-        surviving rows are ever materialized."""
-        paths, seqs = self._sidecar_columns(
-            snap.files_ref, ["path", "seq"],
-            prune=lambda schema: sidecar_keep_filter(
-                schema, snap, partition, lo, hi, ranges))
-        return list(zip(paths, seqs))
+        return pc.sum(self.inventory(snap, ["bytes"])["bytes"]).as_py() or 0
 
     def _write_files_sidecar(self, fs: list[ManifestFile],
                              stat_cols: list[str], files_ref: str) -> None:

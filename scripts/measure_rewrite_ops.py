@@ -8,11 +8,15 @@ Parquet sidecar) and scans it once, untimed. Then runs four rounds of
 ``delete_range`` (a key range in one partition), a CoW ``upsert`` into
 one partition, ``overwrite_partitions`` of another and an ``append``
 of rows already in the table (the content-hash dedupe drops its
-files), and one ``compact``. Prints one JSON line: per-op wall times
-(ms), Spark jobs per op (job groups, read after a probe job so the
-listener bus has caught up), and the form of each op's commit
-(``file``: single-file sidecar, ``inline``: JSON; a ``dir`` is the
-directory-shaped sidecar older versions wrote with a Spark job).
+files). Then times the metadata-plane reads, three times each, on the
+same table: ``scan_incremental`` and ``scan_changes`` since the create
+(plan plus ``count()``), ``diff_stats`` since the create
+(``collect()``), ``files_df().count()`` and ``history_df().collect()``;
+and one ``compact``. Prints one JSON line: per-op wall times (ms),
+Spark jobs per op (job groups, read after a probe job so the listener
+bus has caught up), and the form of each commit (``file``: single-file
+sidecar, ``inline``: JSON; a ``dir`` is the directory-shaped sidecar
+older versions wrote with a Spark job).
 
 Usage: python scripts/measure_rewrite_ops.py <checkout> <seed> [out.jsonl]
 
@@ -31,7 +35,7 @@ import sys
 import tempfile
 import time
 
-N_ROWS, N_PARTS, ROWS_PER_FILE, ROUNDS = 48_000, 64, 32, 4
+N_ROWS, N_PARTS, ROWS_PER_FILE, ROUNDS, READS = 48_000, 64, 32, 4, 3
 
 
 def main() -> None:
@@ -61,14 +65,15 @@ def main() -> None:
         path = t.manifest.sidecar_path(s.files_ref)
         return "file" if os.path.isfile(path) else "dir"
 
-    def timed(name, fn) -> None:
+    def timed(name, fn, commits=True) -> None:
         group = f"{name}-{os.urandom(3).hex()}"
         sc.setJobGroup(group, name)
         t0 = time.perf_counter()
         fn()
         ms.setdefault(name, []).append((time.perf_counter() - t0) * 1e3)
         sc.setLocalProperty("spark.jobGroup.id", None)
-        forms[name] = form()
+        if commits:
+            forms[name] = form()
         probe = f"probe-{os.urandom(3).hex()}"
         sc.setJobGroup(probe, "listener-bus probe")
         spark.range(1).collect()
@@ -83,6 +88,7 @@ def main() -> None:
         max_rows_per_file=ROWS_PER_FILE))
     snap = t.manifest.load(load_files=False)
     assert snap.files_ref, "table is not sidecar-backed"
+    since = snap.snapshot_id
     # rows the table already holds, from a partition no op rewrites:
     # the same files each round, so every append after the first has
     # all of them deduped away
@@ -103,6 +109,16 @@ def main() -> None:
             [(N_ROWS + k, (p + N_PARTS // 2) % N_PARTS, "ow")], schema)
         timed("overwrite_partitions", lambda: t.overwrite_partitions(other))
         timed("append", lambda: t.append(dup))
+    reads = {
+        "scan_incremental": lambda: t.scan_incremental(since=since).count(),
+        "scan_changes": lambda: t.scan_changes(since=since).count(),
+        "diff_stats": lambda: t.diff_stats(since=since).collect(),
+        "files_df": lambda: t.files_df().count(),
+        "history_df": lambda: t.history_df().collect(),
+    }
+    for _ in range(READS):
+        for name, fn in reads.items():
+            timed(name, fn, commits=False)
     timed("compact", t.compact)
     rec = {"checkout": repo, "seed": seed, "files": snap.files_count,
            "ms_median": {k: round(statistics.median(v), 1)

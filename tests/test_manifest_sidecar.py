@@ -145,7 +145,7 @@ def test_sidecar_append_never_parses_parent_entries(
     snap = t.manifest.load(load_files=False)
     assert snap.files_ref and snap.files_count == t.file_count()
     assert snap.files == []  # lazy: nothing materialized
-    parent = {p for p, _s in t.manifest.read_sidecar_path_seq(snap.files_ref)}
+    parent = set(t.manifest.inventory(snap, ["path"])["path"].to_pylist())
 
     parsed = _count_parsed(monkeypatch)
     extra = spark.range(2000, 2600).selectExpr(
@@ -154,7 +154,9 @@ def test_sidecar_append_never_parses_parent_entries(
     snap2 = t.manifest.load(load_files=False)
     assert snap2.files_ref and snap2.files_count > snap.files_count
     assert os.path.isfile(t.manifest.sidecar_path(snap2.files_ref))
-    added = {p for p, s in t.manifest.read_sidecar_path_seq(snap2.files_ref)
+    inv2 = t.manifest.inventory(snap2, ["path", "seq"])
+    added = {p for p, s in zip(inv2["path"].to_pylist(),
+                               inv2["seq"].to_pylist())
              if s == snap2.snapshot_id}
     assert added and set(parsed) == added  # only the new files' entries
     assert t.scan().count() == 2600
@@ -307,7 +309,7 @@ def test_stale_sidecar_compact_conflicts_and_cleans(spark, tmp_path,
     t2 = IceTable(spark, root)
     assert t2.scan().count() == 2050  # loser's rows absent
     cur = t2.manifest.load(load_files=False)
-    live = {p for p, _s in t2.manifest.read_sidecar_path_seq(cur.files_ref)}
+    live = set(t2.manifest.inventory(cur, ["path"])["path"].to_pylist())
     on_disk = {
         os.path.relpath(os.path.join(dp, n), root)
         for dp, _d, ns in os.walk(os.path.join(root, "data"))
@@ -466,7 +468,9 @@ def test_files_df_encoding_stable_across_inline_sidecar(spark, tmp_path,
     NORMALIZED sidecar encoding on BOTH branches — a table crossing the
     inline→sidecar threshold must not change its files_df encoding
     mid-history (timestamp partitions: epoch micros, not str(datetime);
-    the rule diff_stats already pins)."""
+    the rule diff_stats already pins). Second input: a double key of
+    1e7 and above, which Spark renders '1.0E7' and Python's str()
+    '10000000.0'."""
     import datetime
 
     root = str(tmp_path / "t")
@@ -489,6 +493,20 @@ def test_files_df_encoding_stable_across_inline_sidecar(spark, tmp_path,
     # str(datetime) ('2024-01-01 00:00:00')
     assert all(p.lstrip("-").isdigit() for p in sidecar_parts)
     assert all(p.lstrip("-").isdigit() for p in inline_parts)
+
+    monkeypatch.setattr(Manifest, "inline_max", 512)
+    dbl = spark.createDataFrame([(1e7 + i, i % 2) for i in range(6)],
+                                "k double, p int")
+    t2 = IceTable.create(spark, str(tmp_path / "dbl"), dbl,
+                         partition_col="p", key_col="k",
+                         max_rows_per_file=1)
+    inline_keys = {(r.key_min, r.key_max) for r in t2.files_df().collect()}
+    monkeypatch.setattr(Manifest, "inline_max", 1)
+    t2.append(spark.createDataFrame([(2e7, 0)], "k double, p int"))
+    assert t2.manifest.load(load_files=False).files_ref
+    sidecar_keys = {(r.key_min, r.key_max) for r in t2.files_df().collect()}
+    assert ("1.0E7", "1.0E7") in inline_keys
+    assert inline_keys <= sidecar_keys
 
 
 # ---------------------------------------------------------------------------
@@ -1005,3 +1023,209 @@ def test_stats_partition_keys_normalized_in_both_regimes(spark, tmp_path,
     assert set(s["partitions"]) == {d0, d0 + 1}
     assert [s["partitions"][d]["rows"] for d in (d0, d0 + 1)] == [20, 20]
     assert s["files"] == t.file_count() and s["rows"] == 40
+
+
+# ---------------------------------------------------------------------------
+# the read and metadata plane: one inventory (Manifest.inventory) and one
+# driver-side file diff (IceTable._file_diff) in both manifest regimes
+# ---------------------------------------------------------------------------
+
+def _sidecar_files(t) -> set[str]:
+    return {n for n in os.listdir(t.manifest.dir) if n.startswith("files-")}
+
+
+def test_dedupe_only_append_shares_parent_sidecar(spark, tmp_path,
+                                                  small_inline_max):
+    """An append whose every file is a content-hash duplicate shares the
+    parent's sidecar by reference instead of copying it; a stale one
+    that loses the race removes no sidecar it did not write (here the
+    winner's, shared with the stale parent by a MoR delete), and expiry
+    afterwards keeps every row."""
+    from iceberg_core_spark.table.manifest import CommitConflictError
+
+    t = _mk_table(spark, str(tmp_path / "t"))
+    extra = spark.range(2000, 2100).selectExpr(
+        "id", "id % 4 as part", "cast(id as string) as payload")
+    t.append(extra)
+    parent = t.manifest.load(load_files=False)
+    before = _sidecar_files(t)
+    snap = t.append(extra, dedupe_identical_files=True)
+    assert snap.snapshot_id == parent.snapshot_id + 1
+    assert (snap.files_ref, snap.files_count) == (parent.files_ref,
+                                                  parent.files_count)
+    assert _sidecar_files(t) == before
+    assert t.scan().count() == 2100
+
+    # a winner that shares the same sidecar (MoR delete), then a stale
+    # fully-deduped append based on the snapshot before it
+    stale = t.manifest.load(load_files=False)
+    winner = t.delete_where("id = 0", mode="mor")
+    assert winner.files_ref == stale.files_ref
+    commit = Manifest.commit
+    lost = []
+
+    def counting(self, snapshot):
+        try:
+            return commit(self, snapshot)
+        except CommitConflictError:
+            lost.append(snapshot.files_ref)
+            raise
+
+    mp = pytest.MonkeyPatch()
+    try:
+        mp.setattr(Manifest, "commit", counting)
+        rebased = t._write_commit(
+            extra, "append", stale.partition_col, stale.key_col, 1_000_000,
+            expected_parent=stale.snapshot_id, dedupe_identical_files=True)
+    finally:
+        mp.undo()
+    # the first attempt shared the stale parent's sidecar, lost, and
+    # rebased onto the winner
+    assert lost == [stale.files_ref]
+    assert rebased.snapshot_id == winner.snapshot_id + 1
+    assert rebased.files_ref == winner.files_ref
+    assert os.path.exists(t.manifest.sidecar_path(winner.files_ref))
+    assert _sidecar_files(t) == before
+    assert t.scan().count() == 2099
+    t.expire_snapshots(keep_last=1)
+    assert t.scan().count() == 2099
+    assert sorted(r.id for r in t.scan().collect()) == list(range(1, 2100))
+
+
+def test_history_df_counts_rows_in_both_regimes(spark, tmp_path, regime):
+    """history_df reports each snapshot's file and row counts from its
+    inventory in both regimes (a sidecar snapshot's n_rows is not
+    NULL)."""
+    t = _mk_table(spark, str(tmp_path / "t"), n=400, files=4)
+    t.append(spark.range(400, 450).selectExpr(
+        "id", "id % 4 as part", "cast(id as string) as payload"))
+    t.delete_where("part = 1", mode="mor")
+    snaps = t.manifest.snapshots(load_files=False)
+    assert all(bool(s.files_ref) == (regime == "spark-sidecar")
+               for s in snaps)
+    got = [(r.snapshot_id, r.n_files, r.n_rows)
+           for r in t.history_df().orderBy("snapshot_id").collect()]
+    full = [t.manifest.load(s.snapshot_id).files for s in snaps]
+    assert got == [(s.snapshot_id, len(fs), sum(f.rows for f in fs))
+                   for s, fs in zip(snaps, full)]
+    assert [n for _s, _f, n in got] == [400, 450, 450]
+
+
+def _bucket_table(spark, root):
+    return IceTable.create(
+        spark, root, spark.range(0, 400).selectExpr("id AS k", "id * 2 AS a"),
+        key_col="k", bucket_by=("k", 4), max_rows_per_file=50)
+
+
+@pytest.mark.parametrize("op", ["scan_incremental", "scan_changes",
+                                "diff_stats", "file_count", "history_df",
+                                "as_bucketed_table"])
+def test_metadata_plane_never_materializes_sidecar_entries(
+        spark, tmp_path, small_inline_max, monkeypatch, op):
+    """On a sidecar-backed table the change feeds, their per-partition
+    report, file_count, history_df and as_bucketed_table parse no
+    sidecar entry on the driver, and each still answers right."""
+    if op == "as_bucketed_table":
+        t = _bucket_table(spark, str(tmp_path / "b"))
+        assert t.manifest.load(load_files=False).files_ref
+        _forbid_entry_materialization(monkeypatch)
+        try:
+            t.as_bucketed_table("bkt_tripwire")
+            assert spark.table("bkt_tripwire").count() == 400
+        finally:
+            spark.sql("DROP TABLE IF EXISTS `bkt_tripwire`")
+        return
+    t = _mk_table(spark, str(tmp_path / "t"))
+    s0 = t.manifest.load(load_files=False).snapshot_id
+    t.append(spark.range(2000, 2300).selectExpr(
+        "id", "id % 4 as part", "cast(id as string) as payload"))
+    assert t.manifest.load(load_files=False).files_ref
+    _forbid_entry_materialization(monkeypatch)
+    if op == "scan_incremental":
+        got = sorted(r.id for r in t.scan_incremental(since=s0).collect())
+        assert got == list(range(2000, 2300))
+    elif op == "scan_changes":
+        rows = t.scan_changes(since=s0).collect()
+        assert {r._change_type for r in rows} == {"insert"}
+        assert sorted(r.id for r in rows) == list(range(2000, 2300))
+    elif op == "diff_stats":
+        d = {r.partition: (r.rows_added, r.rows_removed)
+             for r in t.diff_stats(since=s0).collect()}
+        assert d == {str(p): (75, 0) for p in range(4)}
+    elif op == "file_count":
+        assert t.file_count() == t.manifest.load(
+            load_files=False).files_count
+    else:
+        assert [r.n_rows for r in t.history_df().orderBy(
+            "snapshot_id").collect()] == [2000, 2300]
+
+
+def test_change_feed_planning_starts_no_spark_job(spark, tmp_path,
+                                                 small_inline_max):
+    """Planning scan_incremental, scan_changes and diff_stats on a
+    sidecar-backed table starts no Spark job: the file diff runs on the
+    driver, and the one job is the caller's action."""
+    t = _mk_table(spark, str(tmp_path / "t"))
+    s0 = t.manifest.load(load_files=False).snapshot_id
+    t.append(spark.range(2000, 2100).selectExpr(
+        "id", "id % 4 as part", "cast(id as string) as payload"))
+    t.delete_where("id = 2001", mode="mor")
+    assert t.manifest.load(load_files=False).files_ref
+    for plan, check in [
+        (lambda: t.scan_incremental(since=s0),
+         lambda df: sorted(r.id for r in df.collect()) == [
+             i for i in range(2000, 2100) if i != 2001]),
+        (lambda: t.scan_changes(since=s0),
+         lambda df: sorted((r._change_type, r.id) for r in df.collect()) == [
+             ("insert", i) for i in range(2000, 2100) if i != 2001]),
+        (lambda: t.diff_stats(since=s0),
+         lambda df: sum(r.rows_added for r in df.collect()) == 100),
+    ]:
+        jobs, df = _jobs_started(spark, plan)
+        assert jobs == []
+        assert check(df)
+
+
+def test_metadata_plane_same_answers_in_both_regimes(spark, tmp_path,
+                                                     monkeypatch):
+    """files_df, partitions_df, diff_stats, history_df, scan_incremental
+    and scan_changes answer the same on the same data committed inline
+    and as sidecars (a boolean partition and a double key of 1e7 and
+    above, the values whose string forms drifted between the regimes)."""
+    def batch(a, b):
+        return spark.range(a, b).selectExpr(
+            "cast(id as double) + 1e7 as k", "id % 2 = 0 as flag",
+            "cast(id as string) as payload")
+
+    def build(name):
+        t = IceTable.create(spark, str(tmp_path / name), batch(0, 40),
+                            partition_col="flag", key_col="k",
+                            max_rows_per_file=10)
+        t.append(batch(40, 60), max_rows_per_file=10)
+        t.delete_where("k = 10000003.0", mode="mor")
+        return t
+
+    inline = build("inline")
+    monkeypatch.setattr(Manifest, "inline_max", 0)
+    sidecar = build("sidecar")
+    assert not inline.manifest.load(load_files=False).files_ref
+    assert sidecar.manifest.load(load_files=False).files_ref
+
+    def answers(t):
+        def rows(df, drop=()):
+            return sorted(tuple(v for k, v in r.asDict().items()
+                                if k not in drop) for r in df.collect())
+        return {
+            "files": rows(t.files_df(), ("path",)),
+            "partitions": rows(t.partitions_df()),
+            "diff": rows(t.diff_stats(since=0)),
+            "history": rows(t.history_df(), ("timestamp_ms",)),
+            "incremental": rows(t.scan_incremental(since=0)),
+            "changes": rows(t.scan_changes(since=0)),
+        }
+
+    a, b = answers(inline), answers(sidecar)
+    for k in a:
+        assert a[k] == b[k], k
+    assert {r[0] for r in a["partitions"]} == {"true", "false"}
+    assert ("1.0E7" in {r[1] for r in a["files"]})

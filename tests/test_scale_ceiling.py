@@ -89,7 +89,8 @@ def test_sidecar_stub_budget_100k(big_manifest_table):
     assert snap.files_count == N_FILES
 
     tracemalloc.start()
-    pairs = t.manifest.read_sidecar_path_seq(snap.files_ref)
+    inv = t.manifest.inventory(snap, ["path", "seq"])
+    pairs = zip(inv["path"].to_pylist(), inv["seq"].to_pylist())
     stubs = [
         ManifestFile(path=p, partition=None, key_min=None, key_max=None,
                      rows=0, bytes=0, content_hash="", seq=s)
@@ -105,9 +106,9 @@ def test_sidecar_stub_budget_100k(big_manifest_table):
 
 
 def test_incremental_planning_bounded_100k(big_manifest_table):
-    """scan_incremental over a 100k-file sidecar: the anti-join runs as
-    a Spark job and only the ADDED files' (path, seq) stubs reach the
-    driver. Planning (feed construction + file index) must finish in
+    """scan_incremental over a 100k-file sidecar: the file diff runs on
+    the driver over the two inventories' Arrow (path, seq) columns and
+    only the ADDED files' (path, seq) stubs become Python objects. Planning (feed construction + file index) must finish in
     seconds and stay within the stub budget — it must NOT parse 100k
     entry_json documents."""
     t, base = big_manifest_table

@@ -189,8 +189,9 @@ def test_scan_incremental_reads_only_new_rows(spark, tmp_table_dir):
 
 
 def test_scan_incremental_through_sidecars(spark, tmp_path, monkeypatch):
-    """The set difference runs as a sidecar anti-join when either
-    snapshot is sidecar-backed."""
+    """The feed is the same driver-side file diff when either snapshot
+    is sidecar-backed: the sidecar inventories are read as Arrow
+    columns."""
     from iceberg_core_spark.table.manifest import Manifest
 
     monkeypatch.setattr(Manifest, "inline_max", 2)

@@ -523,9 +523,9 @@ def test_scan_incremental_surfaces_wap_publish(spark, tmp_path):
 
 def test_scan_incremental_wap_publish_sidecar_backed(spark, tmp_path,
                                                      monkeypatch):
-    """Same WAP-publish visibility property on the SIDECAR-backed
-    diff path (DataFrame anti-join over the files parquets), which is
-    separate code from the inline list diff."""
+    """Same WAP-publish visibility property when both snapshots are
+    SIDECAR-backed: the one file diff reads the sidecar inventories
+    and drops each side's staged seqs there too."""
     from iceberg_core_spark.table.manifest import Manifest
 
     monkeypatch.setattr(Manifest, "inline_max", 2)
