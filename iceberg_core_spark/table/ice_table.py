@@ -44,8 +44,9 @@ Scale design:
   (path, seq) stubs become Python objects; a sidecar's carried-over
   entries are never parsed (the commit copies them as stored).
 - The read and metadata plane reads the same inventory
-  (``Manifest.inventory``) in either regime: scan and the sidecar
-  query pruning take (path, seq) stubs of it, the change feeds
+  (``Manifest.inventory``) in either regime: scan takes (path, seq)
+  stubs of it (sidecar query pruning reads the same columns through
+  an Arrow filter), the change feeds
   (scan_incremental, scan_changes, diff_stats) split two snapshots'
   inventories in one driver-side diff (``_file_diff``), and
   ``stats()``, the maintain probe, ``history_df`` and expiry aggregate
@@ -816,9 +817,7 @@ class IceTable:
         the new entries (``Manifest.write_kept_sidecar``), and a list
         base is spilled by ``Manifest.commit``; a ``KeptSidecar`` is
         parsed only when the commit lands inline (at most
-        ``inline_max`` entries). A whole ``KeptSidecar`` with nothing
-        new (a fully-deduped append) is shared by reference, not
-        copied; a lost race removes only a sidecar the attempt wrote.
+        ``inline_max`` entries).
 
         Every attempt is the ``child()`` of the snapshot it lands on —
         ``based_on`` first, then each winner — with ``fields``
@@ -864,19 +863,11 @@ class IceTable:
                 new = [f for f in new if f.content_hash not in dups]
             for f in new:
                 f.seq = sid  # data sequence number = adding snapshot
-            snap.files_ref = snap.files_count = wrote = None
-            if (isinstance(carried, KeptSidecar) and not new
-                    and not carried.drop):
-                # the file set IS the carried sidecar (an append whose
-                # every file was a duplicate): share it by reference,
-                # as metadata-only commits do
-                snap.files_ref, snap.files_count = (carried.files_ref,
-                                                    carried.n)
-                snap.files = []
-            elif (isinstance(carried, KeptSidecar)
+            snap.files_ref = snap.files_count = None
+            if (isinstance(carried, KeptSidecar)
                     and len(carried) + len(new) > man.inline_max):
-                snap.files_ref = wrote = (f"files-{sid}-"
-                                          f"{os.urandom(4).hex()}.parquet")
+                snap.files_ref = (f"files-{sid}-"
+                                  f"{os.urandom(4).hex()}.parquet")
                 snap.files_count = man.write_kept_sidecar(
                     carried, new,
                     sidecar_stat_cols(snap.stat_cols, snap.renames),
@@ -892,8 +883,8 @@ class IceTable:
                 man.commit(snap)
                 return snap
             except CommitConflictError:
-                if wrote:  # never a sidecar this attempt shares
-                    man.remove_sidecar(wrote)
+                if snap.files_ref and not snap.files:
+                    man.remove_sidecar(snap.files_ref)
                 if operation in _REBASES:
                     winner = man.load(load_files=False)
                     # an overwrite drops every file, so it cannot land
@@ -999,7 +990,7 @@ class IceTable:
         in either regime. Inline-JSON snapshots prune with a list pass
         over the entries. Sidecar-backed snapshots (file count >
         Manifest.inline_max) prune with one streamed pyarrow scan of
-        the files parquet (``Manifest.inventory``) under an Arrow
+        the files parquet (``Manifest.sidecar_table``) under an Arrow
         filter (manifest.sidecar_keep_filter) that projects only
         (path, seq):
         entry_json is never read and only the surviving stubs are
@@ -1060,8 +1051,9 @@ class IceTable:
         # ~100 MB of driver heap. Queries whose predicate prunes
         # poorly on a huge table should raise driver memory or tighten
         # the predicate — the pruned-out majority never materializes.
-        return _stubs(self.manifest.inventory(
-            snap, ["path", "seq"], prune=lambda schema: sidecar_keep_filter(
+        return _stubs(self.manifest.sidecar_table(
+            snap.files_ref, ["path", "seq"],
+            prune=lambda schema: sidecar_keep_filter(
                 schema, snap, partition, lo, hi, ranges)))
 
     def range_scan(self, ranges: dict[str, tuple[Any, Any]],
@@ -1295,9 +1287,10 @@ class IceTable:
         Runs on the driver with Arrow (``pc.is_in`` by path), no Spark
         job and no entry parsed in either regime. Memory ceiling: both
         snapshots' ``columns`` are held as Arrow arrays (for (path, seq)
-        with ~50-character paths, ~180 B per file of the two snapshots
-        at peak: 27 MB for 100k against 50k files), and only the
-        callers' changed files become Python objects."""
+        with ~50-character paths, ~170 B per file of the two snapshots
+        at peak: 25 MB for 100k against 50k files,
+        scripts/measure_file_diff_memory.py), and only the callers'
+        changed files become Python objects."""
         import pyarrow as pa
         import pyarrow.compute as pc
 

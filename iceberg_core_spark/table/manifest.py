@@ -38,14 +38,15 @@ Metadata-as-data: a snapshot whose file list exceeds
 (``files-<id>.parquet``) instead of inline JSON — one row per file with
 the pruning stats normalized to plainly-orderable types (timestamps →
 epoch micros, dates → epoch days) plus the full entry as a JSON string
-column. Every driver-side reader of a file list — scan, query pruning,
-the change feeds and their diff, the rewrite planner, stats, history —
+column. Every driver-side reader of a whole file list — scan, the
+change feeds and their diff, the rewrite planner, stats, history —
 reads it through ONE call, ``Manifest.inventory``: an Arrow table of the
 columns it asks for, in the sidecar encoding, in either regime (a
 sidecar is one streamed column-projected pyarrow scan, an inline list
 goes through the sidecar writer's own encoder, ``sidecar_encode``).
-Query-time pruning passes an Arrow filter (``sidecar_keep_filter``)
-that reads only the stat columns it tests, and only the SURVIVING
+Query-time pruning of a sidecar reads it with an Arrow filter
+(``sidecar_keep_filter``, through ``Manifest.sidecar_table``) that
+reads only the stat columns it tests, and only the SURVIVING
 (path, seq) rows are materialized: no Spark job plans a query,
 entry_json is never read, and a 1M-file table never parses 1M JSON
 entries to answer a point query. Small tables keep inline JSON for
@@ -705,12 +706,12 @@ class Manifest:
                       prune=None):
         """Column-projected sidecar read as an Arrow table, with the
         seq None->0 normalization — the ONE copy of the pattern every
-        sidecar read shares (``inventory``, the kept-row parse of a
-        commit), so a layout/seq-semantics change cannot drift one from
-        another. Works on both layouts (the driver's single
-        file, and the ``part-*`` directory older versions' Spark-written
-        commits left, whose ``_SUCCESS``/``.crc`` the dataset's default
-        ignore prefixes skip).
+        sidecar read shares (``inventory``, query pruning, the kept-row
+        parse of a commit), so a layout/seq-semantics change cannot
+        drift one from another. Works on both layouts (the driver's
+        single file, and the ``part-*`` directory older versions'
+        Spark-written commits left, whose ``_SUCCESS``/``.crc`` the
+        dataset's default ignore prefixes skip).
 
         ``prune(schema) -> (filter, filter_columns)`` keeps only the
         rows the Arrow filter passes; only they are ever materialized.
@@ -747,20 +748,20 @@ class Manifest:
             out.append(f)
         return out
 
-    def inventory(self, snap: Snapshot, columns: list[str], prune=None):
-        """The file inventory of ``snap`` as an Arrow table of
+    def inventory(self, snap: Snapshot, columns: list[str]):
+        """The whole file inventory of ``snap`` as an Arrow table of
         ``columns`` in the sidecar encoding, in either manifest regime —
-        the ONE reader every driver-side consumer of a file list goes
-        through (scan, sidecar pruning, the change feeds, the rewrite
-        planner, stats, history, expiry). A sidecar is the streamed
-        column-projected ``sidecar_table`` read, which ``prune`` (its
-        filter) narrows to the surviving rows; an inline list goes
-        whole through the sidecar writer's encoder (``sidecar_encode``,
-        entry_json only when asked for) — inline pruning is the list
-        pass of ``IceTable._pruned_files``. No Spark job, and no
-        entry_json parsed in either regime."""
+        the ONE reader every driver-side consumer of a full file list
+        goes through (scan, the change feeds, the rewrite planner,
+        stats, history, expiry). A sidecar is the streamed
+        column-projected ``sidecar_table`` read; an inline list goes
+        through the sidecar writer's encoder (``sidecar_encode``,
+        entry_json only when asked for). Query pruning is not an
+        inventory read: ``IceTable._pruned_files`` filters an inline
+        list in Python and a sidecar with ``sidecar_table``'s prune. No
+        Spark job, and no entry_json parsed in either regime."""
         if snap.files_ref:
-            return self.sidecar_table(snap.files_ref, columns, prune)
+            return self.sidecar_table(snap.files_ref, columns)
         return sidecar_encode(snap.files, [],
                               with_entries="entry_json" in columns
                               ).select(columns)

@@ -1030,68 +1030,6 @@ def test_stats_partition_keys_normalized_in_both_regimes(spark, tmp_path,
 # driver-side file diff (IceTable._file_diff) in both manifest regimes
 # ---------------------------------------------------------------------------
 
-def _sidecar_files(t) -> set[str]:
-    return {n for n in os.listdir(t.manifest.dir) if n.startswith("files-")}
-
-
-def test_dedupe_only_append_shares_parent_sidecar(spark, tmp_path,
-                                                  small_inline_max):
-    """An append whose every file is a content-hash duplicate shares the
-    parent's sidecar by reference instead of copying it; a stale one
-    that loses the race removes no sidecar it did not write (here the
-    winner's, shared with the stale parent by a MoR delete), and expiry
-    afterwards keeps every row."""
-    from iceberg_core_spark.table.manifest import CommitConflictError
-
-    t = _mk_table(spark, str(tmp_path / "t"))
-    extra = spark.range(2000, 2100).selectExpr(
-        "id", "id % 4 as part", "cast(id as string) as payload")
-    t.append(extra)
-    parent = t.manifest.load(load_files=False)
-    before = _sidecar_files(t)
-    snap = t.append(extra, dedupe_identical_files=True)
-    assert snap.snapshot_id == parent.snapshot_id + 1
-    assert (snap.files_ref, snap.files_count) == (parent.files_ref,
-                                                  parent.files_count)
-    assert _sidecar_files(t) == before
-    assert t.scan().count() == 2100
-
-    # a winner that shares the same sidecar (MoR delete), then a stale
-    # fully-deduped append based on the snapshot before it
-    stale = t.manifest.load(load_files=False)
-    winner = t.delete_where("id = 0", mode="mor")
-    assert winner.files_ref == stale.files_ref
-    commit = Manifest.commit
-    lost = []
-
-    def counting(self, snapshot):
-        try:
-            return commit(self, snapshot)
-        except CommitConflictError:
-            lost.append(snapshot.files_ref)
-            raise
-
-    mp = pytest.MonkeyPatch()
-    try:
-        mp.setattr(Manifest, "commit", counting)
-        rebased = t._write_commit(
-            extra, "append", stale.partition_col, stale.key_col, 1_000_000,
-            expected_parent=stale.snapshot_id, dedupe_identical_files=True)
-    finally:
-        mp.undo()
-    # the first attempt shared the stale parent's sidecar, lost, and
-    # rebased onto the winner
-    assert lost == [stale.files_ref]
-    assert rebased.snapshot_id == winner.snapshot_id + 1
-    assert rebased.files_ref == winner.files_ref
-    assert os.path.exists(t.manifest.sidecar_path(winner.files_ref))
-    assert _sidecar_files(t) == before
-    assert t.scan().count() == 2099
-    t.expire_snapshots(keep_last=1)
-    assert t.scan().count() == 2099
-    assert sorted(r.id for r in t.scan().collect()) == list(range(1, 2100))
-
-
 def test_history_df_counts_rows_in_both_regimes(spark, tmp_path, regime):
     """history_df reports each snapshot's file and row counts from its
     inventory in both regimes (a sidecar snapshot's n_rows is not

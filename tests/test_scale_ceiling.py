@@ -11,11 +11,13 @@ parquet file keep the table metadata-only) is planned end-to-end and
 the stub materialization must stay inside a fixed time/memory budget.
 """
 
+import contextlib
 import json
 import os
 import time
 import tracemalloc
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -25,6 +27,9 @@ from iceberg_core_spark.table.manifest import Manifest, ManifestFile, Snapshot
 
 N_FILES = 100_000
 N_BASE = 100  # entries already present in the `since` snapshot
+# IceTable._file_diff's documented ceiling, ~180 B per file of the two
+# snapshots, with headroom for the sidecar reads' decode buffers
+ARROW_DIFF_BUDGET = 400 * (N_FILES + N_BASE)
 
 
 @pytest.fixture(scope="module")
@@ -81,6 +86,24 @@ def big_manifest_table(spark, tmp_path_factory):
     return IceTable(spark, root), prev.snapshot_id + 1
 
 
+@contextlib.contextmanager
+def arrow_peak():
+    """Upper bound on the growth of Arrow's memory pool inside the
+    block (Arrow buffers sit outside tracemalloc's view): the block
+    allocates from the system-allocator pool, a process-wide static
+    pool the code never uses by default, and reports its high-water
+    mark minus the bytes it held on entry."""
+    pool, old = pa.system_memory_pool(), pa.default_memory_pool()
+    held = pool.bytes_allocated()
+    out = {}
+    pa.set_memory_pool(pool)
+    try:
+        yield out
+    finally:
+        pa.set_memory_pool(old)
+        out["peak"] = pool.max_memory() - held
+
+
 def test_sidecar_stub_budget_100k(big_manifest_table):
     """Reconstructing every stub of the 100k sidecar must cost ~100
     bytes/file Python-side — the documented planning budget."""
@@ -108,19 +131,24 @@ def test_sidecar_stub_budget_100k(big_manifest_table):
 def test_incremental_planning_bounded_100k(big_manifest_table):
     """scan_incremental over a 100k-file sidecar: the file diff runs on
     the driver over the two inventories' Arrow (path, seq) columns and
-    only the ADDED files' (path, seq) stubs become Python objects. Planning (feed construction + file index) must finish in
-    seconds and stay within the stub budget — it must NOT parse 100k
+    only the ADDED files' (path, seq) stubs become Python objects.
+    Planning (feed construction + file index) must finish in seconds
+    and stay within the stub budget on the Python side and within the
+    diff's documented ceiling in Arrow's pool — it must NOT parse 100k
     entry_json documents."""
     t, base = big_manifest_table
     t0 = time.monotonic()
     tracemalloc.start()
-    feed = t.scan_incremental(since=base)
+    with arrow_peak() as arrow:
+        feed = t.scan_incremental(since=base)
     n_inputs = len(feed.inputFiles())
     _cur, peak = tracemalloc.get_traced_memory()
     tracemalloc.stop()
     elapsed = time.monotonic() - t0
     assert n_inputs == N_FILES - N_BASE
     assert peak < 100 * 1024 * 1024, f"planning peak {peak/1e6:.0f} MB"
+    assert arrow["peak"] < ARROW_DIFF_BUDGET, \
+        f"Arrow planning peak {arrow['peak']/1e6:.0f} MB"
     # generous wall budget: the claim is "not O(100k JSON parses)"
     # (minutes), not a latency SLO — host-elevation windows (BASELINE.md
     # r5 addendum) breached a 120 s budget once with the plan unchanged
@@ -136,14 +164,37 @@ def test_changelog_planning_bounded_100k(big_manifest_table):
     t, base = big_manifest_table
     t0 = time.monotonic()
     tracemalloc.start()
-    ch = t.scan_changes(since=base)
+    with arrow_peak() as arrow:
+        ch = t.scan_changes(since=base)
     n_inputs = len(ch.inputFiles())
     _cur, peak = tracemalloc.get_traced_memory()
     tracemalloc.stop()
     elapsed = time.monotonic() - t0
     assert n_inputs == N_FILES - N_BASE
     assert peak < 100 * 1024 * 1024, f"planning peak {peak/1e6:.0f} MB"
+    assert arrow["peak"] < ARROW_DIFF_BUDGET, \
+        f"Arrow planning peak {arrow['peak']/1e6:.0f} MB"
     assert elapsed < 300, f"planning took {elapsed:.0f}s"
+
+
+def test_diff_stats_planning_bounded_100k(big_manifest_table):
+    """diff_stats over a 100k-file sidecar window: the diff and the
+    per-partition rollup run on the driver over Arrow columns (path,
+    seq, partition_n, rows, bytes) inside the diff's documented ceiling,
+    and only the two small rollups become DataFrames."""
+    t, base = big_manifest_table
+    tracemalloc.start()
+    with arrow_peak() as arrow:
+        d = t.diff_stats(since=base)
+    _cur, peak = tracemalloc.get_traced_memory()
+    tracemalloc.stop()
+    rows = d.collect()
+    assert [(r.partition, r.files_added, r.rows_added, r.files_removed)
+            for r in rows] == [(None, N_FILES - N_BASE,
+                                5 * (N_FILES - N_BASE), 0)]
+    assert peak < 100 * 1024 * 1024, f"planning peak {peak/1e6:.0f} MB"
+    assert arrow["peak"] < ARROW_DIFF_BUDGET, \
+        f"Arrow planning peak {arrow['peak']/1e6:.0f} MB"
 
 
 def test_pruned_query_survivor_stubs_100k(big_manifest_table):
